@@ -8,9 +8,19 @@ customer, supplier, part, orders, lineitem, events, documents,
 embeddings), one `<name>.parquet` file each, with the column names and
 physical types the queries expect: timestamps are microsecond
 TIMESTAMP without UTC adjustment, embeddings are 64 float32s. Row counts
-follow a TPC-H-style scale factor. The tables depend only on the fixed
-DATA_SEED and the scale, never on a benchmark run's seed: the run seed
-orders the calls, so pinned result fingerprints stay valid for every
+follow a TPC-H-style scale factor.
+
+It also lands `events` as daily batches for the ingest steps:
+`landing/batches/<day>.parquet` holds one day's events,
+`landing/redo/<day>.parquet` a corrected re-delivery of that day (every
+seventh event dropped, values raised by a tenth), and `landing/days.tsv`
+lists each day with its first and last event_id (ids follow ts, so a
+day's ids are contiguous). Here ts is a UTC-adjusted timestamp, as a
+Spark job would have written it.
+
+Everything depends only on the fixed DATA_SEED and the scale, never on a
+benchmark run's seed: the run seed orders the calls and picks which
+batches are ingested, so pinned result fingerprints stay valid for every
 run.
 """
 import os
@@ -125,12 +135,37 @@ def tables(scale):
         "label": pa.array(rng.integers(0, 10, n_emb), i32)})
 
 
+def land(events, out):
+    """Write one batch and one re-delivery per day of `events`."""
+    ts = events.column("ts").cast(pa.timestamp("us", tz="UTC"))
+    day = ts.cast(pa.date32())
+    t = events.set_column(events.schema.get_field_index("ts"), "ts", ts).append_column("day", day)
+    ids = t.column("event_id").to_numpy()
+    days = day.to_numpy()
+    for sub in ("batches", "redo"):
+        os.makedirs(os.path.join(out, "landing", sub))
+    rows = []
+    for d in np.unique(days):
+        sel = np.flatnonzero(days == d)
+        batch = t.take(sel)
+        keep = batch.filter(pa.array(ids[sel] % 7 != 0))
+        redo = keep.set_column(keep.schema.get_field_index("value"), "value",
+                               pa.array(np.round(keep.column("value").to_numpy() * 1.1, 2)))
+        pq.write_table(batch, os.path.join(out, "landing", "batches", f"{d}.parquet"))
+        pq.write_table(redo, os.path.join(out, "landing", "redo", f"{d}.parquet"))
+        rows.append(f"{d}\t{ids[sel].min()}\t{ids[sel].max()}\n")
+    with open(os.path.join(out, "landing", "days.tsv"), "w") as f:
+        f.writelines(rows)
+
+
 def main():
     out = sys.argv[1]
     scale = float(sys.argv[2]) if len(sys.argv) > 2 else 0.001
     os.makedirs(out, exist_ok=True)
     for name, table in tables(scale):
         pq.write_table(table, os.path.join(out, f"{name}.parquet"))
+        if name == "events":
+            land(table, out)
 
 
 if __name__ == "__main__":

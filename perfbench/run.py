@@ -9,16 +9,20 @@ generates the input tables once (perfbench/gen_data.py), then runs the
 workload as fresh-JVM passes (perfbench.Pass), the way a pipeline job
 runs under spark-submit, until --seconds of pass time have accumulated
 (at least one pass; a pass is never cut short, and no pass starts that
-could not end before the run's time limit). The seed orders the
+could not end before the run's time limit). An untraced pass JVM starts
+together with PROBES probe JVMs that only set up, and its pass begins
+once they have ended: set-up is sampled PROBES + 1 times per pass, and
+setup_s is the median of the samples. The seed orders the
 calls of a pass and picks the ingest batches. Every result is checked
 against the fingerprint pinned in perfbench/pins.json, or for the
 ingest steps against the fingerprint of the batches that were written.
 
 The last stdout line is one JSON object: correct, attempted, failed and
 metrics -- the end-to-end metrics of BENCHMARK.json with --trace 0, the
-per-layer metrics with --trace 1. A traced run makes one untraced and
-one traced pass per round, so it can report the tracing overhead. The
-line before it is a readable host and tail record. See perfbench/README.md.
+per-layer metrics with --trace 1. A traced run makes one traced pass and,
+time permitting, one untraced pass, so it can report the tracing
+overhead. The line before it is a readable host and tail record. See
+perfbench/README.md.
 """
 import argparse
 import json
@@ -38,31 +42,37 @@ import build  # noqa: E402
 
 SCALE = 0.001
 DEADLINE_S = 170.0
+PROBES = 2
 # One fresh JVM per pass. Heap and young generation are fixed so peak RSS
-# follows live data, not the host's memory size or GC timing; compiler
+# follows live data, not the host's memory size or GC timing. The JIT stops
+# at C1, the usual setting for short-lived JVMs: under default tiering the
+# C2 compiler took two thirds of a pass's CPU compiling Spark's own code,
+# and its share swung with host contention (README.md, "JVM"). Compiler
 # threads stay alive so their CPU can be summed; then the module opens
 # Spark needs on JDK 17.
-JVM_OPTS = ["-Xms2g", "-Xmx2g", "-Xmn256m", "-XX:+UseG1GC",
+JVM_OPTS = ["-Xms2g", "-Xmx2g", "-Xmn256m", "-XX:+UseG1GC", "-XX:TieredStopAtLevel=1",
             "-XX:-UseDynamicNumberOfCompilerThreads"] + [
     f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
         "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
         "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
         "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar")]
 
-# Each list is sized so a run (set-up plus one cold pass) takes 40-60 s on
-# a shared 4-vCPU host; README.md gives the time budget behind that.
+# Each list is sized so a run (three set-ups side by side, then one cold
+# pass) takes 30-60 s on a shared 4-vCPU host; README.md gives the time
+# budget behind that.
 ETL_CALLS = ("q_concat_keys q_pivot q_window_sum q_array_diff q_price_index "
              "q_sessionize").split()
 # Write path, in dependency order; the seed interleaves it with ETL_CALLS.
-INGEST_STEPS = ["ingest.land", "ingest.write", "ingest.overwrite", "ingest.index_prune",
-                "ingest.compact", "ingest.read_evolved", "ingest.read_table_agg"]
-RETRIEVAL_CALLS = ("q_dedup_minhash q_lsh_recall q_pq_recall q_geks_index "
-                   "q_kcore q_huber").split()
+INGEST_STEPS = ["ingest.write", "ingest.overwrite", "ingest.index_prune", "ingest.compact",
+                "ingest.read_evolved", "ingest.read_table_agg"]
+RETRIEVAL_CALLS = ("q_dedup_minhash q_lsh_recall q_pq_recall q_sq8_recall q_ivf_topk "
+                   "q_kcore q_huber q_geks_index q_logit").split()
 WORKLOADS = {
     # short operator calls (read path, planning, codegen) and the write path
     "etl_pipeline": (ETL_CALLS, INGEST_STEPS),
-    # retrieval and driver-loop fits: eager construction jobs, shuffle,
-    # operator memo caches and recall
+    # dedup, ANN and recall guards, then driver-loop fits: execution and
+    # shuffle, eager construction jobs, persisted intermediates, both
+    # operator memo caches
     "retrieval_dedup": (RETRIEVAL_CALLS, []),
 }
 
@@ -90,45 +100,87 @@ def ensure_data(build_dir):
     return data
 
 
+class Jvm:
+    """One fresh pass JVM (perfbench.Pass), started at construction. A
+    probe stops once set up. With `go`, the JVM waits after set-up until
+    that file exists before it starts the pass. Its work directory is
+    removed when it ends, so nothing a pass writes outlives it."""
+
+    def __init__(self, cp, build_dir, data, workload, calls, seed, traced, tag, go=None):
+        self.work = os.path.join(build_dir, "work", f"{os.getpid()}-{tag}")
+        shutil.rmtree(self.work, ignore_errors=True)
+        os.makedirs(os.path.join(self.work, "tmp"))
+        self.probe = tag.startswith("probe")
+        self.traced = traced
+        env = dict(os.environ, SPARK_LOCAL_DIRS=os.path.join(self.work, "local"))
+        spans = os.path.join(build_dir, "trace", f"{workload}-{seed}.jsonl")
+        os.makedirs(os.path.dirname(spans), exist_ok=True)
+        cmd = ["java"] + JVM_OPTS + [
+            f"-Djava.io.tmpdir={self.work}/tmp", "-cp", cp, "perfbench.Pass",
+            "--workload", workload, "--calls", ",".join(calls), "--data", data,
+            "--work", self.work, "--seed", str(seed), "--cpus", str(min(2, os.cpu_count() or 1)),
+            "--trace", "1" if traced else "0", "--spans", spans,
+            "--probe", str(int(self.probe)), "--go", go or ""]
+        self.workload = workload
+        self.log_path = os.path.join(build_dir, f"{tag}-{workload}.log")
+        self.build_dir = build_dir
+        with open(self.log_path, "w") as log:
+            self.launched = time.time()
+            self.p = subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=log, text=True, env=env,
+                                      cwd=self.work)
+
+    def stop(self):
+        if self.p.poll() is None:
+            self.p.kill()
+        self.p.wait()
+        shutil.rmtree(self.work, ignore_errors=True)
+
+    def finish(self, deadline):
+        """Wait for the JVM to end; return its JSON record."""
+        try:
+            out, _ = self.p.communicate(timeout=max(1.0, deadline - time.time()))
+        except subprocess.TimeoutExpired:
+            sys.exit(f"perfbench: pass exceeded the run deadline; see {self.log_path}")
+        finally:
+            self.stop()
+        lines = out.strip().splitlines()
+        if self.p.returncode != 0 or not lines:
+            sys.exit(f"perfbench: pass exited with {self.p.returncode}; see {self.log_path}")
+        rec = json.loads(lines[-1])
+        rec["exit_lag_s"] = time.time() - rec["end_ms"] / 1e3
+        rec["launched_ms"] = self.launched * 1e3
+        if not self.probe:
+            name = f"pass-{self.workload}{'-traced' if self.traced else ''}.json"
+            with open(os.path.join(self.build_dir, name), "w") as f:
+                json.dump(rec, f)
+        return rec
+
+
 def run_pass(cp, build_dir, data, workload, calls, seed, traced, deadline):
-    """One fresh-JVM pass; returns its JSON record. The work directory is
-    removed afterwards, so nothing a pass writes outlives it."""
-    work = os.path.join(build_dir, "work", f"{os.getpid()}-{int(traced)}")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(os.path.join(work, "tmp"))
-    env = dict(os.environ, SPARK_LOCAL_DIRS=os.path.join(work, "local"))
-    spans = os.path.join(build_dir, "trace", f"{workload}-{seed}.jsonl")
-    os.makedirs(os.path.dirname(spans), exist_ok=True)
-    cmd = ["java"] + JVM_OPTS + [f"-Djava.io.tmpdir={work}/tmp", "-cp", cp, "perfbench.Pass",
-                                 "--workload", workload, "--calls", ",".join(calls),
-                                 "--data", data, "--work", work, "--seed", str(seed),
-                                 "--cpus", str(min(2, os.cpu_count() or 1)),
-                                 "--trace", "1" if traced else "0", "--spans", spans]
-    log_path = os.path.join(build_dir, f"pass-{workload}.log")
+    """One fresh-JVM pass, alone; returns its JSON record."""
+    return Jvm(cp, build_dir, data, workload, calls, seed, traced, f"pass{int(traced)}").finish(
+        deadline)
+
+
+def sampled_pass(cp, build_dir, data, workload, calls, seed, deadline):
+    """One untraced pass whose set-up is sampled PROBES + 1 times: the pass
+    JVM and PROBES probe JVMs start together, and the pass starts once the
+    probes have ended. Returns the pass record and the set-up samples."""
+    go = os.path.join(build_dir, "work", f"{os.getpid()}-go")
+    jvms = []
     try:
-        with open(log_path, "w") as log:
-            launched = time.time()
-            p = subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=log, text=True, env=env,
-                                 cwd=work)
-            try:
-                out, _ = p.communicate(timeout=max(1.0, deadline - time.time()))
-            except subprocess.TimeoutExpired:
-                sys.exit(f"perfbench: pass exceeded the run deadline; see {log_path}")
-            finally:
-                if p.poll() is None:
-                    p.kill()
-                    p.wait()
+        jvms.append(Jvm(cp, build_dir, data, workload, calls, seed, False, "pass0", go=go))
+        jvms += [Jvm(cp, build_dir, data, workload, [], seed, False, f"probe{i}")
+                 for i in range(PROBES)]
+        setups = [j.finish(deadline)["setup_s"] for j in jvms[1:]]
+        open(go, "w").close()
+        rec = jvms[0].finish(deadline)
     finally:
-        shutil.rmtree(work, ignore_errors=True)
-    lines = out.strip().splitlines()
-    if p.returncode != 0 or not lines:
-        sys.exit(f"perfbench: pass exited with {p.returncode}; see {log_path}")
-    rec = json.loads(lines[-1])
-    rec["exit_lag_s"] = time.time() - rec["end_ms"] / 1e3
-    rec["launched_ms"] = launched * 1e3
-    with open(os.path.join(build_dir, f"pass-{workload}.json"), "w") as f:
-        json.dump(rec, f)
-    return rec
+        for j in jvms:
+            j.stop()
+        if os.path.exists(go):
+            os.remove(go)
+    return rec, setups + [rec["setup_s"]]
 
 
 def call_order(workload, seed):
@@ -191,15 +243,29 @@ def main():
 
     order = call_order(a.workload, a.seed)
 
-    untraced, traced = [], []
-    measured = 0.0
-    started = time.time()
-    while not untraced or (measured < a.seconds and
-                           time.time() + 2 * (time.time() - started) / len(untraced) < deadline):
-        untraced.append(run_pass(cp, build_dir, data, a.workload, order, a.seed, False, deadline))
-        measured += untraced[-1]["wall_s"]
-        if a.trace:
-            traced.append(run_pass(cp, build_dir, data, a.workload, order, a.seed, True, deadline))
+    untraced, traced, setups = [], [], []
+    if a.trace:
+        # The traced pass carries the per-layer metrics, so it runs first.
+        # Its untraced twin, the reference for the tracing overhead, runs
+        # only if it can end before the deadline: under heavy host steal two
+        # cold retrieval_dedup passes take longer than a run may. Then the
+        # last untraced pass of the workload in this build directory stands
+        # in for it.
+        t0 = time.time()
+        traced.append(run_pass(cp, build_dir, data, a.workload, order, a.seed, True, deadline))
+        if time.time() + (time.time() - t0) < deadline:
+            untraced.append(run_pass(cp, build_dir, data, a.workload, order, a.seed, False,
+                                     deadline))
+    else:
+        measured = 0.0
+        started = time.time()
+        while not untraced or (measured < a.seconds and
+                               time.time() + 2 * (time.time() - started) / len(untraced)
+                               < deadline):
+            rec, samples = sampled_pass(cp, build_dir, data, a.workload, order, a.seed, deadline)
+            untraced.append(rec)
+            setups += samples
+            measured += rec["wall_s"]
     passes = untraced + traced
     attempted, failed, bad = check(passes, pins)
     for b in bad[:20]:
@@ -208,27 +274,37 @@ def main():
     def med(recs, k):
         return statistics.median(r.get(k, 0.0) for r in recs)
 
-    lat = [c["s"] for r in untraced for c in r["calls"]]
+    shown_passes = untraced or traced
+    lat = [c["s"] for r in shown_passes for c in r["calls"]]
     tail_s, tail_pct, n = tail(lat)
     # Every candidate end-to-end figure; BENCHMARK.json names the gated ones
     # and the record line shows the rest.
-    e2e = {k: med(untraced, k) for k in ("setup_s", "wall_s", "cpu_s", "peak_rss_mb",
-                                         "spark_jobs", "shuffle_bytes")}
+    e2e = {k: med(shown_passes, k) for k in ("wall_s", "cpu_s", "peak_rss_mb", "spark_jobs",
+                                             "shuffle_bytes")}
+    e2e["setup_s"] = statistics.median(setups or [r["setup_s"] for r in shown_passes])
     e2e["query_p50_s"] = statistics.median(lat)
     gated = metric_names("end_to_end")
     shown = " ".join(f"{k}={v:.4f}" for k, v in e2e.items() if k not in dict(gated))
-    print(f"seed={a.seed} passes={len(untraced)} {shown} query_tail_s=p{tail_pct:.1f} of "
-          f"n={n}: {tail_s:.4f} host.steal_s={med(untraced, 'host.steal_s'):.2f} "
-          f"host.canary_s={med(untraced, 'host.canary_s'):.4f}")
+    print(f"seed={a.seed} passes={len(untraced)} setups={','.join(f'{x:.2f}' for x in setups)} "
+          f"{shown} query_tail_s=p{tail_pct:.1f} of "
+          f"n={n}: {tail_s:.4f} host.steal_s={med(shown_passes, 'host.steal_s'):.2f} "
+          f"host.canary_s={med(shown_passes, 'host.canary_s'):.4f}")
     if a.trace:
+        last = os.path.join(build_dir, f"pass-{a.workload}.json")
+        if untraced or not os.path.exists(last):
+            ref = untraced or traced
+        else:
+            with open(last) as f:
+                ref = [json.load(f)]
+            print(f"perfbench: tracing overhead taken against {last}", file=sys.stderr)
         out = {}
         for name, unit in metric_names("per_layer"):
             if name == "calls.failed_frac":
                 v = failed / attempted
             elif name == "trace.overhead_wall_s":
-                v = med(traced, "wall_s") - med(untraced, "wall_s")
+                v = med(traced, "wall_s") - med(ref, "wall_s")
             elif name == "trace.overhead_cpu_s":
-                v = med(traced, "cpu_s") - med(untraced, "cpu_s")
+                v = med(traced, "cpu_s") - med(ref, "cpu_s")
             else:
                 v = med(traced, name)
             out[name] = {"value": v, "unit": unit}

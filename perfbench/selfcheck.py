@@ -10,9 +10,9 @@ For each workload it checks that
      corrupted prints every per-layer metric with its unit and reports
      the corrupted call as failed (calls.failed_frac > 0), so the
      correctness gate is live;
-  3. after each run no pass JVM is left and no work directory remains
-     (a pass's Spark local dirs, temp dir and written tables all live in
-     its work directory).
+  3. after each run no pass or probe JVM is left and no work directory
+     remains (a JVM's Spark local dirs, temp dir and written tables all
+     live in its work directory).
 Finally it checks that in a directory holding only BENCHMARK.json and
 perfbench/ the command exits non-zero without printing a result.
 Prints PASS or FAIL lines; exits non-zero on any failure.

@@ -8,41 +8,55 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Sources
 
-/** The write-path steps of a pipeline. `ingest.land` lands daily event
-  * batches as parquet: the events of eight seed-picked days
-  * (`landing/batches`) and a re-delivery of one of them that drops a
-  * seeded seventh of its rows and corrects the rest (`landing/redo`).
-  * The batches are then written partitioned by day, the re-delivered day
-  * is overwritten in place, the table is indexed and pruned on a
-  * seed-picked event_id range, compacted, and read back two ways. The
-  * read-backs must equal the batches as they stand after the re-delivery,
-  * so the steps check themselves: [[expected]] is computed after the
-  * pass, untimed.
+/** The write-path steps of a pipeline, over the daily event batches that
+  * `gen_data.py` landed (`landing/batches/<day>.parquet`, and a corrected
+  * re-delivery of each day in `landing/redo/`). The seed picks eight days
+  * to ingest, the day that is re-delivered, and an event_id range for
+  * pruning. The batches are written partitioned by day, the re-delivered
+  * day is overwritten in place, the table is indexed and pruned on the
+  * range, compacted, and read back two ways. The read-backs must equal
+  * the batches as they stand after the re-delivery, so the steps check
+  * themselves: [[expected]] is computed after the pass, untimed.
   */
 final class Ingest(spark: SparkSession, data: String, work: String, seed: Long) {
-  private val root = s"$work/ingest"
-  private val table = s"$root/events_by_day"
+  private val dir = s"$work/ingest"
+  private val table = s"$dir/events_by_day"
   private val compactedName = "events_compacted"
-  private val compacted = s"$root/$compactedName.parquet"
+  private val compacted = s"$dir/$compactedName.parquet"
   private val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props", "day")
   private val targetDdl = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
     "value DOUBLE, props STRING, day DATE, source_batch STRING"
-  private val rnd = new scala.util.Random(seed)
-  private var inputBytes = 1L
-  private var lo = 0L
-  private var hi = 0L
   private var filesWritten = 0L
   private var bytesWritten = 0L
   private var keptFrac = 0.0
-  private def landed(b: String): DataFrame = spark.read.parquet(s"$root/landing/$b")
+
+  // (day, first event_id, last event_id) of every landed day
+  private val days: Seq[(String, Long, Long)] = {
+    val f = scala.io.Source.fromFile(s"$data/landing/days.tsv")
+    try f.getLines().map(_.split('\t')).map(a => (a(0), a(1).toLong, a(2).toLong)).toList
+    finally f.close()
+  }
+  private val rnd = new scala.util.Random(seed)
+  private val picked = rnd.shuffle(days).take(math.min(8, days.size))
+  private val redoDay = picked(rnd.nextInt(picked.size))._1
+  private val batchFiles = picked.map(d => s"$data/landing/batches/${d._1}.parquet")
+  private val redoFile = s"$data/landing/redo/$redoDay.parquet"
+  private val inputBytes = (redoFile +: batchFiles).map(new java.io.File(_).length).sum
+  // a quarter of the landed ids, so the pruning range always keeps some files
+  private val (lo, hi) = {
+    val ids = picked.flatMap(d => d._2 to d._3).sorted
+    val k = rnd.nextInt(ids.length - ids.length / 4)
+    (ids(k), ids(k + ids.length / 4))
+  }
+  private def batches: DataFrame = spark.read.parquet(batchFiles: _*)
+  private def redo: DataFrame = spark.read.parquet(redoFile)
   private def dayAgg(df: DataFrame): DataFrame =
     df.groupBy("day", "event_type")
       .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,2)")).as("value"))
 
   /** Expected "rows:hash" of the steps whose output the landed batches determine. */
   def expected(): Map[String, String] = {
-    val redo = landed("redo")
-    val current = landed("batches").join(redo.select("day").distinct(), Seq("day"), "left_anti")
+    val current = batches.join(redo.select("day").distinct(), Seq("day"), "left_anti")
       .unionByName(redo).select(cols.map(col): _*)
     def fp(df: DataFrame): String = {
       val r = Pass.fingerprint(df, None).collect().head
@@ -80,34 +94,12 @@ final class Ingest(spark: SparkSession, data: String, work: String, seed: Long) 
     spark.range(1).select(lit(files).as("files"), lit(bytes).as("bytes"))
   }
 
-  private def land(): DataFrame = {
-    val events = Sources.readTable(spark, data, "events").withColumn("day", to_date(col("ts")))
-    val days = events.select("day").distinct().collect().map(_.getDate(0)).sortBy(_.getTime).toSeq
-    val picked = rnd.shuffle(days).take(math.min(8, days.size))
-    val redoDay = picked(rnd.nextInt(picked.size))
-    events.where(col("day").isin(picked: _*)).select(cols.map(col): _*)
-      .write.mode("overwrite").parquet(s"$root/landing/batches")
-    events.where(col("day") === redoDay)
-      .where(pmod(col("event_id") + seed, lit(7L)) =!= 0)
-      .withColumn("value", round(col("value") * 1.1, 2))
-      .select(cols.map(col): _*)
-      .write.mode("overwrite").parquet(s"$root/landing/redo")
-    inputBytes = Sources.dataFileBytes(spark, s"$root/landing")
-    // a quarter of the landed ids, so the pruning range always keeps some files
-    val ids = landed("batches").select("event_id").orderBy("event_id").collect().map(_.getLong(0))
-    val k = rnd.nextInt(ids.length - ids.length / 4)
-    lo = ids(k)
-    hi = ids(k + ids.length / 4)
-    spark.range(1).select(lit(inputBytes).as("bytes"))
-  }
-
   val steps: Seq[(String, () => DataFrame)] = Seq(
-    "ingest.land" -> (() => land()),
     "ingest.write" -> (() => written(table) {
-      Sources.writePartitioned(landed("batches"), table, Seq("day"))
+      Sources.writePartitioned(batches, table, Seq("day"))
     }),
     "ingest.overwrite" -> (() => written(table) {
-      Sources.overwritePartitionsDynamic(landed("redo"), table, Seq("day"))
+      Sources.overwritePartitionsDynamic(redo, table, Seq("day"))
     }),
     "ingest.index_prune" -> (() => {
       val index = Sources.fileStatsIndex(spark, table, Seq("event_id")).cache()
@@ -122,7 +114,7 @@ final class Ingest(spark: SparkSession, data: String, work: String, seed: Long) 
     }),
     "ingest.read_evolved" -> (() =>
       Sources.readEvolved(spark, compacted, Some(targetDdl)).select(cols.map(col): _*)),
-    "ingest.read_table_agg" -> (() => dayAgg(Sources.readTable(spark, root, compactedName))))
+    "ingest.read_table_agg" -> (() => dayAgg(Sources.readTable(spark, dir, compactedName))))
 
   def metrics(writeS: Double): Map[String, Any] = Map(
     "sources.write_s" -> writeS, "sources.files_written" -> filesWritten,

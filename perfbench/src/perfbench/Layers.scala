@@ -15,7 +15,7 @@ object Layers {
   /** Call-site file -> module metric prefix. */
   val modules: Seq[(String, String)] = Seq(
     "Graph.scala" -> "ops.Graph", "PriceIndex.scala" -> "ops.PriceIndex",
-    "Stats.scala" -> "ops.Stats",
+    "Stats.scala" -> "ops.Stats", "Regression.scala" -> "ops.Regression",
     "Dedup.scala" -> "text.Dedup", "Cluster.scala" -> "text.Cluster",
     "Similarity.scala" -> "text.Similarity", "Pq.scala" -> "text.Pq")
 

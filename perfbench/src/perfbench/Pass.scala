@@ -23,7 +23,9 @@ import graft.{Caches, GraftSession, SparkEntry}
   * run order; `ingest.*` names are the [[Ingest]] steps), data (table
   * directory), work (scratch directory the pass may write), seed (picks
   * the ingest batches), cpus, trace (0|1), spans (JSON-lines file written
-  * by a traced pass).
+  * by a traced pass), probe (1: stop once set up, recording only the
+  * set-up times; run.py samples set-up several times per pass this way),
+  * go (if not empty, wait after set-up until this file exists).
   */
 object Pass {
 
@@ -36,7 +38,8 @@ object Pass {
   /** Queries whose output also yields a retrieval-quality figure. */
   private val recallOf: Map[String, (String, Column)] = Map(
     "q_lsh_recall" -> ("text.recall_lsh", max(col("c2"))),
-    "q_pq_recall" -> ("text.recall_pq", sum(col("c1")) / (count(lit(1)) * 5)))
+    "q_pq_recall" -> ("text.recall_pq", sum(col("c1")) / (count(lit(1)) * 5)),
+    "q_sq8_recall" -> ("text.recall_sq8", sum(col("c1")) / (count(lit(1)) * 5)))
 
   def main(args: Array[String]): Unit = {
     val opt = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -67,10 +70,24 @@ object Pass {
     } else None
     spark.range(1000).selectExpr("sum(id)").collect()
     val setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
+    if (opt.get("probe").contains("1"))
+      exit(mutable.LinkedHashMap[String, Any]("setup_s" -> setupS, "session.build_s" -> buildS,
+        "end_ms" -> System.currentTimeMillis()))
+    // The probes set up beside this JVM; the pass starts once they have ended.
+    opt.get("go").filter(_.nonEmpty).foreach { go =>
+      val until = System.currentTimeMillis() + 150000L
+      while (!new java.io.File(go).exists()) {
+        if (System.currentTimeMillis() > until) {
+          System.err.println(s"perfbench: no go file $go")
+          Runtime.getRuntime.halt(1)
+        }
+        Thread.sleep(10)
+      }
+    }
 
     def canary(): Double = {
       val t = System.nanoTime()
-      spark.range(0L, 4000000L, 1L, cpus).selectExpr("sum(id * 3 + 1)").collect()
+      spark.range(0L, 1000000L, 1L, cpus).selectExpr("sum(id * 3 + 1)").collect()
       (System.nanoTime() - t) / 1e9
     }
     canary()
@@ -203,13 +220,19 @@ object Pass {
     // where a run's time goes outside set-up and the pass
     out("marks_ms") = mutable.LinkedHashMap("jvm_start" -> jvmStartMs, "pass_end" -> tPost,
       "canary_end" -> tCanary, "expected_end" -> tExpected, "record_end" -> tOut)
-    println(Json.render(out))
-    // Exit without shutdown hooks: the session is stopped and run.py removes
-    // the work directory, so the hooks would only repeat that cleanup, and
-    // Hadoop's hook manager can wait out a 30 s timeout doing it.
+    exit(out)
+  }
+
+  /** Print the record and exit without shutdown hooks: run.py removes the
+    * work directory, so the hooks would only repeat that cleanup, and
+    * Hadoop's hook manager can wait out a 30 s timeout doing it.
+    */
+  private def exit(record: scala.collection.Map[String, Any]): Nothing = {
+    println(Json.render(record))
     System.out.flush()
     System.err.flush()
     Runtime.getRuntime.halt(0)
+    throw new IllegalStateException("halt returned")
   }
 
   /** Row count plus the sum of a 64-bit hash over every output column, as
