@@ -66,7 +66,8 @@ def _ensure(build_dir):
         args = os.path.join(build_dir, "scalac.args")
         with open(args, "w") as f:
             f.write("\n".join(srcs) + "\n")
-        cmd = ["java", "-Xss8m", "-Xmx2g", f"-Djava.io.tmpdir={tmp}/jvmtmp", "-cp", jars,
+        cmd = ["java", "-Xss8m", "-Xmx2g", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}/jvmtmp",
+               "-cp", jars,
                "scala.tools.nsc.Main", "-nowarn", "-d", tmp, "-classpath", jars, "@" + args]
         r = subprocess.run(cmd, stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
         shutil.rmtree(os.path.join(tmp, "jvmtmp"), ignore_errors=True)

@@ -48,10 +48,11 @@ PROBES = 2
 # at C1, the usual setting for short-lived JVMs: under default tiering the
 # C2 compiler took two thirds of a pass's CPU compiling Spark's own code,
 # and its share swung with host contention (README.md, "JVM"). Compiler
-# threads stay alive so their CPU can be summed; then the module opens
-# Spark needs on JDK 17.
+# threads stay alive so their CPU can be summed. No perf-data file in the
+# system temp directory: a run writes only inside its checkout. Then the
+# module opens Spark needs on JDK 17.
 JVM_OPTS = ["-Xms2g", "-Xmx2g", "-Xmn256m", "-XX:+UseG1GC", "-XX:TieredStopAtLevel=1",
-            "-XX:-UseDynamicNumberOfCompilerThreads"] + [
+            "-XX:-UseDynamicNumberOfCompilerThreads", "-XX:-UsePerfData"] + [
     f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
         "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
         "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
