@@ -14,9 +14,10 @@ import graft.sources.Sources
   * to ingest, the day that is re-delivered, and an event_id range for
   * pruning. The batches are written partitioned by day, the re-delivered
   * day is overwritten in place, the table is indexed and pruned on the
-  * range, compacted, and read back two ways. The read-backs must equal
-  * the batches as they stand after the re-delivery, so the steps check
-  * themselves: [[expected]] is computed after the pass, untimed.
+  * range, compacted, and read back two ways. The pruned read and the
+  * read-backs must equal the batches as they stand after the re-delivery,
+  * so the steps check themselves: [[expected]] is computed after the
+  * pass, untimed.
   */
 final class Ingest(spark: SparkSession, data: String, work: String, seed: Long) {
   private val dir = s"$work/ingest"
@@ -24,6 +25,8 @@ final class Ingest(spark: SparkSession, data: String, work: String, seed: Long) 
   private val compactedName = "events_compacted"
   private val compacted = s"$dir/$compactedName.parquet"
   private val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props", "day")
+  // the columns a data file of the day-partitioned table holds
+  private val fileCols = cols.filter(_ != "day")
   private val targetDdl = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
     "value DOUBLE, props STRING, day DATE, source_batch STRING"
   private var filesWritten = 0L
@@ -50,6 +53,7 @@ final class Ingest(spark: SparkSession, data: String, work: String, seed: Long) 
   }
   private def batches: DataFrame = spark.read.parquet(batchFiles: _*)
   private def redo: DataFrame = spark.read.parquet(redoFile)
+  private def inRange(df: DataFrame): DataFrame = df.where(col("event_id").between(lo, hi))
   private def dayAgg(df: DataFrame): DataFrame =
     df.groupBy("day", "event_type")
       .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,2)")).as("value"))
@@ -62,7 +66,8 @@ final class Ingest(spark: SparkSession, data: String, work: String, seed: Long) 
       val r = Pass.fingerprint(df, None).collect().head
       s"${r.getLong(0)}:${r.get(1)}"
     }
-    Map("ingest.read_evolved" -> fp(current), "ingest.read_table_agg" -> fp(dayAgg(current)))
+    Map("ingest.index_prune" -> fp(inRange(current).select(fileCols.map(col): _*)),
+      "ingest.read_evolved" -> fp(current), "ingest.read_table_agg" -> fp(dayAgg(current)))
   }
 
   val writeSteps: Set[String] = Set("ingest.write", "ingest.overwrite", "ingest.compact")
@@ -107,7 +112,8 @@ final class Ingest(spark: SparkSession, data: String, work: String, seed: Long) 
       val kept = Sources.pruneFilesByRange(index, "event_id", lo, hi)
       index.unpersist()
       keptFrac = kept.size.toDouble / indexed
-      spark.read.parquet(kept: _*).where(col("event_id").between(lo, hi))
+      // the in-range rows of the kept files: a file pruned wrongly loses rows
+      inRange(spark.read.parquet(kept: _*)).select(fileCols.map(col): _*)
     }),
     "ingest.compact" -> (() => written(compacted) {
       Sources.compact(spark, table, compacted, math.max(1L, inputBytes / 4))

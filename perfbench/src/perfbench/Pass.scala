@@ -146,6 +146,11 @@ object Pass {
       }
     }
 
+    // The JIT still holds compile work from set-up, more of it when the
+    // probes set up beside this JVM; the pass starts once it has drained,
+    // so its CPU is the pass's own.
+    jitIdle()
+    val tIdle = System.currentTimeMillis()
     PerfbenchBus.drain(sc)
     val (jobs0, shuffle0) = (counter.jobs, counter.shuffleBytes)
     val steal0 = hostStealS()
@@ -218,7 +223,8 @@ object Pass {
     spark.stop()
     out("end_ms") = System.currentTimeMillis()
     // where a run's time goes outside set-up and the pass
-    out("marks_ms") = mutable.LinkedHashMap("jvm_start" -> jvmStartMs, "pass_end" -> tPost,
+    out("marks_ms") = mutable.LinkedHashMap("jvm_start" -> jvmStartMs, "jit_idle" -> tIdle,
+      "pass_end" -> tPost,
       "canary_end" -> tCanary, "expected_end" -> tExpected, "record_end" -> tOut)
     exit(out)
   }
@@ -276,6 +282,22 @@ object Pass {
       (per.filter(_._1.contains("CompilerThre")).map(_._2).sum,
         per.filter(p => p._1.startsWith("GC Thread") || p._1.startsWith("G1 ")).map(_._2).sum)
     } catch { case _: Exception => (0.0, 0.0) }
+
+  /** Wait until the JIT compiler threads have used at most one 10 ms
+    * clock tick of CPU in each of two consecutive 250 ms windows, or 15 s
+    * have passed.
+    */
+  private def jitIdle(): Unit = {
+    val until = System.currentTimeMillis() + 15000L
+    var last = jitGcCpuS()._1
+    var quiet = 0
+    while (quiet < 2 && System.currentTimeMillis() < until) {
+      Thread.sleep(250)
+      val now = jitGcCpuS()._1
+      quiet = if (now - last < 0.015) quiet + 1 else 0
+      last = now
+    }
+  }
 
   private def processCpuNs(): Long =
     ManagementFactory.getOperatingSystemMXBean
