@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * Round sources per family:
   *   - connected components (q_dup_components, q_semdedup,
-  *     q_group_split): [[graft.text.Dedup.lastComponentRounds]],
-  *     recorded by the operator at convergence;
-  *   - k-core peel (q_kcore): [[graft.ops.Graph.lastKcoreRounds]];
+  *     q_group_split), k-core peel (q_kcore) and k-truss peel
+  *     (q_ktruss): [[graft.ops.Observe.rounds]], which the shared
+  *     fixpoint loop records under the operator's name at convergence;
   *   - GK / TPD / stationary (q_gk_index, q_tpd_index, q_stationary):
   *     the `iters_run` column those queries already emit as their
   *     convergence contract;
@@ -47,9 +47,10 @@ object ScaleProbe {
     spark.range(1000).selectExpr("sum(id)").collect()
 
     // (query, how to read its round count after a run)
-    val componentRounds = () => Some(graft.text.Dedup.lastComponentRounds.toLong)
-    val kcoreRounds = () => Some(graft.ops.Graph.lastKcoreRounds.toLong)
-    val ktrussRounds = () => Some(graft.ops.Graph.lastKtrussRounds.toLong)
+    def fixpointRounds(loop: String) = () => graft.ops.Observe.rounds.get(loop).map(_.toLong)
+    val componentRounds = fixpointRounds("connectedComponents")
+    val kcoreRounds = fixpointRounds("kCore")
+    val ktrussRounds = fixpointRounds("kTruss")
     val noRounds = () => Option.empty[Long]
     val defaults: Seq[(String, () => Option[Long])] = Seq(
       "q_dup_components" -> componentRounds,

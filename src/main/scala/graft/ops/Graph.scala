@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge DataFrames — the link-analysis
@@ -30,16 +30,15 @@ object Graph {
     * one map-side-combined aggregation onto the destination, and a left
     * join back onto the node set. State is node-sized, edges never
     * mutate; each iteration's result is localCheckpointed so the plan
-    * stays iteration-flat (the lineage would otherwise double per round).
+    * stays iteration-flat on the [[Observe.cadence]] (every third round
+    * and the last; the lineage would otherwise double per round).
     *
     * @param edges (src, dst) rows; duplicates collapse (unweighted)
     * @return (node, rank) with rank in `unit`-ths; Σ rank <= unit
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int, unit: Long = 1000000000000L,
-               checkpointEvery: Int = 3): DataFrame = {
+               iterations: Int, unit: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    require(checkpointEvery >= 1, "checkpointEvery must be positive")
     require(unit >= 1000000L, "unit too coarse for meaningful ranks")
     // one pass builds the frozen degree-carrying edge list (r14): the
     // source degree rides a window count over the same src partitioning
@@ -89,10 +88,7 @@ object Graph {
         .join(contribs, Seq("node"), "left")
         .select(col("node"),
           expr(s"${base}L + (85L * coalesce(in_mass, 0L)) div 100L").as("rank"))
-      // checkpoint on a cadence: lineage stays bounded (it would double
-      // per round) without paying a materialization job every iteration
-      ranks = if (i % checkpointEvery == 0 || i == iterations) next.localCheckpoint(true)
-        else next
+      ranks = Observe.cadence(next, i, iterations)
     }
     ranks
   }
@@ -108,61 +104,25 @@ object Graph {
     * is one map-combined degree aggregation + two semi-joins on the
     * endpoint keys; state is the surviving edge list, localCheckpointed
     * so lineage stays round-flat (the PageRank convention). Round count
-    * is bounded by the peeling depth — small for real graphs; `maxRounds`
-    * is a runaway backstop that RAISES rather than returning a
-    * not-yet-converged core.
+    * is bounded by the peeling depth — small for real graphs; the
+    * [[Observe.fixpoint]] backstop (50 rounds) RAISES rather than
+    * returning a not-yet-converged core.
     *
     * @return (node, core_degree) for k-core members — core_degree is the
     *         degree WITHIN the core, >= k by construction
     */
-  /** Peel rounds the most recent [[kCore]] call ran — measurement-only
-    * diagnostic for the ScaleProbe scaling protocol (peeling depth is
-    * the one cost ×10 tables can't stress). Last-writer-wins; never
-    * consulted by operators.
-    */
-  @volatile private[graft] var lastKcoreRounds: Int = -1
-
-  def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
-            maxRounds: Int = 50): DataFrame = {
+  def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
-        .groupBy(col("x")).agg(count(lit(1)).as("d"))
-    var cur = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") < col("v")).distinct()
-      .localCheckpoint(true)
-    var prevCount = cur.count()
-    var converged = prevCount == 0L
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
+    val init = undirected(edges, aCol, bCol).localCheckpoint(true)
+    // one action per peel round: the survivor count rides the checkpoint
+    val core = Observe.fixpoint("kCore", init, init.count(), maxRounds = 50) { cur =>
       val keep = degrees(cur).filter(col("d") >= k).select(col("x"))
-      // the survivor count rides the checkpoint job as an Observation
-      // metric (the connectedComponents r14 pattern) — one action/round
-      val obs = org.apache.spark.sql.Observation(s"kcore_round_$rounds")
-      val next = cur
+      Observe.checkpointed(cur
         .join(keep.toDF("u"), Seq("u"), "left_semi")
-        .join(keep.toDF("v"), Seq("v"), "left_semi")
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val n = obs.get("n").asInstanceOf[Long]
-      converged = n == prevCount
-      prevCount = n
-      cur = next
-      rounds += 1
-    }
-    lastKcoreRounds = rounds
-    if (!converged) throw new IllegalStateException(
-      s"kCore did not converge within $maxRounds rounds (depth exceeds backstop)")
-    degrees(cur).select(col("x").as("node"), col("d").as("core_degree"))
+        .join(keep.toDF("v"), Seq("v"), "left_semi"), count(lit(1)))
+    }(_ == _)
+    degrees(core).select(col("x").as("node"), col("d").as("core_degree"))
   }
-
-  /** Peel rounds the most recent [[kTruss]] call ran — the ScaleProbe
-    * diagnostic, same contract as [[lastKcoreRounds]].
-    */
-  @volatile private[graft] var lastKtrussRounds: Int = -1
 
   /** k-truss decomposition: the maximal subgraph in which every EDGE
     * closes at least k−2 triangles — the edge-cohesion dual of
@@ -182,38 +142,19 @@ object Graph {
     * lowest-(degree, id) vertex exactly once, wedge fan-out O(√m)) and
     * folds each triangle into its three canonical edges — one
     * map-combined support aggregation + one semi-join per round, state
-    * localCheckpointed round-flat. `maxRounds` is a runaway backstop
-    * that RAISES rather than returning a non-fixpoint (the kCore
+    * localCheckpointed round-flat. The [[Observe.fixpoint]] backstop (16
+    * rounds) RAISES rather than returning a non-fixpoint (the kCore
     * contract).
     *
     * @return (u, v, support) for surviving canonical edges — support
     *         counted WITHIN the truss, >= k−2 by construction
     */
-  def kTruss(edges: DataFrame, aCol: String, bCol: String, k: Int,
-             maxRounds: Int = 16): DataFrame = {
+  def kTruss(edges: DataFrame, aCol: String, bCol: String, k: Int): DataFrame = {
     require(k >= 3 && k <= 64, s"k must be in [3, 64]: $k")
-    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
     val minSup = (k - 2).toLong
     def support(e: DataFrame): DataFrame = {
-      val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
-        .groupBy(col("x")).agg(count(lit(1)).as("d"))
-      val oriented = e
-        .join(deg.select(col("x").as("u"), col("d").as("du")), Seq("u"))
-        .join(deg.select(col("x").as("v"), col("d").as("dv")), Seq("v"))
-        .select(
-          when(col("du") < col("dv") ||
-              (col("du") === col("dv") && col("u") < col("v")),
-            struct(col("u").as("a"), col("v").as("b")))
-            .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .repartition(col("a"))
-      val w1 = oriented.select(col("a"), col("b").as("n1"))
-      val w2 = oriented.select(col("a"), col("b").as("n2"))
-      val tri = w1.join(w2, Seq("a")).filter(col("n1") < col("n2"))
-        .join(e, col("n1") === col("u") && col("n2") === col("v"))
-        .select(col("a"), col("n1"), col("n2"))
       // fold each triangle into its three canonical (u < v) edges
-      tri.select(explode(array(
+      triangles(e).select(explode(array(
           struct(least(col("a"), col("n1")).as("u"),
             greatest(col("a"), col("n1")).as("v")),
           struct(least(col("a"), col("n2")).as("u"),
@@ -222,33 +163,14 @@ object Graph {
         .select(col("t.u").as("u"), col("t.v").as("v"))
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
     }
-    var cur = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") < col("v")).distinct()
-      .localCheckpoint(true)
-    var prevCount = cur.count()
-    var converged = prevCount == 0L
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
+    val init = undirected(edges, aCol, bCol).localCheckpoint(true)
+    // one action per peel round: the survivor count rides the checkpoint
+    val truss = Observe.fixpoint("kTruss", init, init.count(), maxRounds = 16) { cur =>
       val keep = support(cur).filter(col("support") >= minSup)
         .select(col("u"), col("v"))
-      // survivor count via Observation on the checkpoint job (the
-      // connectedComponents r14 pattern) — one action per peel round
-      val obs = org.apache.spark.sql.Observation(s"ktruss_round_$rounds")
-      val next = cur.join(keep, Seq("u", "v"), "left_semi")
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val n = obs.get("n").asInstanceOf[Long]
-      converged = n == prevCount
-      prevCount = n
-      cur = next
-      rounds += 1
-    }
-    lastKtrussRounds = rounds
-    if (!converged) throw new IllegalStateException(
-      s"kTruss did not converge within $maxRounds rounds (depth exceeds backstop)")
-    support(cur).select(col("u"), col("v"), col("support"))
+      Observe.checkpointed(cur.join(keep, Seq("u", "v"), "left_semi"), count(lit(1)))
+    }(_ == _)
+    support(truss).select(col("u"), col("v"), col("support"))
   }
 
   /** Personalized PageRank — [[pageRank]]'s recurrence with the restart
@@ -265,17 +187,15 @@ object Graph {
     * and 0 elsewhere. Seeds absent from the graph are ignored (|S|
     * counts PRESENT seeds; an all-absent seed set raises). Same scale
     * shape too: frozen degree-carrying edge list, node-sized rank
-    * state, size-probed broadcast, checkpoint cadence.
+    * state, size-probed broadcast, [[Observe.cadence]] checkpoints.
     *
     * @param sources frame whose `sourceCol` holds the seed node ids
     * @return (node, rank) with rank in `unit`-ths
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            sources: DataFrame, sourceCol: String,
-                           iterations: Int, unit: Long = 1000000000000L,
-                           checkpointEvery: Int = 3): DataFrame = {
+                           iterations: Int, unit: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    require(checkpointEvery >= 1, "checkpointEvery must be positive")
     require(unit >= 1000000L, "unit too coarse for meaningful ranks")
     // frozen degree-carrying edge list in one pass (r14) — see
     // [[pageRank]]: the window count replaces the outdeg join (which
@@ -316,8 +236,7 @@ object Graph {
         .join(contribs, Seq("node"), "left")
         .select(col("node"), col("isrc"),
           expr(s"${base}L * isrc + (85L * coalesce(in_mass, 0L)) div 100L").as("rank"))
-      ranks = if (i % checkpointEvery == 0 || i == iterations) next.localCheckpoint(true)
-        else next
+      ranks = Observe.cadence(next, i, iterations)
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -343,7 +262,7 @@ object Graph {
     * each round joins the node-sized label state to it, one
     * map-side-combined (node, label) vote count, one per-node argmin
     * agg — two exchanges per round, both linear in edges; lineage
-    * stays round-flat on the PageRank checkpoint cadence.
+    * stays round-flat on the [[Observe.cadence]].
     *
     * Measured negative result (r15): broadcasting the label state per
     * round (the pageRank size-probed pattern, with the edge list
@@ -356,13 +275,9 @@ object Graph {
     * anyway, so the co-partitioned shape is also the 100 TB branch.
     */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
-                       rounds: Int, checkpointEvery: Int = 3): DataFrame = {
+                       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    val e = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val e = undirected(edges, aCol, bCol)
     val dir = e.select(col("u").as("node"), col("v").as("nbr"))
       .unionAll(e.select(col("v").as("node"), col("u").as("nbr")))
       .repartition(col("nbr"))
@@ -380,9 +295,7 @@ object Graph {
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("best"))
         .select(col("node"), col("best.l").as("label"))
-      labels =
-        if (i % checkpointEvery == 0 || i == rounds) next.localCheckpoint(true)
-        else next
+      labels = Observe.cadence(next, i, rounds)
     }
     labels
   }
@@ -407,14 +320,32 @@ object Graph {
     * @return single row (n_triangles)
     */
   def triangleCount(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    // canonical undirected edge set: u < v, no loops, no duplicates
-    val e = edges.select(
+    // reused 3× (degrees, wedges, closing join)
+    val e = undirected(edges, aCol, bCol).localCheckpoint(true)
+    triangles(e).agg(count(lit(1)).as("n_triangles"))
+  }
+
+  /** The canonical undirected edge set `(u, v)`: u < v, self-loops and
+    * duplicates dropped.
+    */
+  private def undirected(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    edges.select(
         least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") < col("v")).distinct()
-      .localCheckpoint(true) // reused 3× (degrees, wedges, closing join)
-    val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
+
+  /** `(x, d)`: the degree of every node of a canonical edge set. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
       .groupBy(col("x")).agg(count(lit(1)).as("d"))
+
+  /** Every triangle of a canonical edge set exactly once, as `(a, n1, n2)`
+    * with `a` its lowest-(degree, id) corner and n1 < n2: the
+    * degree-ordered wedge enumeration of [[triangleCount]], closed
+    * against the edge set by one hash join.
+    */
+  private def triangles(e: DataFrame): DataFrame = {
+    val deg = degrees(e)
     // orient each edge toward the higher (degree, id) endpoint
     val oriented = e
       .join(deg.select(col("x").as("u"), col("d").as("du")), Seq("u"))
@@ -430,7 +361,7 @@ object Graph {
     val wedges = w1.join(w2, Seq("a")).filter(col("n1") < col("n2"))
     wedges
       .join(e, wedges("n1") === e("u") && wedges("n2") === e("v"))
-      .agg(count(lit(1)).as("n_triangles"))
+      .select(col("a"), col("n1"), col("n2"))
   }
 
   /** HITS hubs-and-authorities over a directed edge list, in EXACT
@@ -474,7 +405,6 @@ object Graph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)
-    var normPass = 0
     def normalized(raw: DataFrame): DataFrame = {
       // raw: (node, raw) for nodes that RECEIVED mass this pass. The
       // state is CHECKPOINTED before use: it is read twice (the max
@@ -496,12 +426,8 @@ object Graph {
       // join computed per row (raw sums are >= 0, so long division in
       // the driver and Spark's `div` agree). An empty raw frame leaves
       // the metric null: scale 1, zero rows either way.
-      normPass += 1
-      val obs = org.apache.spark.sql.Observation(s"hits_norm_$normPass")
-      val st = raw.observe(obs, max(col("raw")).as("mx"))
-        .localCheckpoint(true)
-      val mxV = Option(obs.get("mx")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val scale = math.max(mxV / unit, 1L)
+      val (st, mx) = Observe.checkpointed(raw, max(col("raw")))
+      val scale = math.max(mx / unit, 1L)
       st.select(col("node"), expr(s"raw div ${scale}L").as("score"))
     }
     var hubs = nodes.select(col("node"), lit(unit).as("score"))
@@ -557,10 +483,7 @@ object Graph {
     */
   def modularity(edges: DataFrame, aCol: String, bCol: String,
                  labels: DataFrame, nodeCol: String, labelCol: String): DataFrame = {
-    val e = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") < col("v")).distinct()
+    val e = undirected(edges, aCol, bCol)
     val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("__l"))
     val tagged = e
       .join(lab.toDF("u", "__lu"), Seq("u"), "left")
@@ -626,11 +549,8 @@ object Graph {
                      maxCenterDegree: Int = 10000,
                      excludeExisting: Boolean = true): DataFrame = {
     require(maxCenterDegree >= 2, "centers need at least two neighbors")
-    val e = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") < col("v")).distinct()
-      .localCheckpoint(true) // reused: degrees, wedges, exclusion join
+    // reused: degrees, wedges, exclusion join
+    val e = undirected(edges, aCol, bCol).localCheckpoint(true)
     val dir = e.select(col("u").as("c"), col("v").as("n"))
       .unionAll(e.select(col("v").as("c"), col("u").as("n")))
     val deg = dir.groupBy(col("c")).agg(count(lit(1)).as("d"))
@@ -675,13 +595,9 @@ object Graph {
     */
   def degreeAssortativity(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val e = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") < col("v")).distinct()
-      .localCheckpoint(true) // reused: degrees + the two endpoint joins
-    val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
-      .groupBy(col("x")).agg(count(lit(1)).as("d"))
+    // reused: degrees + the two endpoint joins
+    val e = undirected(edges, aCol, bCol).localCheckpoint(true)
+    val deg = degrees(e)
     val du = col("du").cast(dec)
     val dv = col("dv").cast(dec)
     val j = e
@@ -725,27 +641,10 @@ object Graph {
     *         zero-triangle nodes included (coeff 0)
     */
   def localClustering(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val e = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") < col("v")).distinct()
-      .localCheckpoint(true) // reused 3×: degrees, wedges, closing join
-    val deg = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
-      .groupBy(col("x")).agg(count(lit(1)).as("d"))
-    val oriented = e
-      .join(deg.select(col("x").as("u"), col("d").as("du")), Seq("u"))
-      .join(deg.select(col("x").as("v"), col("d").as("dv")), Seq("v"))
-      .select(
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-          struct(col("u").as("a"), col("v").as("b")))
-          .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .repartition(col("a")) // both wedge sides share this one exchange
-    val w1 = oriented.select(col("a"), col("b").as("n1"))
-    val w2 = oriented.select(col("a"), col("b").as("n2"))
-    val wedges = w1.join(w2, Seq("a")).filter(col("n1") < col("n2"))
-    val tri = wedges
-      .join(e, wedges("n1") === e("u") && wedges("n2") === e("v"))
+    // reused 3×: degrees, wedges, closing join
+    val e = undirected(edges, aCol, bCol).localCheckpoint(true)
+    val deg = degrees(e)
+    val tri = triangles(e)
       .select(explode(array(col("a"), col("n1"), col("n2"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
     deg.filter(col("d") >= 2)
@@ -807,48 +706,13 @@ object Graph {
     * aggregation. State checkpoints per round (the [[hits]] lesson:
     * the double-read would otherwise double lineage). maxHops is the
     * honest knob — frontier volume, not data size, bounds each round.
+    * It is [[seedDistances]]' frontier, run under one constant seed key.
     */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, seedCol: String,
-                   maxHops: Int): DataFrame = {
-    require(maxHops >= 1 && maxHops <= 16, s"maxHops out of range: $maxHops")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src")).localCheckpoint(true)
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
-      .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    // frontier BFS (r11): unit weights settle a node's distance the round
-    // it is first reached, so each round expands ONLY last round's new
-    // nodes — the same fixpoint as full min-lattice relaxation with
-    // strictly less join work (the frontier shrinks; the state only grows)
-    var frontier = dist
-    var hop = 1
-    var exhausted = false
-    while (hop <= maxHops && !exhausted) {
-      val reached = e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node")).distinct()
-      // early exit on an empty frontier (r12, ADVICE): the fixpoint is
-      // reached, so the remaining rounds would only burn checkpoint jobs.
-      // The size rides the checkpoint job itself as an Observation metric
-      // (the connectedComponents r14 pattern) — no separate probe action.
-      val obs = org.apache.spark.sql.Observation(s"bfs_frontier_$hop")
-      frontier = reached
-        .join(dist.select(col("node")), Seq("node"), "left_anti")
-        .select(col("node"), lit(hop.toLong).as("dist"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      if (obs.get("n").asInstanceOf[Long] == 0L) exhausted = true
-      // the settled state stays a LAZY union of the per-hop checkpointed
-      // frontiers (≤ maxHops flat branches): re-materializing the whole
-      // growing state every hop cost one extra job AND O(hops × state)
-      // materialized bytes, vs O(state) total for the union view (r14)
-      else dist = dist.unionByName(frontier)
-      hop += 1
-    }
-    dist
-  }
+                   maxHops: Int): DataFrame =
+    seedDistances(edges, srcCol, dstCol, seeds, seedCol, lit(0L), maxHops)
+      .select(col("node"), col("dist"))
 
   /** Bounded-hop closeness centrality for a SEED SET — per seed, run
     * [[bfsDistances]]' confluent min-relaxation carrying the seed key,
@@ -880,7 +744,7 @@ object Graph {
   def closenessCentrality(edges: DataFrame, srcCol: String, dstCol: String,
                           seeds: DataFrame, seedCol: String,
                           maxHops: Int): DataFrame = {
-    val dist = seedDistances(edges, srcCol, dstCol, seeds, seedCol, maxHops)
+    val dist = seedDistances(edges, srcCol, dstCol, seeds, seedCol, col("node"), maxHops)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val agg = dist.groupBy(col("seed")).agg(
       count(lit(1)).as("n_reached"),
@@ -897,21 +761,23 @@ object Graph {
   }
 
   /** The per-seed frontier-BFS distance state shared by
-    * [[closenessCentrality]] and [[eccentricity]] (r12 refactor):
+    * [[bfsDistances]], [[closenessCentrality]] and [[eccentricity]]:
     * `(seed, node, dist)` for every node within `maxHops` of each
     * seed, exact integer min-lattice distances, eager per-round
-    * checkpoints, early exit on an empty frontier.
+    * checkpoints, early exit on an empty frontier. `seed` is the
+    * `seedKey` expression over the seed `node` column: the node itself
+    * gives one ball per seed, a constant one ball around the whole set.
     */
   private def seedDistances(edges: DataFrame, srcCol: String, dstCol: String,
-                            seeds: DataFrame, seedCol: String,
+                            seeds: DataFrame, seedCol: String, seedKey: Column,
                             maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 16, s"maxHops out of range: $maxHops")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .repartition(col("src")).localCheckpoint(true)
-    var dist = seeds.select(col(seedCol).as("seed")).distinct()
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
+    var dist = seeds.select(col(seedCol).as("node")).distinct()
+      .select(seedKey.as("seed"), col("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
     // frontier BFS: with unit weights a node's distance is final the round
     // it is first reached, so each round expands ONLY last round's new
@@ -924,18 +790,16 @@ object Graph {
       val reached = e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("seed"), col("dst").as("node")).distinct()
       // early exit once every seed's ball is exhausted (r12, ADVICE) —
-      // the size rides the checkpoint job as an Observation metric (the
-      // connectedComponents r14 pattern), no separate probe action
-      val obs = org.apache.spark.sql.Observation(s"seed_frontier_$hop")
-      frontier = reached
+      // the size rides the checkpoint job, no separate probe action
+      val (next, n) = Observe.checkpointed(reached
         .join(dist.select(col("seed"), col("node")), Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(hop.toLong).as("dist"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      if (obs.get("n").asInstanceOf[Long] == 0L) exhausted = true
-      // lazy union of checkpointed per-hop frontiers — see
-      // [[bfsDistances]] (r14): one fewer job per hop, O(state) instead
-      // of O(hops × state) materialized bytes
+        .select(col("seed"), col("node"), lit(hop.toLong).as("dist")), count(lit(1)))
+      frontier = next
+      if (n == 0L) exhausted = true
+      // the settled state stays a LAZY union of the per-hop checkpointed
+      // frontiers (≤ maxHops flat branches): re-materializing the whole
+      // growing state every hop cost one extra job AND O(hops × state)
+      // materialized bytes, vs O(state) total for the union view (r14)
       else dist = dist.unionByName(frontier)
       hop += 1
     }
@@ -964,7 +828,7 @@ object Graph {
   def eccentricity(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, seedCol: String,
                    maxHops: Int): DataFrame = {
-    val dist = seedDistances(edges, srcCol, dstCol, seeds, seedCol, maxHops)
+    val dist = seedDistances(edges, srcCol, dstCol, seeds, seedCol, col("node"), maxHops)
     dist.groupBy(col("seed")).agg(
         count(lit(1)).as("n_reached"),
         max(col("dist")).as("eccentricity"))
@@ -999,7 +863,7 @@ object Graph {
     * forward join key) and once by dst (the backward join key); each
     * of the ≤ 2·maxHops rounds joins node-level (seed × frontier)
     * state co-partitioned, with eager checkpoints truncating lineage
-    * ([[bfsDistances]] discipline) and early exit on an exhausted
+    * ([[seedDistances]] discipline) and early exit on an exhausted
     * frontier. State is (seeds × reached) — a BOUNDED seed panel, the
     * [[closenessCentrality]] contract.
     */
@@ -1027,20 +891,17 @@ object Graph {
     var h = 1
     while (h <= maxHops && !exhausted) {
       val prev = levels.last
-      // level size rides the checkpoint job as an Observation metric
-      // (the connectedComponents r14 pattern), no separate probe action
-      val obs = org.apache.spark.sql.Observation(s"bc_level_$h")
-      val next = e.join(prev.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("seed"), col("dst").as("node"))
-        .agg(sum(col("sig")).as("sig"))
-        .join(seen, Seq("seed", "node"), "left_anti")
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      if (obs.get("n").asInstanceOf[Long] == 0L) exhausted = true
+      // level size rides the checkpoint job, no separate probe action
+      val (next, n) = Observe.checkpointed(
+        e.join(prev.withColumnRenamed("node", "src"), Seq("src"))
+          .groupBy(col("seed"), col("dst").as("node"))
+          .agg(sum(col("sig")).as("sig"))
+          .join(seen, Seq("seed", "node"), "left_anti"), count(lit(1)))
+      if (n == 0L) exhausted = true
       else {
         levels += next
         // lazy union of checkpointed levels (≤ maxHops branches) — the
-        // bfsDistances r14 discipline: one fewer job per level, no
+        // seedDistances r14 discipline: one fewer job per level, no
         // re-materialization of the growing visited set
         seen = seen.unionByName(next.select(col("seed"), col("node")))
       }

@@ -1,6 +1,9 @@
 package graft.ops
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Zero-cost pipeline observability: attach named aggregate metrics to a
@@ -11,6 +14,12 @@ import org.apache.spark.sql.functions._
   * Wraps Spark's `Observation` API (engine extension, SURVEY §2.11); the
   * reference's validation surface (`config/validation.py`) runs eager
   * separate queries instead — correct on pandas, unaffordable at scale.
+  *
+  * It also holds the one iteration policy of the iterative operators:
+  * the observed checkpoint (a convergence metric riding the job that
+  * materializes a generation), the checkpoint cadence of fixed-round
+  * loops, the fixpoint loop with its backstop and rounds record, and
+  * the release of cached or checkpointed frames on every exit.
   */
 object Observe {
 
@@ -22,6 +31,97 @@ object Observe {
     require(metrics.nonEmpty, "need at least one metric expression")
     val obs = Observation(name)
     (df.observe(obs, metrics.head, metrics.tail: _*), obs)
+  }
+
+  /** Materialize `df` as an eager `localCheckpoint` and read one
+    * long-valued aggregate `metric` over its rows, computed by that same
+    * job (a null result, such as the max of no rows, reads as 0). Only
+    * the `keep` columns are materialized, all when none are named.
+    */
+  def checkpointed(df: DataFrame, metric: Column, keep: String*): (DataFrame, Long) = {
+    val obs = Observation()
+    val observed = df.observe(obs, metric.as("m"))
+    val cp = atCaller(df)(
+      (if (keep.isEmpty) observed else observed.select(keep.map(col): _*)).localCheckpoint(true))
+    (cp, Option(obs.get("m")).fold(0L)(_.asInstanceOf[Number].longValue))
+  }
+
+  /** Round `i` of `n` in a fixed-round loop: `df` checkpointed every third
+    * round and on the last, else as is, so lineage stays bounded without a
+    * materialization job every round.
+    */
+  def cadence(df: DataFrame, i: Int, n: Int): DataFrame =
+    if (i % 3 == 0 || i == n) atCaller(df)(df.localCheckpoint(true)) else df
+
+  /** Rounds the last run of each named [[fixpoint]] loop took: a
+    * measurement-only record for the ScaleProbe protocol, last writer
+    * wins, never read by operators.
+    */
+  private[graft] val rounds = TrieMap.empty[String, Int]
+
+  /** The fixpoint loop: from `init`, each round `step` builds and
+    * checkpoints the next generation and returns it with the round's
+    * metric; the loop stops at the first round where
+    * `converged(previous metric, metric)` holds, taking `start` as the
+    * metric of `init` (an `init` whose metric is 0 is already the
+    * fixpoint). Each superseded generation is released as soon as the
+    * next one is materialized. Raises once `maxRounds` rounds have not
+    * converged, rather than return a result that is not the fixpoint.
+    */
+  def fixpoint(name: String, init: DataFrame, start: Long, maxRounds: Int)(
+      step: DataFrame => (DataFrame, Long))(converged: (Long, Long) => Boolean): DataFrame = {
+    var cur = init
+    var prev = start
+    var done = start == 0L
+    var n = 0
+    while (!done) {
+      if (n == maxRounds) {
+        release(cur)
+        throw new IllegalStateException(
+          s"$name did not converge within $maxRounds rounds (depth exceeds the backstop)")
+      }
+      val (next, m) = step(cur)
+      release(cur)
+      cur = next
+      done = converged(prev, m)
+      prev = m
+      n += 1
+    }
+    rounds(name) = n
+    cur
+  }
+
+  /** Run `body`, then release `frames` on every exit, normal or thrown. */
+  def releasing[T](frames: DataFrame*)(body: => T): T =
+    try body finally frames.foreach(release)
+
+  /** Free `df`'s blocks: a persisted frame leaves the cache, and the
+    * blocks of a local checkpoint are dropped (`unpersist` alone leaves
+    * those to the ContextCleaner). A checkpoint cannot be recomputed, so
+    * release one only once nothing will read it again.
+    */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd.unpersist(blocking = false); ()
+    case _ => df.unpersist(false); ()
+  }
+
+  /** Run `body` with the call site of the jobs it starts set to the first
+    * caller outside this object, so they read `localCheckpoint at
+    * Graph.scala:141` (in the UI and in listener events) rather than name
+    * this helper. A call site the caller already set is kept.
+    */
+  private def atCaller[T](df: DataFrame)(body: => T): T = {
+    val sc = df.sparkSession.sparkContext
+    val caller = Thread.currentThread.getStackTrace.find { f =>
+      val c = f.getClassName
+      c.startsWith("graft.") && !c.startsWith("graft.ops.Observe")
+    }
+    caller match {
+      case Some(f) if sc.getLocalProperty("callSite.short") == null =>
+        sc.setCallSite(s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}")
+        try body finally sc.clearCallSite()
+      case _ => body
+    }
   }
 
   /** Standard data-quality bundle for a set of columns: row count plus

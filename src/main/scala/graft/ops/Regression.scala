@@ -604,13 +604,11 @@ object Regression {
         outcome.cast("double").as("__o"))
       .filter(col("__y").isNotNull && col("__x").isNotNull && col("__o").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unpersist on the throw path too (r15, ADVICE r14): the fit runs
-    // driver-side sweeps that can throw, and a leaked entry would both
-    // hold memory and be silently REUSED by CacheManager's plan-keyed
-    // dedup for the rest of the session
-    val (b0n, b1n, degenerate) =
-      try logisticFitNano(base, iterations)
-      catch { case e: Throwable => base.unpersist(false); throw e }
+    // released on every exit (r15, ADVICE r14): the fit runs driver-side
+    // sweeps that can throw, and a leaked entry would both hold memory and
+    // be silently REUSED by CacheManager's plan-keyed dedup for the rest
+    // of the session; the lazy aggregation below reads the source
+    val (b0n, b1n, degenerate) = Observe.releasing(base)(logisticFitNano(base, iterations))
     val b0 = b0n.toDouble / 1e9
     val b1 = b1n.toDouble / 1e9
     val p = lit(1.0) / (lit(1.0) + exp(-(lit(b0) + lit(b1) * col("__x"))))
@@ -625,7 +623,6 @@ object Regression {
         .otherwise(lit(0).cast(dec))).as("__cy"),
       sum(when(!isT, nano(lit(1.0) / (lit(1.0) - pc)))
         .otherwise(lit(0).cast(dec))).as("__cw"))
-    base.unpersist(false)
     def d(c: String): Column = col(c).cast("double")
     val mu1 = d("__ty") / d("__tw")
     val mu0 = d("__cy") / d("__cw")
@@ -672,34 +669,30 @@ object Regression {
         x.cast("double").as("__x"))
       .filter(col("__y").isNotNull && col("__x").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unpersist on the throw path too (r15, ADVICE r14): the fit runs
-    // driver-side sweeps that can throw, and a leaked entry would both
-    // hold memory and be silently REUSED by CacheManager's plan-keyed
-    // dedup for the rest of the session
-    val (b0n, b1n, degenerate) =
-      try logisticFitNano(base, iterations)
-      catch { case e: Throwable => base.unpersist(false); throw e }
-    require(!degenerate,
-      "positivityAudit: the propensity fit is degenerate (constant x?) — " +
-        "an overlap audit of an untrained model would be vacuous")
-    val b0 = b0n.toDouble / 1e9
-    val b1 = b1n.toDouble / 1e9
-    val p = lit(1.0) / (lit(1.0) + exp(-(lit(b0) + lit(b1) * col("__x"))))
-    val pc = least(greatest(p, lit(0.01)), lit(0.99))
-    val g = base
-      .select(col("__y"), round(pc * lit(1e6), 0).cast("long").as("__pm"))
-      .select(col("__y"),
-        least(expr(s"(__pm * $bins) div 1000000"), lit((bins - 1).toLong))
-          .as("bin"))
-      .groupBy(col("bin")).agg(
-        sum(when(col("__y") === 1.0, 1L).otherwise(0L)).as("n_treated"),
-        sum(when(col("__y") === 1.0, 0L).otherwise(1L)).as("n_control"))
-      // materialize now (tiny: ≤ bins rows) while base's cache is still
-      // hot — g feeds BOTH the per-bin output and the grand-total pass,
-      // and the eager checkpoint means neither recomputes the events
-      // aggregation after base unpersists below
-      .localCheckpoint(true)
-    base.unpersist(false)
+    // released on every exit (r15, ADVICE r14), the contract error included
+    val g = Observe.releasing(base) {
+      val (b0n, b1n, degenerate) = logisticFitNano(base, iterations)
+      require(!degenerate,
+        "positivityAudit: the propensity fit is degenerate (constant x?) — " +
+          "an overlap audit of an untrained model would be vacuous")
+      val b0 = b0n.toDouble / 1e9
+      val b1 = b1n.toDouble / 1e9
+      val p = lit(1.0) / (lit(1.0) + exp(-(lit(b0) + lit(b1) * col("__x"))))
+      val pc = least(greatest(p, lit(0.01)), lit(0.99))
+      base
+        .select(col("__y"), round(pc * lit(1e6), 0).cast("long").as("__pm"))
+        .select(col("__y"),
+          least(expr(s"(__pm * $bins) div 1000000"), lit((bins - 1).toLong))
+            .as("bin"))
+        .groupBy(col("bin")).agg(
+          sum(when(col("__y") === 1.0, 1L).otherwise(0L)).as("n_treated"),
+          sum(when(col("__y") === 1.0, 0L).otherwise(1L)).as("n_control"))
+        // materialize now (tiny: ≤ bins rows) while base's cache is still
+        // hot — g feeds BOTH the per-bin output and the grand-total pass,
+        // and the eager checkpoint means neither recomputes the events
+        // aggregation once base is released
+        .localCheckpoint(true)
+    }
     val tot = g.agg(sum(col("n_treated")).as("__nt_all"),
       sum(col("n_control")).as("__nc_all"))
     def share(cnt: String, all: String): Column =
@@ -764,44 +757,40 @@ object Regression {
       .filter((col("__y").isNotNull +: col("__x").isNotNull +:
         cNames.map(col(_).isNotNull)).reduce(_ && _))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unpersist on the throw path too (r15, ADVICE r14): the fit runs
-    // driver-side sweeps that can throw, and a leaked entry would both
-    // hold memory and be silently REUSED by CacheManager's plan-keyed
-    // dedup for the rest of the session
-    val (b0n, b1n, degenerate) =
-      try logisticFitNano(base, iterations)
-      catch { case e: Throwable => base.unpersist(false); throw e }
-    require(!degenerate,
-      "covariateBalance: degenerate propensity fit — weighted balance " +
-        "of an untrained model would be vacuous")
-    val p = lit(1.0) / (lit(1.0) +
-      exp(-(lit(b0n.toDouble / 1e9) + lit(b1n.toDouble / 1e9) * col("__x"))))
-    val pc = least(greatest(p, lit(0.01)), lit(0.99))
-    val isT = col("__y") === 1.0
-    val w = when(isT, lit(1.0) / pc).otherwise(lit(1.0) / (lit(1.0) - pc))
-    def arm(t: Boolean, c: Column): Column = if (t) when(isT, c) else when(!isT, c)
-    def zsum(t: Boolean, c: Column, name: String): Column =
-      sum(coalesce(arm(t, c), lit(0).cast(dec))).as(name)
-    val aggs = covariates.zip(cNames).zipWithIndex.flatMap { case ((_, n), i) =>
-      val c = col(n)
-      Seq(
-        sum(when(isT, 1L).otherwise(0L)).as(s"__nt$i"),
-        sum(when(!isT, 1L).otherwise(0L)).as(s"__nc$i"),
-        zsum(t = true, nano(c), s"__s1t$i"),
-        zsum(t = true, nano(c * c), s"__s2t$i"),
-        zsum(t = false, nano(c), s"__s1c$i"),
-        zsum(t = false, nano(c * c), s"__s2c$i"),
-        zsum(t = true, nano(w), s"__wt$i"),
-        zsum(t = true, nano(w * c), s"__w1t$i"),
-        zsum(t = true, nano(w * c * c), s"__w2t$i"),
-        zsum(t = false, nano(w), s"__wc$i"),
-        zsum(t = false, nano(w * c), s"__w1c$i"),
-        zsum(t = false, nano(w * c * c), s"__w2c$i"))
+    // released on every exit (r15, ADVICE r14), the contract error included
+    val wide = Observe.releasing(base) {
+      val (b0n, b1n, degenerate) = logisticFitNano(base, iterations)
+      require(!degenerate,
+        "covariateBalance: degenerate propensity fit — weighted balance " +
+          "of an untrained model would be vacuous")
+      val p = lit(1.0) / (lit(1.0) +
+        exp(-(lit(b0n.toDouble / 1e9) + lit(b1n.toDouble / 1e9) * col("__x"))))
+      val pc = least(greatest(p, lit(0.01)), lit(0.99))
+      val isT = col("__y") === 1.0
+      val w = when(isT, lit(1.0) / pc).otherwise(lit(1.0) / (lit(1.0) - pc))
+      def arm(t: Boolean, c: Column): Column = if (t) when(isT, c) else when(!isT, c)
+      def zsum(t: Boolean, c: Column, name: String): Column =
+        sum(coalesce(arm(t, c), lit(0).cast(dec))).as(name)
+      val aggs = covariates.zip(cNames).zipWithIndex.flatMap { case ((_, n), i) =>
+        val c = col(n)
+        Seq(
+          sum(when(isT, 1L).otherwise(0L)).as(s"__nt$i"),
+          sum(when(!isT, 1L).otherwise(0L)).as(s"__nc$i"),
+          zsum(t = true, nano(c), s"__s1t$i"),
+          zsum(t = true, nano(c * c), s"__s2t$i"),
+          zsum(t = false, nano(c), s"__s1c$i"),
+          zsum(t = false, nano(c * c), s"__s2c$i"),
+          zsum(t = true, nano(w), s"__wt$i"),
+          zsum(t = true, nano(w * c), s"__w1t$i"),
+          zsum(t = true, nano(w * c * c), s"__w2t$i"),
+          zsum(t = false, nano(w), s"__wc$i"),
+          zsum(t = false, nano(w * c), s"__w1c$i"),
+          zsum(t = false, nano(w * c * c), s"__w2c$i"))
+      }
+      // single-row result: materialize eagerly while base's cache is hot so
+      // the returned lazy plan never re-reads the released source
+      base.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
     }
-    // single-row result: materialize eagerly while base's cache is hot so
-    // the returned lazy plan never re-reads the (now-unpersisted) source
-    val wide = base.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
-    base.unpersist(false)
     def d(n: String): Column = col(n).cast("double") / lit(1e9)
     def smd(s1t: String, s2t: String, dt: Column,
             s1c: String, s2c: String, dc: Column): Column = {
@@ -880,27 +869,24 @@ object Regression {
         outcome.cast("double").as("__o"))
       .filter(col("__y").isNotNull && col("__x").isNotNull && col("__o").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unpersist on the throw path too (r15, ADVICE r14): the fit runs
-    // driver-side sweeps that can throw, and a leaked entry would both
-    // hold memory and be silently REUSED by CacheManager's plan-keyed
-    // dedup for the rest of the session
-    val (b0n, b1n, degenerate) =
-      try logisticFitNano(base, iterations)
-      catch { case e: Throwable => base.unpersist(false); throw e }
     // one scan: per-arm OLS moments (n, Σx, Σo, Σxo, Σx²), nano-exact
     val isT = col("__y") === 1.0
     def armSum(t: Boolean, c: Column, name: String): Column =
       sum(when(if (t) isT else !isT, nano(c)).otherwise(lit(0).cast(dec)))
         .as(name)
-    val m = base.agg(
-      sum(when(isT, 1L).otherwise(0L)).as("n1"),
-      sum(when(!isT, 1L).otherwise(0L)).as("n0"),
-      armSum(t = true, col("__x"), "sx1"), armSum(t = true, col("__o"), "so1"),
-      armSum(t = true, col("__x") * col("__o"), "sxo1"),
-      armSum(t = true, col("__x") * col("__x"), "sxx1"),
-      armSum(t = false, col("__x"), "sx0"), armSum(t = false, col("__o"), "so0"),
-      armSum(t = false, col("__x") * col("__o"), "sxo0"),
-      armSum(t = false, col("__x") * col("__x"), "sxx0")).head()
+    // released on every exit (r15, ADVICE r14): the fit runs driver-side
+    // sweeps that can throw; the lazy influence scan below reads the source
+    val ((b0n, b1n, degenerate), m) = Observe.releasing(base) {
+      (logisticFitNano(base, iterations), base.agg(
+        sum(when(isT, 1L).otherwise(0L)).as("n1"),
+        sum(when(!isT, 1L).otherwise(0L)).as("n0"),
+        armSum(t = true, col("__x"), "sx1"), armSum(t = true, col("__o"), "so1"),
+        armSum(t = true, col("__x") * col("__o"), "sxo1"),
+        armSum(t = true, col("__x") * col("__x"), "sxx1"),
+        armSum(t = false, col("__x"), "sx0"), armSum(t = false, col("__o"), "so0"),
+        armSum(t = false, col("__x") * col("__o"), "sxo0"),
+        armSum(t = false, col("__x") * col("__x"), "sxx0")).head())
+    }
     val n1 = m.getLong(0)
     val n0 = m.getLong(1)
     def dv(i: Int): Double =
@@ -935,7 +921,6 @@ object Regression {
       sum(nano(psi)).as("__ps"),
       sum(nano(psi * psi)).as("__ps2"),
       sum(nano(mu1 - mu0)).as("__reg"))
-    base.unpersist(false)
     def d(c: String): Column = col(c).cast("double") / lit(1e9)
     val nd = col("n").cast("double")
     val mean = d("__ps") / nd
@@ -995,13 +980,9 @@ object Regression {
       .filter(col("__id").isNotNull && col("__y").isNotNull &&
         col("__x").isNotNull && col("__o").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unpersist on the throw path too (r15, ADVICE r14): the fit runs
-    // driver-side sweeps that can throw, and a leaked entry would both
-    // hold memory and be silently REUSED by CacheManager's plan-keyed
-    // dedup for the rest of the session
-    val (b0n, b1n, degenerate) =
-      try logisticFitNano(base, iterations)
-      catch { case e: Throwable => base.unpersist(false); throw e }
+    // released on every exit (r15, ADVICE r14): the fit runs driver-side
+    // sweeps that can throw; the lazy plan below reads the source
+    val (b0n, b1n, degenerate) = Observe.releasing(base)(logisticFitNano(base, iterations))
     val b0 = b0n.toDouble / 1e9
     val b1 = b1n.toDouble / 1e9
     val p = lit(1.0) / (lit(1.0) + exp(-(lit(b0) + lit(b1) * col("__x"))))
@@ -1016,7 +997,6 @@ object Regression {
         min_by(nano(col("__o")), col("__id")).as("rep_o"))
     val totals = base.agg(
       count(lit(1)).as("n"), sum(when(isT, 1L).otherwise(0L)).as("n_treated"))
-    base.unpersist(false)
     // nearest control pm for every treated pm: one ordered window over
     // the bounded grid; controls sort before treated at equal pm
     // (false < true) so a zero-distance match IS the previous row
@@ -1087,7 +1067,6 @@ object Regression {
         y.cast("double").as("__y"), x.cast("double").as("__x"))
       .filter(col("__i").isNotNull && col("__t").isNotNull &&
         col("__y").isNotNull && col("__x").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ent = base.groupBy(col("__i")).agg(count(lit(1)).as("__ni"),
       sum(nano(col("__y"))).as("__syi"), sum(nano(col("__x"))).as("__sxi"))
     val tim = base.groupBy(col("__t")).agg(count(lit(1)).as("__nt"),
@@ -1107,7 +1086,6 @@ object Regression {
     val counts = base.agg(count(lit(1)).as("n"),
       countDistinct(col("__i")).as("n_entities"),
       countDistinct(col("__t")).as("n_periods"))
-    base.unpersist(false)
     def d(c: String): Column = col(c).cast("double") / lit(1e9)
     val beta = d("__sxy") / d("__sxx")
     val dof = col("n").cast("double") - col("n_entities").cast("double") -
@@ -1153,7 +1131,6 @@ object Regression {
     val base = df.select(id.cast("string").as("__id"),
         x.cast("double").as("__x"), y.cast("double").as("__y"))
       .filter(col("__id").isNotNull && col("__x").isNotNull && col("__y").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val samp = base
       .withColumn("__h", md5(concat(lit("ransac:"), col("__id"))))
       .orderBy(col("__h"), col("__id")).limit(2 * candidates)
@@ -1181,7 +1158,6 @@ object Regression {
         sum(nano(col("__x") * col("__y"))).as("__sxy"),
         sum(nano(col("__x") * col("__x"))).as("__sxx"))
     val totals = base.agg(count(lit(1)).as("n"))
-    base.unpersist(false)
     def d(c: String): Column = col(c).cast("double") / lit(1e9)
     val md = col("__m").cast("double")
     val det = md * d("__sxx") - d("__sx") * d("__sx")
@@ -1207,13 +1183,9 @@ object Regression {
       // the Newton loop aggregates base once per iteration — cache the
       // 16-byte (y, x) projection so the input scans once, not 4×
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unpersist on the throw path too (r15, ADVICE r14): the fit runs
-    // driver-side sweeps that can throw, and a leaked entry would both
-    // hold memory and be silently REUSED by CacheManager's plan-keyed
-    // dedup for the rest of the session
-    val (b0n, b1n, degenerate) =
-      try logisticFitNano(base, iterations)
-      catch { case e: Throwable => base.unpersist(false); throw e }
+    // released on every exit (r15, ADVICE r14): the fit runs driver-side
+    // sweeps that can throw; the lazy plan below reads the source
+    val (b0n, b1n, degenerate) = Observe.releasing(base)(logisticFitNano(base, iterations))
     val b0 = b0n.toDouble / 1e9
     val b1 = b1n.toDouble / 1e9
     val z = lit(b0) + lit(b1) * col("__x")
@@ -1223,11 +1195,6 @@ object Regression {
       count(lit(1)).as("n"),
       sum(col("__y").cast("long")).as("n_pos"),
       sum(nano(ll)).as("__ll"))
-    // drop the training cache before returning (the family discipline:
-    // a leaked entry would also be REUSED by CacheManager's plan-keyed
-    // dedup on a rerun, turning cold timings warm); the lazy final
-    // aggregation then pays the one input scan it always paid
-    base.unpersist(false)
     val ok = lit(!degenerate)
     fin.select(col("n"), col("n_pos"),
       when(ok, round(lit(b0), 6)).as("b0"),
@@ -1352,21 +1319,20 @@ object Regression {
       .filter(col("__w").isNotNull && col("__l").isNotNull && col("__w") =!= col("__l"))
       .groupBy(col("__w"), col("__l")).agg(count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // hard bounded-panel contract (r12): count the panel distributed,
-    // BEFORE anything reaches the driver — a contract error, not an OOM
-    val nItems = cells.select(col("__w").as("__i"))
-      .union(cells.select(col("__l"))).distinct().count()
-    // the contract error is an EXPECTED exit path — release the cache
-    // entry on it too (the logisticNewton r15 discipline)
-    val wins: Array[(String, String, Long)] =
-      try {
-        require(nItems <= maxItems.toLong,
-          s"bradleyTerry materializes an items²-bounded duel table on the " +
-            s"driver; got $nItems distinct items (cap $maxItems). Aggregate " +
-            s"to a bounded panel (models, variants, players) first — raw " +
-            s"entity ids are not a panel.")
-        cells.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      } finally cells.unpersist(false)
+    // the contract error is an EXPECTED exit path — the cache entry is
+    // released on it too (the logisticNewton r15 discipline)
+    val wins: Array[(String, String, Long)] = Observe.releasing(cells) {
+      // hard bounded-panel contract (r12): count the panel distributed,
+      // BEFORE anything reaches the driver — a contract error, not an OOM
+      val nItems = cells.select(col("__w").as("__i"))
+        .union(cells.select(col("__l"))).distinct().count()
+      require(nItems <= maxItems.toLong,
+        s"bradleyTerry materializes an items²-bounded duel table on the " +
+          s"driver; got $nItems distinct items (cap $maxItems). Aggregate " +
+          s"to a bounded panel (models, variants, players) first — raw " +
+          s"entity ids are not a panel.")
+      cells.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    }
     val items = (wins.map(_._1) ++ wins.map(_._2)).distinct.sorted.toSeq
     val winTot: Map[String, Long] =
       wins.groupBy(_._1).map { case (i, ws) => i -> ws.map(_._3).sum }

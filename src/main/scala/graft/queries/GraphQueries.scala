@@ -688,7 +688,7 @@ object GraphQueries {
     * same confluent support-peel as chained CTEs with spare rounds
     * (the q_kcore convention — idempotent at the fixpoint, measured
     * depth 2-3 at sf0.001-0.1 vs 16 unrolled, matched to the engine's
-    * maxRounds=16 backstop so a deeper peel at a larger scale factor
+    * 16-round fixpoint backstop so a deeper peel at a larger scale factor
     * can never straddle engine-fixpoint vs oracle-depth), enumerating triangles
     * id-ordered where the engine goes degree-ordered: same triangle
     * set, provably, so hash equality certifies both the peel and the

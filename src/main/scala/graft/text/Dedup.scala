@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Observe
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -340,86 +341,68 @@ object Dedup {
     * Rounds needed ≤ graph diameter (dup clusters are shallow — a
     * handful of rounds in practice); each round is one join + one
     * groupBy-min, all hash-partitioned on the vertex id. Results are
-    * persisted per round and the loop exits early when no label
-    * changes, so lineage stays bounded. This is how pair-producing
-    * operators ([[minhashCandidatePairs]], [[ngramJaccardPairs]],
+    * checkpointed per round and the [[graft.ops.Observe.fixpoint]] loop
+    * exits when no label changes, so lineage stays bounded; it raises
+    * rather than return labels that have not converged within 20
+    * rounds (a diameter past 2^20 under pointer jumping). This is how
+    * pair-producing operators ([[minhashCandidatePairs]], [[ngramJaccardPairs]],
     * [[graft.text.Similarity.lshNearDupPairs]]) compose into
     * keep-one-per-cluster dedup at corpus scale.
     *
     * RETAINED STATE: the returned labels DataFrame is still
     * localCheckpoint-persisted (its lineage was truncated — it CANNOT be
-    * recomputed if unpersisted early). Callers should consume it and
-    * then `.unpersist()` it, or let [[dedupByPairs]] do exactly that.
+    * recomputed once released). Callers should consume it and then
+    * [[graft.ops.Observe.release]] it, or let [[dedupByPairs]] do exactly
+    * that.
     *
     * @return (v, label) — one row per vertex appearing in any edge
     */
-  /** Rounds the most recent [[connectedComponents]] call took to
-    * converge — a measurement-only diagnostic (the ScaleProbe scaling
-    * protocol reads it to pin the O(log diameter) claim with data).
-    * Last-writer-wins under concurrency; never consulted by operators.
-    */
-  @volatile private[graft] var lastComponentRounds: Int = -1
-
-  def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20): DataFrame = {
-    require(maxIter > 0, s"maxIter must be positive: $maxIter")
+  def connectedComponents(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val sym = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint (eager) after every round: iterative plans otherwise
-    // nest one join+agg per round and the optimizer/plan machinery blows
-    // up long before the data does. (On a real cluster prefer reliable
-    // `checkpoint` — executor loss under localCheckpoint forces a rerun.)
-    var labels = sym.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint(true)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val nbrMin = sym
-        .join(labels.select(col("v").as("dst"), col("label")), "dst")
-        .groupBy(col("src").as("v")).agg(min(col("label")).as("nbr_label"))
-      // prelim is checkpointed too: the pointer-jump self-join reads it
-      // on BOTH sides, and without materialization each side would
-      // re-execute the sym-join + groupBy-min subtree. It carries the
-      // round's starting label as __old so convergence is decidable
-      // inside the jump job (below) instead of by a separate join.
-      val prelim = labels.join(nbrMin, Seq("v"), "left")
-        .select(col("v"), col("label").as("__old"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
+    Observe.releasing(sym) {
+      // localCheckpoint (eager) after every round: iterative plans otherwise
+      // nest one join+agg per round and the optimizer/plan machinery blows
+      // up long before the data does. (On a real cluster prefer reliable
+      // `checkpoint` — executor loss under localCheckpoint forces a rerun.)
+      val init = sym.select(col("src").as("v")).distinct()
+        .withColumn("label", col("v"))
         .localCheckpoint(true)
-      // Pointer jump (path halving): follow label → label(label). Labels
-      // are always vertex ids, so the self-join resolves every row; this
-      // turns per-round propagation from one hop into doubling, making
-      // convergence O(log diameter) instead of O(diameter). The changed
-      // count rides the SAME job as an Observation metric (CollectMetrics
-      // evaluates during the checkpoint materialization), replacing the
-      // old per-round jumped⋈labels + limit(1).count() convergence job —
-      // one fewer shuffle + action per round for every components caller.
-      val obs = org.apache.spark.sql.Observation(s"cc_changed_$i")
-      val jumped = prelim
-        .join(prelim.select(col("v").as("label"), col("label").as("__ll")),
-          Seq("label"), "left")
-        .select(col("v"), col("__old"), coalesce(col("__ll"), col("label")).as("label"))
-        .observe(obs, coalesce(sum(when(col("label") =!= col("__old"), 1L)
-          .otherwise(0L)), lit(0L)).as("n_changed"))
-        .select(col("v"), col("label"))
-        .localCheckpoint(true)
-      val changed = obs.get("n_changed").asInstanceOf[Long] > 0
-      // release the superseded generations' checkpoint blocks eagerly
-      // (ContextCleaner would get there, but not before maxIter
-      // generations pile up on a long session)
-      labels.unpersist()
-      prelim.unpersist()
-      labels = jumped
-      converged = !changed
-      i += 1
+      // the round metric is the count of labels it changed; the seed
+      // labels' count is unknown (-1, never 0), so at least one round runs
+      Observe.fixpoint("connectedComponents", init, start = -1L, maxRounds = 20) { labels =>
+        val nbrMin = sym
+          .join(labels.select(col("v").as("dst"), col("label")), "dst")
+          .groupBy(col("src").as("v")).agg(min(col("label")).as("nbr_label"))
+        // prelim is checkpointed too: the pointer-jump self-join reads it
+        // on BOTH sides, and without materialization each side would
+        // re-execute the sym-join + groupBy-min subtree. It carries the
+        // round's starting label as __old so convergence is decidable
+        // inside the jump job (below) instead of by a separate join.
+        val prelim = labels.join(nbrMin, Seq("v"), "left")
+          .select(col("v"), col("label").as("__old"),
+            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
+          .localCheckpoint(true)
+        // Pointer jump (path halving): follow label → label(label). Labels
+        // are always vertex ids, so the self-join resolves every row; this
+        // turns per-round propagation from one hop into doubling, making
+        // convergence O(log diameter) instead of O(diameter). The changed
+        // count rides the SAME job (CollectMetrics evaluates during the
+        // checkpoint materialization), replacing the old per-round
+        // jumped⋈labels + limit(1).count() convergence job — one fewer
+        // shuffle + action per round for every components caller.
+        Observe.releasing(prelim) {
+          Observe.checkpointed(prelim
+            .join(prelim.select(col("v").as("label"), col("label").as("__ll")),
+              Seq("label"), "left")
+            .select(col("v"), col("__old"), coalesce(col("__ll"), col("label")).as("label")),
+            sum(when(col("label") =!= col("__old"), 1L).otherwise(0L)), "v", "label")
+        }
+      }((_, changed) => changed == 0L)
     }
-    sym.unpersist()
-    lastComponentRounds = i
-    labels
   }
 
   /** Keep-one-per-cluster dedup from a candidate-pair list: rows whose id
@@ -429,20 +412,19 @@ object Dedup {
     * The per-vertex labels checkpoint from [[connectedComponents]] is
     * released HERE, deterministically: the (smaller, id-only) losers set
     * is eagerly materialized as its own checkpoint first, then the full
-    * labels table is unpersisted — so what rides along with the returned
+    * labels table is released — so what rides along with the returned
     * lazy plan is only the compact losers table, not every vertex's
     * label. (That residual checkpoint is freed by the ContextCleaner once
     * the returned plan is no longer referenced.)
     */
   def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame,
-                   aCol: String = "id_a", bCol: String = "id_b",
-                   maxIter: Int = 20): DataFrame = {
-    val labels = connectedComponents(pairs, aCol, bCol, maxIter)
+                   aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
+    val labels = connectedComponents(pairs, aCol, bCol)
     val losers = labels
       .filter(col("v") =!= col("label"))
       .select(col("v").as(idCol))
       .localCheckpoint(true)
-    labels.unpersist()
+    Observe.release(labels)
     df.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -462,9 +444,8 @@ object Dedup {
     */
   def dedupByPairsKeepBest(df: DataFrame, idCol: String, pairs: DataFrame,
                            keepBy: Column,
-                           aCol: String = "id_a", bCol: String = "id_b",
-                           maxIter: Int = 20): DataFrame = {
-    val labels = connectedComponents(pairs, aCol, bCol, maxIter)
+                           aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
+    val labels = connectedComponents(pairs, aCol, bCol)
     val scored = labels
       .join(df.select(col(idCol).as("v"), keepBy.as("__keep")), Seq("v"))
     val winners = scored.groupBy(col("label"))
@@ -474,7 +455,7 @@ object Dedup {
       .join(winners, Seq("v"), "left_anti")
       .select(col("v").as(idCol))
       .localCheckpoint(true)
-    labels.unpersist()
+    Observe.release(labels)
     df.join(losers, Seq(idCol), "left_anti")
   }
 

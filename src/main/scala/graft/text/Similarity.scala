@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Observe
+
 /** Embedding similarity search.
   *
   * Two paths, same contract:
@@ -717,11 +719,14 @@ object Similarity {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = base.count()
-    require(n <= maxVectors,
-      s"hubnessAudit is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
-        s"$maxVectors — sample upstream (the audit posture) or use the " +
-        "banded LSH near-dup path for full-corpus work")
+    // released on every exit, the contract error included
+    Observe.releasing(base) {
+      val n = base.count()
+      require(n <= maxVectors,
+        s"hubnessAudit is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
+          s"$maxVectors — sample upstream (the audit posture) or use the " +
+          "banded LSH near-dup path for full-corpus work")
+    }
     val edges = bruteForceTopK(base, base, idCol, vecCol, k)
     val indeg = base.select(col(idCol).as("__id"))
       .join(edges.groupBy(col("neighbor_id")).agg(count(lit(1)).as("__d")),
@@ -734,7 +739,6 @@ object Similarity {
       sum(col("__d").cast(dec)).as("__s1"),
       sum((col("__d") * col("__d")).cast(dec)).as("__s2"),
       sum((col("__d") * col("__d") * col("__d")).cast(dec)).as("__s3"))
-    base.unpersist(false)
     val nd = col("n_vectors").cast("double")
     def s(c: String): Column = col(c).cast("double")
     val mu = s("__s1") / nd
@@ -776,15 +780,17 @@ object Similarity {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = base.count()
-    require(n <= maxVectors,
-      s"twoNnId is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
-        s"$maxVectors — sample upstream (the audit posture)")
+    // released on every exit, the contract error included
+    Observe.releasing(base) {
+      val n = base.count()
+      require(n <= maxVectors,
+        s"twoNnId is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
+          s"$maxVectors — sample upstream (the audit posture)")
+    }
     val top2 = bruteForceTopK(base, base, idCol, vecCol, 2)
       .groupBy(col("query_id"))
       .agg(max(when(col("rank") === 1, col("cos"))).as("__c1"),
         max(when(col("rank") === 2, col("cos"))).as("__c2"))
-    base.unpersist(false)
     val r1 = lit(1.0) - col("__c1")
     val r2 = lit(1.0) - col("__c2")
     val term = round(log(r2 / r1) * lit(0.5) * lit(1e9), 0).cast(dec)

@@ -1,0 +1,96 @@
+package graft.ops
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testing.TestSpark
+import graft.testing.DfAssert.createDf
+import graft.text.Dedup
+
+/** Spark jobs per call of the iterative graph and dedup operators, pinned
+  * on fixed tiny graphs: building the result plus one `collect()`. Every
+  * eager checkpoint, count probe and convergence round is one action, so
+  * a change to how a loop checkpoints, converges or probes its input
+  * shows here as a changed count.
+  *
+  * A job counts once per action: jobs that share a SQL execution (the
+  * query stages adaptive execution submits for one action) count as one.
+  * How many stage jobs an action starts depends on which stage finishes
+  * first, so the raw job total is not stable from run to run.
+  */
+class IterationJobsSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  private object Jobs extends SparkListener {
+    val n = new AtomicInteger
+    private val executions = ConcurrentHashMap.newKeySet[String]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val exec = Option(e.properties).flatMap(p =>
+        Option(p.getProperty("spark.sql.execution.root.id"))
+          .orElse(Option(p.getProperty("spark.sql.execution.id"))))
+      if (exec.forall(executions.add)) n.incrementAndGet()
+      ()
+    }
+  }
+  private lazy val registered = { spark.sparkContext.addSparkListener(Jobs); true }
+
+  /** Actions run by `body`, with the listener bus drained on both sides. */
+  private def jobs(body: => Unit): Int = {
+    assert(registered)
+    TestBus.drain(spark.sparkContext)
+    val before = Jobs.n.get
+    body
+    TestBus.drain(spark.sparkContext)
+    Jobs.n.get - before
+  }
+
+  // a triangle with a two-edge tail (peels in rounds) beside a K4
+  private def g: DataFrame = createDf(spark, "s int, t int",
+    Seq(1 -> 2, 2 -> 3, 3 -> 1, 3 -> 4, 4 -> 5,
+      10 -> 11, 10 -> 12, 10 -> 13, 11 -> 12, 11 -> 13, 12 -> 13)
+      .map { case (a, b) => Seq[Any](a, b) })
+  private def seeds: DataFrame = createDf(spark, "n int", Seq(Seq[Any](1), Seq[Any](10)))
+  // a six-node chain (three pointer-jump rounds) and a separate pair
+  private def pairs: DataFrame = createDf(spark, "id_a bigint, id_b bigint",
+    Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 5L -> 6L, 10L -> 11L)
+      .map { case (a, b) => Seq[Any](a, b) })
+  private def docs: DataFrame = createDf(spark, "doc_id bigint, q int",
+    Seq(1L, 2L, 3L, 4L, 5L, 6L, 10L, 11L, 20L).map(i => Seq[Any](i, (i % 4).toInt)))
+
+  private val calls: Seq[(String, Int, () => Unit)] = Seq(
+    ("pageRank", 6, () => Graph.pageRank(g, "s", "t", iterations = 5).collect()),
+    ("personalizedPageRank", 7, () =>
+      Graph.personalizedPageRank(g, "s", "t", seeds, "n", iterations = 5).collect()),
+    ("labelPropagation", 4, () => Graph.labelPropagation(g, "s", "t", rounds = 4).collect()),
+    ("kCore", 6, () => Graph.kCore(g, "s", "t", k = 2).collect()),
+    ("kTruss", 5, () => Graph.kTruss(g, "s", "t", k = 3).collect()),
+    ("triangleCount", 2, () => Graph.triangleCount(g, "s", "t").collect()),
+    ("localClustering", 2, () => Graph.localClustering(g, "s", "t").collect()),
+    ("hits", 9, () => Graph.hits(g, "s", "t", iterations = 3).collect()),
+    ("bfsDistances", 7, () => Graph.bfsDistances(g, "s", "t", seeds, "n", maxHops = 4).collect()),
+    ("closenessCentrality", 7, () =>
+      Graph.closenessCentrality(g, "s", "t", seeds, "n", maxHops = 4).collect()),
+    ("eccentricity", 7, () => Graph.eccentricity(g, "s", "t", seeds, "n", maxHops = 4).collect()),
+    ("betweenness", 11, () => Graph.betweenness(g, "s", "t", seeds, "n", maxHops = 4).collect()),
+    ("connectedComponents", 8, () => {
+      val labels = Dedup.connectedComponents(pairs, "id_a", "id_b")
+      labels.collect()
+      labels.unpersist()
+      ()
+    }),
+    ("dedupByPairs", 9, () => Dedup.dedupByPairs(docs, "doc_id", pairs).collect()),
+    ("dedupByPairsKeepBest", 9, () =>
+      Dedup.dedupByPairsKeepBest(docs, "doc_id", pairs, org.apache.spark.sql.functions.col("q"))
+        .collect()))
+
+  calls.foreach { case (name, expected, call) =>
+    test(s"$name runs $expected Spark actions per call on the fixed graph") {
+      assert(jobs(call()) == expected)
+    }
+  }
+}

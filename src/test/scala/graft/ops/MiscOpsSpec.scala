@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.testing.TestSpark
@@ -199,6 +201,45 @@ class ObserveSpec extends AnyFunSuite {
       Seq(min(col("v")).as("lo"), max(col("v")).as("hi")))
     odf.collect()
     assert(obs.get("lo") == 2.0 && obs.get("hi") == 6.0)
+  }
+
+  test("checkpointed: the metric rides the checkpoint job; an empty max reads 0") {
+    val df = createDf(spark, "v bigint", Seq(Seq[Any](2L), Seq[Any](6L)))
+    val (cp, mx) = Observe.checkpointed(df.select((col("v") * 2).as("w")), max(col("w")))
+    assert(mx == 12L && cp.collect().map(_.getLong(0)).sorted.toSeq == Seq(4L, 12L))
+    val (empty, none) = Observe.checkpointed(df.filter(col("v") < 0), max(col("v")))
+    assert(none == 0L && empty.isEmpty)
+  }
+
+  /** Halve every value until the sum stops moving: 7 -> 3 -> 1 -> 0 -> 0. */
+  private def halving(maxRounds: Int) = {
+    val init = createDf(spark, "x bigint", Seq(Seq[Any](7L))).localCheckpoint(true)
+    Observe.fixpoint("halving", init, start = 7L, maxRounds) { cur =>
+      Observe.checkpointed(cur.select(expr("x div 2").as("x")), sum(col("x")))
+    }(_ == _)
+  }
+
+  test("fixpoint: stops at the first round whose metric is unchanged and records its rounds") {
+    assert(halving(maxRounds = 4).head().getLong(0) == 0L)
+    assert(Observe.rounds("halving") == 4)
+  }
+
+  test("fixpoint: raises at the backstop instead of returning a non-fixpoint") {
+    val e = intercept[IllegalStateException](halving(maxRounds = 3))
+    assert(e.getMessage.contains("halving did not converge within 3 rounds"))
+  }
+
+  test("release drops a local checkpoint's blocks; releasing frees on a throw") {
+    val cp = spark.range(10).toDF("x").localCheckpoint(true)
+    val id = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    Observe.release(cp)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id))
+    val cached = spark.range(5).toDF("y").persist()
+    intercept[IllegalArgumentException] {
+      Observe.releasing(cached) { cached.count(); require(false, "contract error") }
+    }
+    assert(cached.storageLevel == StorageLevel.NONE)
   }
 
   private def checksum(df: org.apache.spark.sql.DataFrame, cols: String*) =

@@ -297,10 +297,13 @@ class Round12OpsSpec extends AnyFunSuite {
     assert(r.getLong(3) == 2L, "two antihubs")
     assert(r.getDouble(4) == 0.4, "antihub_pct")
     assert(r.getDouble(5) == 0.0, "degrees (2,2,1,0,0) have zero skew")
+    val held = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalArgumentException] {
       graft.text.Similarity.hubnessAudit(df, "id", "v", k = 1, maxVectors = 3L)
     }
     assert(e.getMessage.contains("maxVectors"))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- held).isEmpty,
+      "the contract error must release the cached panel")
   }
 
   test("twoNnId: three collinear angles match the closed form; coincident points drop") {
@@ -324,6 +327,13 @@ class Round12OpsSpec extends AnyFunSuite {
     val r2 = graft.text.Similarity.twoNnId(dup, "id", "v").head()
     assert(r2.getLong(0) == 5L && r2.getLong(1) == 3L,
       "the two coincident points are discarded")
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      graft.text.Similarity.twoNnId(df, "id", "v", maxVectors = 2L)
+    }
+    assert(e.getMessage.contains("maxVectors"))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- held).isEmpty,
+      "the contract error must release the cached panel")
   }
 
   test("alignmentUniformity: identical vectors give align 0 / uniform 0; orthogonal give -4") {
