@@ -313,16 +313,18 @@ object Drift {
   }
 
   /** [[vocabularyOverlap]] over an input that is ALREADY a distinct,
-    * materialized `(group, token)` table with non-null tokens (r15,
-    * ADVICE r14): callers that dedup+checkpoint once for several
-    * consumers (q_kmv_overlap shares one tokenize+distinct between the
-    * sketch and the exact overlap) skip the redundant second full
-    * shuffle + materialization the public entry would pay.
+    * materialized `(group, token)` table (r15, ADVICE r14): callers that
+    * dedup+checkpoint once for several consumers (q_kmv_overlap shares
+    * one tokenize+distinct between the sketch and the exact overlap)
+    * skip the redundant second full shuffle + materialization the public
+    * entry would pay. Null tokens are dropped as there (a narrow filter),
+    * so they never count toward a group's vocabulary size.
     */
   private[graft] def vocabularyOverlapPreDeduped(
       df: DataFrame, groupCol: String, tokenCol: String): DataFrame =
     vocabularyOverlapOn(
-      df.select(col(groupCol).as("__g"), col(tokenCol).as("__t")))
+      df.select(col(groupCol).as("__g"), col(tokenCol).as("__t"))
+        .filter(col("__t").isNotNull))
 
   private def vocabularyOverlapOn(d: DataFrame): DataFrame = {
     val sizes = d.groupBy(col("__g")).agg(count(lit(1)).as("__n"))

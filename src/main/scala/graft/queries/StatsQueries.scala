@@ -471,9 +471,9 @@ object StatsQueries {
       .repartition(64).write.mode("overwrite").parquet(inPath)
     val target = math.max(1L, graft.sources.Sources.dataFileBytes(s, inPath) / 4)
     val planned = graft.sources.Sources.compact(s, inPath, outPath, target)
-    val a = graft.ops.Observe.tableChecksum(s.read.parquet(inPath), cols)
+    val a = graft.ops.Observe.tableChecksum(graft.sources.Sources.readParquet(s, inPath), cols)
       .toDF("n_a", "x_a", "s_a")
-    val out = s.read.parquet(outPath)
+    val out = graft.sources.Sources.readParquet(s, outPath)
     val b = graft.ops.Observe.tableChecksum(out, cols)
       .toDF("n_b", "x_b", "s_b")
     // degenerate-lint alignment: (1) xor60/sum60 are NULL over zero rows —

@@ -1,6 +1,16 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -10,8 +20,10 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * §2.1 — tests build frames from literals); this module is the engine's
   * forward surface for real storage:
   *
-  *   - schema-explicit readers (never infer on production paths — an
-  *     inference pass is a full extra scan at 100 TB);
+  *   - schema-explicit readers; parquet reads that give no schema take
+  *     it from one file footer read on the driver ([[readParquet]]).
+  *     Spark's own non-merging inference reads that same single footer,
+  *     but through a Spark job per read;
   *   - nanosecond-timestamp parquet handling (see [[readTable]]);
   *   - layout-aware writers: partitioned for pruning, bucketed for
   *     shuffle-free joins/aggregations on the bucket keys.
@@ -23,7 +35,8 @@ object Sources {
     * producer chose:
     *
     *   - TIMESTAMP(NANOS): rejected by Spark's vectorized reader, so
-    *     nanos are read as longs (`nanosAsLong`) and truncated to
+    *     nanos are read as longs (`nanosAsLong`, set on the session only
+    *     when the footer has such a column) and truncated to
     *     microsecond timestamps — the same conversion DuckDB applies;
     *   - TIMESTAMP(MICROS) with isAdjustedToUTC=false: surfaces as
     *     TIMESTAMP_NTZ, which most chrono functions (`unix_micros`,
@@ -34,14 +47,86 @@ object Sources {
     * Everything downstream sees one type, so query code never branches.
     */
   def readTable(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val footer = schemaFooter(spark, path)
+    // Converting a TIMESTAMP(NANOS) footer needs the flag, and so does the
+    // scan when it executes, so it stays set; other reads leave the
+    // session as it was.
+    if (footer.exists(hasNanosTimestamp)) spark.conf.set(NanosAsLong, "true")
+    val df = readFooted(spark, path, footer)
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType)         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case Some(TimestampNTZType) => df.withColumn("ts", col("ts").cast(TimestampType))
       case _                      => df
     }
   }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** `spark.read.parquet(path)` without the schema-inference job: the
+    * schema comes from the same footer Spark's non-merging inference
+    * reads, converted the same way, but read here on the driver. Spark's
+    * file index still discovers the partition columns and their types.
+    * With `spark.sql.parquet.mergeSchema` on, or when there is no footer
+    * to read (missing path, no data file, glob pattern), this IS
+    * `spark.read.parquet(path)`, errors included.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    readFooted(spark, path, schemaFooter(spark, path))
+
+  private def readFooted(spark: SparkSession, path: String,
+                         footer: Option[Footer]): DataFrame = {
+    val conf = spark.sessionState.conf
+    footer.filterNot(_ => conf.isParquetSchemaMergingEnabled) match {
+      case Some(f) => spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+        f, new ParquetToSparkSchemaConverter(conf))).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The footer `ParquetUtils.inferSchema` reads when schemas are not
+    * merged: among the leaf files Spark's file index lists, sorted by path,
+    * `_common_metadata`, else `_metadata`, else the first data file. Read
+    * without its row-group metadata, which the schema does not need.
+    */
+  private def schemaFooter(spark: SparkSession, path: String): Option[Footer] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // Spark expands a glob pattern itself; it names no file to read here
+    if (path.exists("{}[]*?\\".contains(_)) || !fs.exists(root)) return None
+    // HadoopFSUtils.shouldFilterOutPathName: hidden and temporary names,
+    // except the summary files and `_k=v` partition directories. Listing a
+    // file gives the file, so a root file passes the same filter.
+    def listed(name: String): Boolean =
+      name.startsWith("_common_metadata") || name.startsWith("_metadata") ||
+        !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+          name.endsWith("._COPYING_"))
+    def leaves(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filter(c => listed(c.getPath.getName))
+        .flatMap(c => if (c.isDirectory) leaves(c.getPath) else Seq(c))
+    val summaries = Seq("_common_metadata", "_metadata")
+    val (summary, data) = leaves(root).sortBy(_.getPath.toString)
+      .partition(f => summaries.contains(f.getPath.getName))
+    summaries.flatMap(n => summary.find(_.getPath.getName == n)).headOption
+      .orElse(data.headOption)
+      .map { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+          HadoopReadOptions.builder(conf)
+            .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+        try new Footer(st.getPath, reader.getFooter) finally reader.close()
+      }
+  }
+
+  /** An INT64 TIMESTAMP(NANOS) leaf column in the footer's parquet schema. */
+  private def hasNanosTimestamp(f: Footer): Boolean =
+    f.getParquetMetadata.getFileMetaData.getSchema.getColumns.asScala.exists { c =>
+      val t = c.getPrimitiveType
+      t.getPrimitiveTypeName == PrimitiveTypeName.INT64 && (t.getLogicalTypeAnnotation match {
+        case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
+        case _ => false
+      })
+    }
 
   /** Schema-explicit CSV reader (header expected, no inference scan). */
   def readCsv(spark: SparkSession, path: String, ddl: String,
@@ -244,7 +329,7 @@ object Sources {
       s"compact cannot write onto or inside its input (or vice versa): $qIn vs $qOut")
     val bytes = dataFileBytes(spark, inPath)
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read.parquet(inPath).repartition(nFiles)
+    readParquet(spark, inPath).repartition(nFiles)
       .write.mode("overwrite").parquet(outPath)
     nFiles
   }
@@ -268,7 +353,7 @@ object Sources {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
     val aggs = count(lit(1)).as("n_rows") +:
       statsCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(path)
+    readParquet(spark, path)
       .select(col("_metadata.file_path").as("file") +: statsCols.map(col): _*)
       .groupBy(col("file"))
       .agg(aggs.head, aggs.tail: _*)

@@ -343,7 +343,7 @@ object Streaming {
         s"snapshot chain is already at least ${id + 2} versions long but this " +
           s"batch id is $id — the streaming checkpoint was reset; refusing to " +
           s"fork the chain at $snapshotBase/v${id + 1}")
-      val base = spark.read.parquet(s"$snapshotBase/v$id")
+      val base = graft.sources.Sources.readParquet(spark, s"$snapshotBase/v$id")
       graft.ops.Merge.upsert(base, batch, keys, versionCol)
         .write.mode("overwrite").parquet(s"$snapshotBase/v${id + 1}")
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.Observe
+import graft.sources.Sources
 
 /** Embedding similarity search.
   *
@@ -371,9 +372,9 @@ object Similarity {
 
   /** Reload a persisted index ([[ivfSave]]); probe-ready, no fit job. */
   def ivfLoad(spark: SparkSession, path: String): IvfIndex = {
-    val centers = spark.read.parquet(s"$path/centers").collect()
+    val centers = Sources.readParquet(spark, s"$path/centers").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
-    IvfIndex(centers, spark.read.parquet(s"$path/cells"))
+    IvfIndex(centers, Sources.readParquet(spark, s"$path/cells"))
   }
 
   /** Deterministic IVF top-k — the AUDITABLE variant of [[ivfTopK]]:

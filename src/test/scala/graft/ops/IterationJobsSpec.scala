@@ -1,14 +1,9 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{SparkActions, TestSpark}
 import graft.testing.DfAssert.createDf
 import graft.text.Dedup
 
@@ -16,38 +11,11 @@ import graft.text.Dedup
   * on fixed tiny graphs: building the result plus one `collect()`. Every
   * eager checkpoint, count probe and convergence round is one action, so
   * a change to how a loop checkpoints, converges or probes its input
-  * shows here as a changed count.
-  *
-  * A job counts once per action: jobs that share a SQL execution (the
-  * query stages adaptive execution submits for one action) count as one.
-  * How many stage jobs an action starts depends on which stage finishes
-  * first, so the raw job total is not stable from run to run.
+  * shows here as a changed count ([[SparkActions]] says what one action
+  * is).
   */
 class IterationJobsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  private object Jobs extends SparkListener {
-    val n = new AtomicInteger
-    private val executions = ConcurrentHashMap.newKeySet[String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val exec = Option(e.properties).flatMap(p =>
-        Option(p.getProperty("spark.sql.execution.root.id"))
-          .orElse(Option(p.getProperty("spark.sql.execution.id"))))
-      if (exec.forall(executions.add)) n.incrementAndGet()
-      ()
-    }
-  }
-  private lazy val registered = { spark.sparkContext.addSparkListener(Jobs); true }
-
-  /** Actions run by `body`, with the listener bus drained on both sides. */
-  private def jobs(body: => Unit): Int = {
-    assert(registered)
-    TestBus.drain(spark.sparkContext)
-    val before = Jobs.n.get
-    body
-    TestBus.drain(spark.sparkContext)
-    Jobs.n.get - before
-  }
 
   // a triangle with a two-edge tail (peels in rounds) beside a K4
   private def g: DataFrame = createDf(spark, "s int, t int",
@@ -90,7 +58,7 @@ class IterationJobsSpec extends AnyFunSuite {
 
   calls.foreach { case (name, expected, call) =>
     test(s"$name runs $expected Spark actions per call on the fixed graph") {
-      assert(jobs(call()) == expected)
+      assert(SparkActions.count(call()) == expected)
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,9 +38,10 @@ class SkewSpec extends AnyFunSuite {
     // lowered skew threshold), joined against a small-but-unbroadcast
     // side. With the skew thresholds scaled to test size, AQE must
     // rewrite the sort-merge join's hot-side read into skew-split
-    // sub-partitions — the `skew=true` / `skewed` markers in the FINAL
-    // adaptive plan. This pins that the first-line mitigation the Skew
-    // scaladoc leans on actually engages on a demonstrably hot key.
+    // sub-partitions — an `AQEShuffleReadExec` with skewed partition
+    // specs in the FINAL adaptive plan. This pins that the first-line
+    // mitigation the Skew scaladoc leans on actually engages on a
+    // demonstrably hot key.
     val confs = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
       "spark.sql.adaptive.enabled" -> "true",
@@ -70,9 +72,13 @@ class SkewSpec extends AnyFunSuite {
       // the 400 cold keys (multiples of 10 below 4000)
       assert(row.getLong(0) == 108000L + 400L)
       assert(row.getLong(2) == (108000L + 400L) * 128L)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true") || plan.contains("skewed"),
-        s"AQE skew split did not fire on the seeded hot key:\n${plan.take(1500)}")
+      // the join sits inside a later query stage, so walk the stages too
+      val finalPlan = joined.queryExecution.executedPlan
+      val skewReads = new AdaptiveSparkPlanHelper {}.collect(finalPlan) {
+        case r: AQEShuffleReadExec if r.hasSkewedPartition => r
+      }
+      assert(skewReads.nonEmpty,
+        s"AQE skew split did not fire on the seeded hot key:\n${finalPlan.toString.take(1500)}")
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

@@ -318,6 +318,18 @@ class RankSpec extends AnyFunSuite {
     assert(r.getDouble(7) == 0.5)
   }
 
+  test("vocabularyOverlapPreDeduped drops null tokens like the public entry") {
+    // already distinct per (group, token); the null token in each group
+    // would otherwise count toward both sizes: n_a 3, n_b 2, jaccard 0.25
+    val d = createDf(spark, "g string, tk string",
+      Seq(Seq[Any]("a", "x"), Seq[Any]("a", "y"), Seq[Any]("a", null),
+        Seq[Any]("b", "x"), Seq[Any]("b", null)))
+    val r = graft.ops.Drift.vocabularyOverlapPreDeduped(d, "g", "tk").head()
+    assert((r.getLong(2), r.getLong(3), r.getLong(4)) == ((2L, 1L, 1L)))
+    assert(r.getDouble(5) == 0.5 && r.getDouble(6) == 0.5 && r.getDouble(7) == 1.0)
+    assert(r == graft.ops.Drift.vocabularyOverlap(d, "g", "tk").head())
+  }
+
   test("rakeTopPhrase: hand-checked deg/freq scores favor the long phrase") {
     val d = createDf(spark, "id int, text string", Seq(Seq[Any](1,
       "deep learning of deep systems and the deep learning stack")))
