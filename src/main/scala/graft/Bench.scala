@@ -21,21 +21,7 @@ object Bench {
     Seq("q_classify", "q_jl", "q_array_diff", "q_span_mask", "q_substr_cut")
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE right-size the partitioning of persisted intermediates
-      // (iterative operators cache pre-partitioned panels; without this
-      // the cache pins shuffle.partitions tasks per sweep regardless of
-      // data size). Scale-adaptive by construction: AQE coalesces from
-      // MEASURED bytes, so a 100 TB panel keeps its width while a small
-      // one stops paying per-task overhead it can't use.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
     // Warm the session (codegen, parquet footer reads) outside the timings.
     spark.range(1000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()

@@ -41,14 +41,7 @@ object DegenerateCorpus {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: DegenerateCorpus <srcDir> <outBase>")
     val (srcDir, outBase) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-degenerate-corpus")
     write(spark, srcDir, outBase)
     println(s"""{"degenerate_corpus":"$outBase","tables":${tables.size},"variants":["n0","n1"]}""")
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan for each registered
   * query (or the ones named in args) so scan pruning, pushed filters,
   * broadcast choices, and WholeStageCodegen spans can be reviewed.
@@ -19,13 +17,7 @@ object Explain {
     val args = rawArgs.filterNot(_ == "--final")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

@@ -4,14 +4,19 @@ import org.apache.spark.sql.SparkSession
 
 import graft.plans.GraftExtensions
 
-/** Opinionated session factory for the library.
+/** The library's one session policy: every entry point (`Bench`,
+  * `Verify`, `Explain`, `ScaleProbe`, `ScaleCorpus`, `DegenerateCorpus`),
+  * the test session and perfbench build through [[builder]], so a plan
+  * that is shown or tested is the plan that is timed.
   *
   * Settings chosen for the 100 TB posture: AQE on (runtime re-planning,
-  * skew-join splitting, partition coalescing), shuffle partitions sized to
+  * skew-join splitting, partition coalescing), AQE may right-size the
+  * partitioning of persisted intermediates, shuffle partitions sized to
   * the parallelism at hand rather than Spark's default 200 (callers on a
   * real cluster should pass `shufflePartitions ≈ 2-3× total cores` and let
   * AQE coalesce down), UTC session time, and the library's extensions
-  * (SQL-registered native expressions) injected.
+  * (SQL-registered native expressions) injected. [[local]] adds the
+  * host-sized master, UI off and WARN logging for the mains.
   */
 object GraftSession {
 
@@ -32,6 +37,28 @@ object GraftSession {
     master.foreach(b.master)
     shufflePartitions.foreach(n => b.config("spark.sql.shuffle.partitions", n.toString))
     b
+  }
+
+  /** Local session for the mains: `local[n]` with `n` shuffle
+    * partitions, where `n` is `SPARK_GRAFT_CPUS` or, unset, the host's
+    * core count. UI off, log level WARN.
+    */
+  def local(appName: String): SparkSession = {
+    val cpus = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+    val spark = builder(appName, Some(s"local[$cpus]"), Some(cpus))
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `SPARK_GRAFT_CPUS` as a core count: a positive integer, or the
+    * host's core count when unset.
+    */
+  private[graft] def cpusFrom(env: Option[String]): Int = env match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
   }
 
   /** Register the library's SQL functions on an ALREADY-RUNNING session

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derives a ×N scale corpus from a driver testdata dir (VERDICT r8 #1:
@@ -36,14 +36,7 @@ object ScaleCorpus {
     val (src, dst) = (args(0), args(1))
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     require(factor >= 1 && factor <= 100, s"factor out of range: $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-corpus")
 
     def table(name: String): DataFrame = graft.sources.Sources.readTable(spark, src, name)
     def write(df: DataFrame, name: String): Unit = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling-point probe for the ITERATIVE operator families (VERDICT r10
@@ -29,21 +28,17 @@ import org.apache.spark.sql.functions._
   * best-of-2, count() action. One JSON line on stdout.
   *
   * Usage: `sbt "runMain graft.ScaleProbe /root/testdata/sf0.1"`, then
-  * the same against the scaled dir.
+  * the same against the scaled dir. The session is
+  * [[GraftSession.local]]: `local[n]` with `n` = `SPARK_GRAFT_CPUS`,
+  * else the host's core count, so reproducing BASELINE.md's `local[32]`
+  * decade protocol needs `SPARK_GRAFT_CPUS=32`.
   */
 object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <dataDir> [query...]")
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-probe")
     spark.range(1000).selectExpr("sum(id)").collect()
 
     // (query, how to read its round count after a run)

@@ -21,27 +21,36 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_join_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One runnable query per implemented operator — the union of the
-    * per-family registries. Families hold their own defs + oracle SQL;
-    * `require` guards make a key collision (which `++` would silently
-    * resolve last-wins) a construction-time failure instead.
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Every family registry, each holding its own defs + oracle SQL. */
+  private val families: Seq[(Map[String, Query], Map[String, String])] = Seq(
+    PriceQueries.queries -> PriceQueries.oracleSql,
+    StatsQueries.queries -> StatsQueries.oracleSql,
+    CoreQueries.queries -> CoreQueries.oracleSql,
+    EventQueries.queries -> EventQueries.oracleSql,
+    JoinQueries.queries -> JoinQueries.oracleSql,
+    TextQueries.queries -> TextQueries.oracleSql,
+    DedupQueries.queries -> DedupQueries.oracleSql,
+    EmbedQueries.queries -> EmbedQueries.oracleSql,
+    GraphQueries.queries -> GraphQueries.oracleSql,
+    SamplingQueries.queries -> SamplingQueries.oracleSql,
+    MultimodalQueries.queries -> MultimodalQueries.oracleSql,
+  )
+
+  /** Union of per-family maps; a key in two families (which `++` would
+    * silently resolve last-wins) fails construction, naming the keys.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val merged = PriceQueries.queries ++
-    StatsQueries.queries ++
-    CoreQueries.queries ++
-    EventQueries.queries ++
-    JoinQueries.queries ++
-    TextQueries.queries ++
-    DedupQueries.queries ++
-    EmbedQueries.queries ++
-    GraphQueries.queries ++
-    SamplingQueries.queries ++
-    MultimodalQueries.queries
-    require(merged.size == PriceQueries.queries.size + StatsQueries.queries.size + CoreQueries.queries.size + EventQueries.queries.size + JoinQueries.queries.size + TextQueries.queries.size + DedupQueries.queries.size + EmbedQueries.queries.size + GraphQueries.queries.size + SamplingQueries.queries.size + MultimodalQueries.queries.size,
-      "duplicate query name across family registries")
-    merged
+  private[graft] def merged[V](what: String, maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }
+    require(dups.isEmpty, s"duplicate $what name(s) across family registries: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.reduce(_ ++ _)
   }
+
+  /** One runnable query per implemented operator — the union of the
+    * per-family registries.
+    */
+  lazy val queries: Map[String, Query] = merged("query", families.map(_._1))
 
   /** Correctness-gate queries: each re-runs a scale-path operator AND its
     * exact baseline to assert a containment invariant (violations = 0).
@@ -60,24 +69,5 @@ object SparkEntry {
       "q_sq8_recall")
 
   /** DuckDB oracle SQL per query — the union of the per-family maps. */
-  def oracleSql: Map[String, String] = {
-    val merged = PriceQueries.oracleSql ++
-    StatsQueries.oracleSql ++
-    CoreQueries.oracleSql ++
-    EventQueries.oracleSql ++
-    JoinQueries.oracleSql ++
-    TextQueries.oracleSql ++
-    DedupQueries.oracleSql ++
-    EmbedQueries.oracleSql ++
-    GraphQueries.oracleSql ++
-    SamplingQueries.oracleSql ++
-    MultimodalQueries.oracleSql
-    require(merged.size == PriceQueries.oracleSql.size + StatsQueries.oracleSql.size + CoreQueries.oracleSql.size + EventQueries.oracleSql.size + JoinQueries.oracleSql.size + TextQueries.oracleSql.size + DedupQueries.oracleSql.size + EmbedQueries.oracleSql.size + GraphQueries.oracleSql.size + SamplingQueries.oracleSql.size + MultimodalQueries.oracleSql.size,
-      "duplicate oracle name across family registries")
-    merged
-  }
-
-  /** Forwarder kept for PlanSpec (bucketed-layout fixture). */
-  private[graft] def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    JoinQueries.bucketedTables(s, dir)
+  lazy val oracleSql: Map[String, String] = merged("oracle", families.map(_._2))
 }

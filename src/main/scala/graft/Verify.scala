@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,17 +15,7 @@ object Verify {
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
     val selected = subset.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: AQE may right-size cached-plan partitioning (the
-      // correctness surface must execute the same physical shapes)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A query that throws is ABSENT from the compare — make that loss
     // loud: collect every failure into a manifest beside the dumps so

@@ -217,16 +217,16 @@ object Funnel {
     // hard bounded-panel contract (r12): the transition table is
     // states²-bounded; count the state domain distributed BEFORE the
     // collect so a raw-id typeCol fails with a contract error, not an OOM
-    val nStates = cells.select(col("from_type").as("__s"))
-      .union(cells.select(col("to_type"))).distinct().count()
-    require(nStates <= maxStates.toLong,
-      s"stationaryDistribution materializes a states²-bounded transition " +
-        s"table on the driver; got $nStates distinct states (cap " +
-        s"$maxStates). The state column must be a bounded vocabulary " +
-        s"(event types, pages, statuses) — not raw entity ids.")
-    val counts: Array[(String, String, Long)] =
+    val counts: Array[(String, String, Long)] = Observe.releasing(cells) {
+      val nStates = cells.select(col("from_type").as("__s"))
+        .union(cells.select(col("to_type"))).distinct().count()
+      require(nStates <= maxStates.toLong,
+        s"stationaryDistribution materializes a states²-bounded transition " +
+          s"table on the driver; got $nStates distinct states (cap " +
+          s"$maxStates). The state column must be a bounded vocabulary " +
+          s"(event types, pages, statuses) — not raw entity ids.")
       cells.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    cells.unpersist(false)
+    }
     val states = (counts.map(_._1) ++ counts.map(_._2)).distinct.sorted.toSeq
     val outs: Map[String, Long] =
       counts.groupBy(_._1).map { case (s, cs) => s -> cs.map(_._3).sum }
@@ -690,15 +690,15 @@ object Funnel {
     val cellsDf = edges.groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nStates = cellsDf.select(col("from_type").as("__x"))
-      .union(cellsDf.select(col("to_type"))).distinct().count()
-    require(nStates <= maxStates.toLong,
-      s"removalEffects materializes a states²-bounded transition table " +
-        s"on the driver; got $nStates distinct states (cap $maxStates) — " +
-        "the journey column must be a bounded vocabulary, not raw ids")
-    val cells: Array[(String, String, Long)] =
+    val cells: Array[(String, String, Long)] = Observe.releasing(cellsDf) {
+      val nStates = cellsDf.select(col("from_type").as("__x"))
+        .union(cellsDf.select(col("to_type"))).distinct().count()
+      require(nStates <= maxStates.toLong,
+        s"removalEffects materializes a states²-bounded transition table " +
+          s"on the driver; got $nStates distinct states (cap $maxStates) — " +
+          "the journey column must be a bounded vocabulary, not raw ids")
       cellsDf.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    cellsDf.unpersist(false)
+    }
     val states = (cells.map(_._1) ++ cells.map(_._2)).distinct.sorted.toSeq
     val outs: Map[String, Long] =
       cells.groupBy(_._1).map { case (s, cs) => s -> cs.map(_._3).sum }

@@ -656,7 +656,7 @@ object PriceIndex {
       .repartition(col("__it"))
       .sortWithinPartitions(col("__it"))
       .persist()
-    try {
+    Observe.releasing(uv) {
       import spark.implicits._
       // P as driver-held (period, level) rows: period-bounded by definition
       var pLevels: Seq[(String, Double)] = uv
@@ -701,9 +701,6 @@ object PriceIndex {
           BigDecimal(lv / lv0).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
           itersRun.toLong)
       }.toDF("period", "n_items", "gk", "iters_run")
-    } finally {
-      uv.unpersist()
-      ()
     }
   }
 
@@ -774,7 +771,7 @@ object PriceIndex {
       .repartition(col("__it"))
       .sortWithinPartitions(col("__it"))
       .persist()
-    try {
+    Observe.releasing(uv) {
       var deltas: Seq[(String, Long)] = Nil // period -> δ nanos
       var itersRun = 0
       var converged = false
@@ -818,9 +815,6 @@ object PriceIndex {
             .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
           itersRun.toLong)
       }.toDF("period", "n_items", "tpd", "iters_run")
-    } finally {
-      uv.unpersist()
-      ()
     }
   }
 

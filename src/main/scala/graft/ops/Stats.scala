@@ -3053,7 +3053,7 @@ object Stats {
       .filter(gCols.map(_.isNotNull).reduce(_ && _) && col("__x").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mu =
-      try {
+      Observe.releasing(base) {
         val m0 = base.groupBy(gCols: _*)
           .agg(count(lit(1)).as("__n"), sum(col("__x").cast(dec)).as("__s1"))
         var muV = m0.select(gCols :+ col("__n") :+ col("__s1")
@@ -3069,15 +3069,18 @@ object Stats {
             .agg(first(col("__mu")).as("__muPrev"),
               sum(round(w * col("__x").cast("double"), 0).cast(dec)).as("__wx"),
               sum(round(w * lit(1e6), 0).cast("long").cast(dec)).as("__w"))
-          muV = muV.drop("__mu", "__w").join(
+          val next = muV.drop("__mu", "__w").join(
             broadcast(agg.select(gCols
               :+ round(col("__wx").cast("double") * lit(1e6) /
                 col("__w").cast("double"), 0).cast("long").as("__mu")
               :+ col("__w"): _*)),
             groupBy).localCheckpoint(true)
+          // the eager checkpoint above no longer reads the superseded sweep
+          Observe.release(muV)
+          muV = next
         }
         muV
-      } finally base.unpersist(false)
+      }
     mu.select(gCols
       :+ col("__n").as("n")
       :+ round(col("__s1").cast("double") / col("__n").cast("double") / lit(1e6), 6)
@@ -4973,23 +4976,24 @@ object Stats {
     val base = df.select(q(x).as("__x"), q(y).as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ext = base.agg(min(col("__x")), max(col("__x")),
-      min(col("__y")), max(col("__y"))).collect().head
-    require(!ext.isNullAt(0), "distanceCorrelation needs at least one row")
-    val (xmn, xmx) = (ext.getLong(0), ext.getLong(1))
-    val (ymn, ymx) = (ext.getLong(2), ext.getLong(3))
-    // equal-width integral bucketing: b = ((v − mn)·B) div (range + 1) —
-    // the +1 lands the top edge in bucket B−1 with no clamp, no float
-    def bucket(name: String, mn: Long, mx: Long): Column =
-      if (mx == mn) lit(0L)
-      else expr(s"(cast(($name - ${mn}L) as decimal(38,0)) * $buckets) " +
-        s"div ${mx - mn + 1}L")
-    val cells: Array[(Long, Long, Long)] = base.select(
-        bucket("__x", xmn, xmx).as("__bx"),
-        bucket("__y", ymn, ymx).as("__by"))
-      .groupBy(col("__bx"), col("__by")).agg(count(lit(1)).as("__w"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    base.unpersist(false)
+    val cells: Array[(Long, Long, Long)] = Observe.releasing(base) {
+      val ext = base.agg(min(col("__x")), max(col("__x")),
+        min(col("__y")), max(col("__y"))).collect().head
+      require(!ext.isNullAt(0), "distanceCorrelation needs at least one row")
+      val (xmn, xmx) = (ext.getLong(0), ext.getLong(1))
+      val (ymn, ymx) = (ext.getLong(2), ext.getLong(3))
+      // equal-width integral bucketing: b = ((v − mn)·B) div (range + 1) —
+      // the +1 lands the top edge in bucket B−1 with no clamp, no float
+      def bucket(name: String, mn: Long, mx: Long): Column =
+        if (mx == mn) lit(0L)
+        else expr(s"(cast(($name - ${mn}L) as decimal(38,0)) * $buckets) " +
+          s"div ${mx - mn + 1}L")
+      base.select(
+          bucket("__x", xmn, xmx).as("__bx"),
+          bucket("__y", ymn, ymx).as("__by"))
+        .groupBy(col("__bx"), col("__by")).agg(count(lit(1)).as("__w"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    }
     val n = cells.map(_._3).sum
     def margS(sel: ((Long, Long, Long)) => Long): (Map[Long, BigInt], BigInt) = {
       val cnt = cells.groupBy(sel).map { case (b, cs) =>

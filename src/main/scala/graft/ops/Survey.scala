@@ -72,17 +72,18 @@ object Survey {
       .groupBy(col("__r"), col("__c"))
       .agg(count(lit(1)).as("__n"), sum(col("__w").cast(dec)).as("__sw"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // hard bounded-panel contract: count the design cells distributed
-    // BEFORE anything reaches the driver
-    val nCells = cellsDf.count()
-    require(nCells <= maxCells.toLong,
-      s"rake materializes the margin-cell table on the driver; got " +
-        s"$nCells occupied cells (cap $maxCells). Raking margins must " +
-        s"be design variables (region × age band), not raw ids.")
-    val cells: Array[(String, String, Long, BigInt)] = cellsDf.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        BigInt(r.getDecimal(3).toBigInteger)))
-    cellsDf.unpersist(false)
+    val cells: Array[(String, String, Long, BigInt)] = Observe.releasing(cellsDf) {
+      // hard bounded-panel contract: count the design cells distributed
+      // BEFORE anything reaches the driver
+      val nCells = cellsDf.count()
+      require(nCells <= maxCells.toLong,
+        s"rake materializes the margin-cell table on the driver; got " +
+          s"$nCells occupied cells (cap $maxCells). Raking margins must " +
+          s"be design variables (region × age band), not raw ids.")
+      cellsDf.collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+          BigInt(r.getDecimal(3).toBigInteger)))
+    }
     def targets(t: DataFrame): Map[String, BigInt] = t.collect()
       .map(r => r.get(0).toString -> BigInt(java.math.BigDecimal
         .valueOf(r.getLong(1)).toBigInteger)).toMap

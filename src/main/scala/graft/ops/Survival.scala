@@ -465,31 +465,32 @@ object Survival {
       .groupBy(col("__t"), col("__s"))
       .agg(count(lit(1)).as("__n"), sum(col("__e")).as("__d"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tTbl = cells.select(col("__t")).distinct()
-    val sTbl = cells.select(col("__s")).distinct()
-    val (nT, nS) = (tTbl.count(), sTbl.count())
-    require(nT * nS <= maxGrid,
-      s"concordanceIndex densifies a ${nT}×${nS} duration×score grid " +
-        s"(cap $maxGrid cells). Quantize the score into coarser buckets " +
-        s"— C on bucketed scores is the standard large-n estimator.")
-    // Cross-spine boundedness made STRUCTURAL (r13): the smaller axis —
-    // min(nT, nS) ≤ √maxGrid ≤ 1000 rows by the cap just enforced — is
-    // collected and re-emitted as a LITERAL frame, so the nested-loop
-    // join's broadcast side is a LocalTableScan in every physical plan,
-    // independent of cache lineage (the registry plan guard recognizes
-    // that shape without a per-query whitelist entry). The collect is
-    // bounded by the same contract that already counted both axes.
-    val spark0 = df.sparkSession
-    import scala.jdk.CollectionConverters._
-    def literalAxis(tbl: DataFrame, name: String): DataFrame =
-      spark0.createDataFrame(
-        tbl.collect().map(r => org.apache.spark.sql.Row(r.getLong(0))).toList.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(name,
-            org.apache.spark.sql.types.LongType, nullable = false))))
-    val grid0 =
+    val grid0 = Observe.releasing(cells) {
+      val tTbl = cells.select(col("__t")).distinct()
+      val sTbl = cells.select(col("__s")).distinct()
+      val (nT, nS) = (tTbl.count(), sTbl.count())
+      require(nT * nS <= maxGrid,
+        s"concordanceIndex densifies a ${nT}×${nS} duration×score grid " +
+          s"(cap $maxGrid cells). Quantize the score into coarser buckets " +
+          s"— C on bucketed scores is the standard large-n estimator.")
+      // Cross-spine boundedness made STRUCTURAL (r13): the smaller axis —
+      // min(nT, nS) ≤ √maxGrid ≤ 1000 rows by the cap just enforced — is
+      // collected and re-emitted as a LITERAL frame, so the nested-loop
+      // join's broadcast side is a LocalTableScan in every physical plan,
+      // independent of cache lineage (the registry plan guard recognizes
+      // that shape without a per-query whitelist entry). The collect is
+      // bounded by the same contract that already counted both axes.
+      val spark0 = df.sparkSession
+      import scala.jdk.CollectionConverters._
+      def literalAxis(tbl: DataFrame, name: String): DataFrame =
+        spark0.createDataFrame(
+          tbl.collect().map(r => org.apache.spark.sql.Row(r.getLong(0))).toList.asJava,
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField(name,
+              org.apache.spark.sql.types.LongType, nullable = false))))
       if (nS <= nT) tTbl.crossJoin(literalAxis(sTbl, "__s"))
       else literalAxis(tTbl, "__t").crossJoin(sTbl)
+    }
     val grid = grid0
       .join(cells, Seq("__t", "__s"), "left")
       .select(col("__t"), col("__s"),
@@ -511,7 +512,6 @@ object Survival {
       sum(col("__d").cast(dec) * col("__ct").cast(dec)).as("__cmp"),
       sum(col("__d").cast(dec) * col("__b").cast(dec)).as("__cc"),
       sum(col("__d").cast(dec) * col("__a").cast(dec)).as("__tt"))
-    cells.unpersist(false)
     agg.select(col("n"), col("n_events"),
       col("__cmp").cast("long").as("comparable_pairs"),
       col("__cc").cast("long").as("concordant_pairs"),

@@ -8,8 +8,8 @@ import graft.functions.{DotProduct, FunctionBuilders, MinHashSig, ShingleHash64,
 /** SparkSessionExtensions entry point: registers the library's native
   * Catalyst expressions for SQL use.
   *
-  * Activate with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * [[graft.GraftSession.builder]] injects it; elsewhere pass it to a
+  * session builder's `withExtensions` or set
   * `spark.sql.extensions=graft.plans.GraftExtensions`; after that
   * `SELECT dot_f64(a, b)`, `SELECT minhash_sig(shingles, 32)`,
   * `SELECT simhash32(tokens)`, and `SELECT shingle_hash64(tokens, 5)`

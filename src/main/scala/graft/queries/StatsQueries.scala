@@ -464,6 +464,10 @@ object StatsQueries {
     */
   private def qCompactAudit(s: SparkSession, dir: String): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory("graft-compact-audit")
+    // the returned frame reads these files when it runs, so the tree can
+    // only go when the JVM exits
+    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
+      .deleteOnExit(new org.apache.hadoop.fs.Path(root.toString))
     val inPath = root.resolve("in").toString
     val outPath = root.resolve("out").toString
     val cols = Seq("event_id", "user_id", "event_type")

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.Observe
 import graft.sources.Sources
 
 /** Embedding similarity search.
@@ -719,15 +718,11 @@ object Similarity {
     require(k >= 1 && k <= 1000, s"k out of range: $k")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // released on every exit, the contract error included
-    Observe.releasing(base) {
-      val n = base.count()
-      require(n <= maxVectors,
-        s"hubnessAudit is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
-          s"$maxVectors — sample upstream (the audit posture) or use the " +
-          "banded LSH near-dup path for full-corpus work")
-    }
+    val n = base.count()
+    require(n <= maxVectors,
+      s"hubnessAudit is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
+        s"$maxVectors — sample upstream (the audit posture) or use the " +
+        "banded LSH near-dup path for full-corpus work")
     val edges = bruteForceTopK(base, base, idCol, vecCol, k)
     val indeg = base.select(col(idCol).as("__id"))
       .join(edges.groupBy(col("neighbor_id")).agg(count(lit(1)).as("__d")),
@@ -780,14 +775,10 @@ object Similarity {
               maxVectors: Long = 100000L): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // released on every exit, the contract error included
-    Observe.releasing(base) {
-      val n = base.count()
-      require(n <= maxVectors,
-        s"twoNnId is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
-          s"$maxVectors — sample upstream (the audit posture)")
-    }
+    val n = base.count()
+    require(n <= maxVectors,
+      s"twoNnId is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
+        s"$maxVectors — sample upstream (the audit posture)")
     val top2 = bruteForceTopK(base, base, idCol, vecCol, 2)
       .groupBy(col("query_id"))
       .agg(max(when(col("rank") === 1, col("cos"))).as("__c1"),

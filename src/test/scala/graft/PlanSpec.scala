@@ -109,7 +109,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bucketed fact-fact join is Exchange-free (bucketed scans feed the merge join)") {
-    val (liT, oT) = SparkEntry.bucketedTables(spark, dir)
+    val (liT, oT) = graft.queries.JoinQueries.bucketedTables(spark, dir)
     val joined = spark.table(liT)
       .join(spark.table(oT).hint("merge"), col("l_orderkey") === col("o_orderkey"))
     val p = joined.queryExecution.executedPlan.toString

@@ -13,6 +13,18 @@ import graft.testing.DfAssert.createDf
 class Round12OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** Run `body`, which must raise its contract error, and check that the
+    * error left no new persistent RDD behind (new ids rather than the
+    * set's size, so ContextCleaner activity cannot flake it).
+    */
+  private def releasesOnThrow(body: => Any): IllegalArgumentException = {
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException](body)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- held).isEmpty,
+      "the contract error must release the cached panel")
+    e
+  }
+
   test("gammaOrdinal: hand-computed asymmetric ties (the ADVICE r11 case)") {
     // cells (1,1),(2,1),(3,2), one observation each:
     //   (1,1)-(2,1): x differs, y equal  -> tied on y ONLY
@@ -76,7 +88,7 @@ class Round12OpsSpec extends AnyFunSuite {
     val rows = Seq(("u", 1L, 1L, "a"), ("u", 2L, 2L, "b"), ("u", 3L, 3L, "c"))
     val df = createDf(spark, "u string, ts bigint, id bigint, et string",
       rows.map { case (u, t, i, e) => Seq[Any](u, t, i, e) })
-    val e = intercept[IllegalArgumentException] {
+    val e = releasesOnThrow {
       Funnel.stationaryDistribution(df, "u", "ts", "id", "et",
         iterations = 4, maxStates = 2).collect()
     }
@@ -125,7 +137,7 @@ class Round12OpsSpec extends AnyFunSuite {
       Survey.rake(df, col("r"), col("c"), lit(1.0), rtBad, ct, iterations = 2)
     }
     assert(e.getMessage.contains("missing sample row key"))
-    val e2 = intercept[IllegalArgumentException] {
+    val e2 = releasesOnThrow {
       Survey.rake(df, col("r"), col("c"), lit(1.0), rt, ct,
         iterations = 2, maxCells = 2)
     }
@@ -297,13 +309,10 @@ class Round12OpsSpec extends AnyFunSuite {
     assert(r.getLong(3) == 2L, "two antihubs")
     assert(r.getDouble(4) == 0.4, "antihub_pct")
     assert(r.getDouble(5) == 0.0, "degrees (2,2,1,0,0) have zero skew")
-    val held = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[IllegalArgumentException] {
+    val e = releasesOnThrow {
       graft.text.Similarity.hubnessAudit(df, "id", "v", k = 1, maxVectors = 3L)
     }
     assert(e.getMessage.contains("maxVectors"))
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- held).isEmpty,
-      "the contract error must release the cached panel")
   }
 
   test("twoNnId: three collinear angles match the closed form; coincident points drop") {
@@ -327,13 +336,10 @@ class Round12OpsSpec extends AnyFunSuite {
     val r2 = graft.text.Similarity.twoNnId(dup, "id", "v").head()
     assert(r2.getLong(0) == 5L && r2.getLong(1) == 3L,
       "the two coincident points are discarded")
-    val held = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[IllegalArgumentException] {
+    val e = releasesOnThrow {
       graft.text.Similarity.twoNnId(df, "id", "v", maxVectors = 2L)
     }
     assert(e.getMessage.contains("maxVectors"))
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- held).isEmpty,
-      "the contract error must release the cached panel")
   }
 
   test("alignmentUniformity: identical vectors give align 0 / uniform 0; orthogonal give -4") {
@@ -381,7 +387,7 @@ class Round12OpsSpec extends AnyFunSuite {
     // comparable 3, concordant 2, tied 1 -> C = 2.5/3
     assert(r2.getLong(2) == 3L && r2.getLong(3) == 2L && r2.getLong(4) == 1L)
     assert(r2.getLong(5) == 833333333L)
-    val e = intercept[IllegalArgumentException] {
+    val e = releasesOnThrow {
       Survival.concordanceIndex(perf, col("t"), col("e"), col("s"),
         maxGrid = 2L).collect()
     }
@@ -480,6 +486,10 @@ class Round12OpsSpec extends AnyFunSuite {
       (-10 to 10).map(i => Seq[Any](i.toDouble, (i * i).toDouble)))
     val r3 = Stats.distanceCorrelation(u, col("x"), col("y"), buckets = 8).head()
     assert(!r3.isNullAt(5) && r3.getDouble(5) > 0.3, s"U-shape dcor ${r3.getDouble(5)}")
+    val e = releasesOnThrow {
+      Stats.distanceCorrelation(lin.filter(col("x") < 0.0), col("x"), col("y"))
+    }
+    assert(e.getMessage.contains("at least one row"))
   }
 
   test("ipwAte: constant per-arm outcomes recover the exact contrast; constant x is degenerate") {
@@ -650,6 +660,11 @@ class Round12OpsSpec extends AnyFunSuite {
       Funnel.removalEffects(df, "u", "ts", "ts", "et", Seq("start"), "z")
     }
     assert(e.getMessage.contains("reserved"))
+    // states start, a, b, z, null: over a cap of 2
+    val e2 = releasesOnThrow {
+      Funnel.removalEffects(df, "u", "ts", "ts", "et", Seq("a", "b"), "z", maxStates = 2)
+    }
+    assert(e2.getMessage.contains("distinct states"))
   }
 
   test("referentialIntegrity: orphan and null-FK counting") {

@@ -164,6 +164,27 @@ class SourcesSpec extends AnyFunSuite {
     assert(b.count() == 20000 && a.exceptAll(b).count() == 0)
   }
 
+  test("q_compact_audit registers its scratch tree for deletion at JVM exit") {
+    val data = Files.createTempDirectory("graft-audit-src")
+    spark.range(200).selectExpr("id AS event_id", "id % 7 AS user_id",
+        "CAST(id % 3 AS STRING) AS event_type")
+      .write.parquet(s"$data/events.parquet")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def auditDirs = tmp.listFiles().toSet.filter(_.getName.startsWith("graft-compact-audit"))
+    val before = auditDirs
+    val df = graft.SparkEntry.queries("q_compact_audit")(spark, data.toString)
+    val made = auditDirs -- before
+    assert(made.size == 1, s"expected one new audit directory, got $made")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val p = new org.apache.hadoop.fs.Path(made.head.toString)
+    // cancelDeleteOnExit reports whether the path was registered
+    assert(fs.cancelDeleteOnExit(p), s"${made.head} is not registered for deletion at exit")
+    fs.deleteOnExit(p)
+    // registration deletes nothing yet: the lazy frame still reads its files
+    assert(df.head().getLong(0) == 0L)
+    fs.delete(new org.apache.hadoop.fs.Path(data.toString), true)
+  }
+
   test("fileStatsIndex + pruneFilesByRange: narrow predicates skip most files, results intact") {
     val root = Files.createTempDirectory("graft-skip")
     val path = root.resolve("t").toString
