@@ -49,17 +49,16 @@ object Graph {
       .withColumn("d", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
+    val (nodes, nProbe) = Observe.checkpointed(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct(), count(lit(1)))
     // Size-based join strategy, decided ONCE before the loop: rank state
     // is node-sized, and broadcasting it per iteration is the fast path
     // only while it fits the session's broadcast threshold — past that
     // (~100× the bench graph) the hint would OOM the driver, so the same
     // call degrades to a co-partitioned hash join: the frozen edge list
     // is pre-partitioned on src once (below) and each iteration shuffles
-    // only the node-sized rank state onto that layout.
-    val nProbe = nodes.count() // nodes is checkpointed: a cheap scalar probe
+    // only the node-sized rank state onto that layout. The node count
+    // rides the checkpoint job.
     val useBroadcast = Hints.fitsBroadcast(edges.sparkSession, nProbe, rowBytes = 32L)
     val eJoined = if (useBroadcast) e else e.repartition(col("src")).localCheckpoint(true)
     // N is the nProbe scalar the broadcast decision already paid for —
@@ -113,9 +112,9 @@ object Graph {
     */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val init = undirected(edges, aCol, bCol).localCheckpoint(true)
     // one action per peel round: the survivor count rides the checkpoint
-    val core = Observe.fixpoint("kCore", init, init.count(), maxRounds = 50) { cur =>
+    val (init, n0) = Observe.checkpointed(undirected(edges, aCol, bCol), count(lit(1)))
+    val core = Observe.fixpoint("kCore", init, n0, maxRounds = 50) { cur =>
       val keep = degrees(cur).filter(col("d") >= k).select(col("x"))
       Observe.checkpointed(cur
         .join(keep.toDF("u"), Seq("u"), "left_semi")
@@ -163,9 +162,9 @@ object Graph {
         .select(col("t.u").as("u"), col("t.v").as("v"))
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
     }
-    val init = undirected(edges, aCol, bCol).localCheckpoint(true)
     // one action per peel round: the survivor count rides the checkpoint
-    val truss = Observe.fixpoint("kTruss", init, init.count(), maxRounds = 16) { cur =>
+    val (init, n0) = Observe.checkpointed(undirected(edges, aCol, bCol), count(lit(1)))
+    val truss = Observe.fixpoint("kTruss", init, n0, maxRounds = 16) { cur =>
       val keep = support(cur).filter(col("support") >= minSup)
         .select(col("u"), col("v"))
       Observe.checkpointed(cur.join(keep, Seq("u", "v"), "left_semi"), count(lit(1)))

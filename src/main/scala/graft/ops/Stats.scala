@@ -3061,20 +3061,21 @@ object Stats {
               .cast("long").as("__mu"): _*)
           .localCheckpoint(true)
         for (_ <- 1 to sweeps) {
-          val j = base.join(broadcast(muV.select(gCols :+ col("__mu"): _*)), groupBy)
+          // one broadcast per sweep: n and s1 (constant per group) ride the
+          // aggregate, so it is the next generation as it stands
+          val j = base.join(broadcast(muV.drop("__w")), groupBy)
           val d = abs(col("__x") - col("__mu"))
           val w = when(d <= cMicro, lit(1.0))
             .otherwise(lit(cMicro.toDouble) / d.cast("double"))
-          val agg = j.groupBy(gCols: _*)
-            .agg(first(col("__mu")).as("__muPrev"),
+          val next = j.groupBy(gCols: _*)
+            .agg(first(col("__n")).as("__n"), first(col("__s1")).as("__s1"),
               sum(round(w * col("__x").cast("double"), 0).cast(dec)).as("__wx"),
               sum(round(w * lit(1e6), 0).cast("long").cast(dec)).as("__w"))
-          val next = muV.drop("__mu", "__w").join(
-            broadcast(agg.select(gCols
+            .select(gCols :+ col("__n") :+ col("__s1")
               :+ round(col("__wx").cast("double") * lit(1e6) /
                 col("__w").cast("double"), 0).cast("long").as("__mu")
-              :+ col("__w"): _*)),
-            groupBy).localCheckpoint(true)
+              :+ col("__w"): _*)
+            .localCheckpoint(true)
           // the eager checkpoint above no longer reads the superseded sweep
           Observe.release(muV)
           muV = next

@@ -3,7 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Guards
+import graft.functions.ArrayMath
+import graft.ops.{Guards, Observe}
 
 /** Integer-exact k-means clustering.
   *
@@ -25,11 +26,14 @@ import graft.ops.Guards
   * (k is thousands at most) — so they are collected once per round and
   * re-broadcast as LITERALS: the assignment stage is a narrow
   * codegen-able map (no join, no shuffle, k lexicographic struct-min
-  * comparisons per row). The center update is one posexplode +
-  * (cluster, dim) aggregation with map-side partials — shuffle volume
-  * is k·d per task, never corpus-sized. `iters` driver round-trips of
-  * k·d integers each: the same bounded-driver contract as BPE training
-  * (one winner row per round, text/Bpe.scala) and IVF (k centers).
+  * comparisons per row). A round is ONE exchange: a posexplode +
+  * (dim, cluster) sum and count with map-side partials, whose k·d rows
+  * are collected; the driver floors each mean and assembles the centers
+  * by position. `iters` driver round-trips of k·d integers each: the
+  * same bounded-driver contract as BPE training (one winner row per
+  * round, text/Bpe.scala) and IVF (k centers). The trainer runs `m`
+  * contiguous subspaces in that same pass, so [[Pq]] codebooks cost no
+  * more jobs than one k-means.
   */
 object Cluster {
 
@@ -41,10 +45,9 @@ object Cluster {
     * Deterministic contract (mirrored by the SQL oracle): initial
     * centers are the vectors of the k smallest ids (cluster = rank
     * order); assignment ties break toward the smaller cluster id;
-    * centroid means floor toward -∞ (exactly: `(s - pmod(s, n)) div n`
-    * — the subtraction makes the quotient exact, where truncating and
-    * flooring division agree); a cluster that receives no points keeps
-    * its previous center.
+    * centroid means floor toward -∞ (the oracle's
+    * `(s - pmod(s, n)) div n` is `Math.floorDiv(s, n)`); a cluster that
+    * receives no points keeps its previous center.
     */
   def kmeansInt(df: DataFrame, idCol: String, vecCol: String,
                 k: Int, iters: Int): DataFrame =
@@ -56,10 +59,28 @@ object Cluster {
   private[graft] def kmeansIntWithCenters(
       df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): (DataFrame, IndexedSeq[Seq[Long]]) = {
+    Guards.requireNoReservedNames(df, Seq("cluster", "dist"), "kmeansInt")
+    val (base, centers) = lloyd(df, idCol, vecCol, 1, k, iters, keepBase = true)
+    val best = nearest(col("__km_v"), centers.head)
+    val out = base.select(
+      col("__km_id").as(idCol),
+      best.getField("c").as("cluster"),
+      best.getField("d").as("dist"))
+    (out, centers.head)
+  }
+
+  /** Lloyd's algorithm over `m` contiguous subspaces of `vecCol` at once
+    * (`m = 1` is plain k-means): each subspace trains its own k centers
+    * under the [[kmeansInt]] contract, all in one pass per round.
+    * Returns the checkpointed `(__km_id, __km_v)` input and
+    * `centers(subspace)(cluster)`. The input is released on every exit
+    * unless `keepBase`, when the caller reads it afterwards.
+    */
+  private[text] def lloyd(df: DataFrame, idCol: String, vecCol: String, m: Int,
+                          k: Int, iters: Int, keepBase: Boolean)
+      : (DataFrame, IndexedSeq[IndexedSeq[Seq[Long]]]) = {
     require(k >= 1, "k must be >= 1")
     require(iters >= 0, "iters must be >= 0")
-    Guards.requireNoReservedNames(df, Seq("cluster", "dist"), "kmeansInt")
-
     // Freeze the (id, vector) projection once: it is re-read every round
     // plus once for the final assignment. localCheckpoint at bench scale;
     // a 100 TB run persists to executor storage instead — same contract
@@ -68,50 +89,63 @@ object Cluster {
       .select(col(idCol).as("__km_id"), col(vecCol).cast("array<long>").as("__km_v"))
       .filter(col("__km_v").isNotNull)
       .localCheckpoint(true)
+    var kept = false
+    try {
+      val init = base.orderBy(col("__km_id")).limit(k).collect().map(_.getSeq[Long](1))
+      require(init.length == k, s"kmeansInt needs at least k=$k non-null vectors, got ${init.length}")
+      val sub = init.head.length / m
+      var centers = (0 until m).map(s => init.map(_.slice(s * sub, (s + 1) * sub)).toIndexedSeq)
+      for (_ <- 1 to iters) {
+        val means = base
+          .withColumn("__km_a", assign(col("__km_v"), centers))
+          .select(col("__km_a"), posexplode(col("__km_v")).as(Seq("__km_p", "__km_x")))
+          .groupBy(col("__km_p"), col("__km_a")((col("__km_p") / sub).cast("int")).as("__km_c"))
+          .agg(sum(col("__km_x")), count(lit(1)))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1)) -> Math.floorDiv(r.getLong(2), r.getLong(3)))
+          .toMap
+        centers = centers.zipWithIndex.map { case (cs, s) =>
+          cs.zipWithIndex.map { case (c, i) =>
+            if (means.contains((s * sub, i))) (0 until sub).map(j => means((s * sub + j, i))) else c
+          }
+        }
+      }
+      kept = keepBase
+      (base, centers)
+    } finally if (!kept) Observe.release(base)
+  }
 
-    val init = base.orderBy(col("__km_id")).limit(k).collect()
-    require(init.length == k, s"kmeansInt needs at least k=$k non-null vectors, got ${init.length}")
-    var centers: IndexedSeq[Seq[Long]] = init.map(_.getSeq[Long](1)).toIndexedSeq
-
-    // Squared distance to a literal center, then lexicographic struct-min
-    // over (dist, cluster): exact integers, ties to the smaller cluster.
-    def distTo(c: Seq[Long]): Column =
-      aggregate(
-        zip_with(col("__km_v"), typedLit(c), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x)
-    def best: Column =
-      centers.zipWithIndex.map { case (c, i) =>
-        struct(distTo(c).as("d"), lit(i).as("c"))
-      }.reduce(least(_, _))
-
-    var round = 0
-    while (round < iters) {
-      val updated = base
-        .withColumn("__km_c", best.getField("c"))
-        .select(col("__km_c"), posexplode(col("__km_v")).as(Seq("__km_p", "__km_x")))
-        .groupBy(col("__km_c"), col("__km_p"))
-        .agg(sum(col("__km_x")).as("s"), count(lit(1)).as("n"))
-        // exact floor division on the lattice: s - pmod(s, n) is
-        // divisible by n, so `div` is exact and equals floor(s/n) even
-        // for negative sums (DuckDB's `//` floors, `div` truncates —
-        // they agree on exact quotients)
-        .withColumn("m", expr("(s - pmod(s, n)) div n"))
-        .groupBy(col("__km_c"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("__km_p").as("p"), col("m").as("m")))),
-          s => s.getField("m")).as("c"))
-        .collect()
-      val byCluster = updated.map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
-      centers = (0 until k).map(i => byCluster.getOrElse(i, centers(i)))
-      round += 1
+  /** Squared distance from the integer-array column `v` to each literal
+    * center as a `(d, c)` struct, `c` the center's index: exact long
+    * arithmetic, codegen'd.
+    */
+  private[text] def distances(v: Column, centers: Seq[Seq[Long]]): Seq[Column] =
+    centers.zipWithIndex.map { case (c, i) =>
+      struct(
+        aggregate(zip_with(v, typedLit(c), (a, b) => (a - b) * (a - b)),
+          lit(0L), (acc, x) => acc + x).as("d"),
+        lit(i).as("c"))
     }
 
-    val out = base.select(
-      col("__km_id").as(idCol),
-      best.getField("c").as("cluster"),
-      best.getField("d").as("dist"))
-    (out, centers)
+  /** The nearest center to `v` as a `(d, c)` struct: the lexicographic
+    * struct-min, so ties go to the smaller index.
+    */
+  private[text] def nearest(v: Column, centers: Seq[Seq[Long]]): Column =
+    distances(v, centers).reduce(least(_, _))
+
+  /** `f` of each of `v`'s `centers.length` contiguous subvectors (each
+    * sliced once per row) and its subspace's centers, as an array.
+    */
+  private[text] def bySubspace(v: Column, centers: IndexedSeq[Seq[Seq[Long]]])(
+      f: (Column, Seq[Seq[Long]]) => Column): Column = {
+    val sub = centers.head.head.length
+    array(centers.indices.map(s =>
+      ArrayMath.bound(slice(v, s * sub + 1, sub))(f(_, centers(s)))): _*)
   }
+
+  /** The nearest-center index of every subvector, as `array<int>`. */
+  private[text] def assign(v: Column, centers: IndexedSeq[Seq[Seq[Long]]]): Column =
+    bySubspace(v, centers)(nearest(_, _).getField("c"))
 
   /** Davies-Bouldin index over a trained [[kmeansInt]] clustering — the
     * internal "are these clusters compact and well separated?" score
@@ -192,25 +226,18 @@ object Cluster {
   def centroidSilhouette(df: DataFrame, idCol: String, vecCol: String,
                          k: Int, iters: Int): DataFrame = {
     require(k >= 2, "silhouette needs at least two clusters")
-    val (_, centers) = kmeansIntWithCenters(df, idCol, vecCol, k, iters)
+    val centers = lloyd(df, idCol, vecCol, 1, k, iters, keepBase = false)._2.head
     val base = df
       .select(col(idCol).as("__id"), col(vecCol).cast("array<long>").as("__v"))
       .filter(col("__v").isNotNull)
-    def distTo(c: Seq[Long]): Column =
-      aggregate(
-        zip_with(col("__v"), typedLit(c), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x)
-    val best: Column =
-      centers.zipWithIndex.map { case (c, i) =>
-        struct(distTo(c).as("d"), lit(i).as("c"))
-      }.reduce(least(_, _))
+    val dists = distances(col("__v"), centers)
+    val best = nearest(col("__v"), centers)
     val assigned = base
       .withColumn("__own", best.getField("c"))
       .withColumn("__a2", best.getField("d"))
-    val second: Column =
-      centers.zipWithIndex.map { case (c, i) =>
-        when(col("__own") =!= i, struct(distTo(c).as("d"), lit(i).as("c")))
-      }.reduce((x, y) => least(x, y)) // nulls lose in least
+    val second = dists.zipWithIndex
+      .map { case (d, i) => when(col("__own") =!= i, d) }
+      .reduce(least(_, _)) // nulls lose in least
     val withB = assigned.withColumn("__b2", second.getField("d"))
     val a = sqrt(col("__a2").cast("double"))
     val b = sqrt(col("__b2").cast("double"))

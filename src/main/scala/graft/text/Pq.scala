@@ -4,17 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.ArrayMath
-
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") over integer-lattice embeddings: split each
   * d-dim vector into `m` contiguous subvectors, train an integer k-means
-  * codebook per subspace ([[Cluster.kmeansIntWithCenters]] — the
-  * auditable Lloyd variant), and represent every vector by its `m`
-  * nearest-code ids. Approximate distances are computed asymmetrically
-  * (ADC): the query keeps its exact subvectors, each scored against the
-  * codebook once, and a corpus vector's distance is the sum of `m`
-  * table lookups.
+  * codebook per subspace ([[Cluster.kmeansInt]]'s auditable Lloyd
+  * variant, all subspaces trained together), and represent every vector
+  * by its `m` nearest-code ids. Approximate distances are computed
+  * asymmetrically (ADC): the query keeps its exact subvectors, each
+  * scored against the codebook once, and a corpus vector's distance is
+  * the sum of `m` table lookups.
   *
   * This completes the ANN family (brute / LSH-bucketed / IVF): PQ is the
   * MEMORY scale path — a 64-dim float vector becomes `m` small ints, a
@@ -25,9 +23,12 @@ import graft.functions.ArrayMath
   * bit-for-bit in an independent engine: a lossy index with a lossless
   * audit trail.
   *
-  * Scale shape: training touches only subvector slices (m bounded driver
-  * round-trips of k·(d/m) integers, the [[Cluster]] contract); encoding
-  * is ONE narrow codegen'd projection (codebooks are literals — no join);
+  * Scale shape: training is ONE pass for all m subspaces: one checkpoint,
+  * one init collect, then per round one narrow map that assigns every
+  * subvector against its literal codebook and one exchange whose k·d
+  * per-(dim, code) sums are collected (the [[Cluster]] contract:
+  * `iters + 2` actions whatever m is); encoding is ONE narrow codegen'd
+  * projection (codebooks are literals — no join);
   * the ADC scan is a hint-free equi-join of exploded codes against the
   * queries×m×k LUT (AQE broadcasts the bounded LUT side), one
   * map-combined (query, neighbor) aggregation, and a per-query
@@ -36,26 +37,16 @@ import graft.functions.ArrayMath
   */
 object Pq {
 
-  /** Squared L2 distance from an integer-array column to a literal
-    * center — exact long arithmetic, codegen'd.
-    */
-  private def d2(v: Column, c: Seq[Long]): Column =
-    aggregate(zip_with(v, typedLit(c), (a, b) => (a - b) * (a - b)),
-      lit(0L), (acc, x) => acc + x)
-
   /** Train `m` per-subspace codebooks of `k` codes each over `vecCol`
     * (array of integral type, fixed length `d`, `d % m == 0`). Returns
-    * `codebooks(s)(code) = center` with `d/m` components each.
+    * `codebooks(s)(code) = center` with `d/m` components each: the
+    * [[Cluster.kmeansInt]] contract per subspace, trained in one pass.
     */
   def train(df: DataFrame, idCol: String, vecCol: String, d: Int,
             m: Int, k: Int, iters: Int): IndexedSeq[IndexedSeq[Seq[Long]]] = {
     require(m >= 1 && d % m == 0, s"vector dim $d must split evenly into $m subspaces")
-    val sub = d / m
-    (0 until m).map { s =>
-      val sliced = df.select(col(idCol),
-        slice(col(vecCol).cast("array<long>"), s * sub + 1, sub).as("__pq_v"))
-      Cluster.kmeansIntWithCenters(sliced, idCol, "__pq_v", k, iters)._2
-    }.toIndexedSeq
+    val vec = df.select(col(idCol), slice(col(vecCol).cast("array<long>"), 1, d).as("__pq_v"))
+    Cluster.lloyd(vec, idCol, "__pq_v", m, k, iters, keepBase = false)._2
   }
 
   /** The `m` code ids for one vector as an `array<int>` — a single
@@ -63,18 +54,8 @@ object Pq {
     * Assignment ties break toward the smaller code id, the
     * [[Cluster.kmeansInt]] rule.
     */
-  def encodeCodes(vec: Column, codebooks: IndexedSeq[IndexedSeq[Seq[Long]]]): Column = {
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    array((0 until m).map { s =>
-      ArrayMath.bound(slice(vec.cast("array<long>"), s * sub + 1, sub)) { sv =>
-        codebooks(s).zipWithIndex
-          .map { case (c, i) => struct(d2(sv, c).as("d"), lit(i).as("c")) }
-          .reduce(least(_, _))
-          .getField("c")
-      }
-    }: _*)
-  }
+  def encodeCodes(vec: Column, codebooks: IndexedSeq[IndexedSeq[Seq[Long]]]): Column =
+    Cluster.assign(vec.cast("array<long>"), codebooks)
 
   /** ADC top-k: for every query row, the `topK` corpus ids with the
     * smallest summed code-to-query subspace distances (ties to the
@@ -83,19 +64,14 @@ object Pq {
   def adcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, codebooks: IndexedSeq[IndexedSeq[Seq[Long]]],
               topK: Int): DataFrame = {
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
     val codes = corpus.select(col(idCol).as("neighbor_id"),
       posexplode(encodeCodes(col(vecCol), codebooks)).as(Seq("__s", "__code")))
     // LUT: queries × m × k exact subspace distances — bounded by
     // construction, so AQE broadcasts it under the hint-free doctrine
     val lut = queries
       .select(col(idCol).as("query_id"),
-        posexplode(array((0 until m).map { s =>
-          ArrayMath.bound(slice(col(vecCol).cast("array<long>"), s * sub + 1, sub)) { sv =>
-            array(codebooks(s).map(c => d2(sv, c)): _*)
-          }
-        }: _*)).as(Seq("__s", "__d2s")))
+        posexplode(Cluster.bySubspace(col(vecCol).cast("array<long>"), codebooks)((sv, cs) =>
+          array(Cluster.distances(sv, cs).map(_.getField("d")): _*))).as(Seq("__s", "__d2s")))
       .select(col("query_id"), col("__s"),
         posexplode(col("__d2s")).as(Seq("__code", "__d2")))
     val scored = codes.join(lut, Seq("__s", "__code"))

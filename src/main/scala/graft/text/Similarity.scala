@@ -461,15 +461,10 @@ object Similarity {
     // centers are k·d driver-held integers: distances attach as literal
     // expressions (narrow map), probe order = [distance, cluster] struct
     // sort — integer-exact, tie toward the smaller cluster id
-    def distTo(c: Seq[Long]): Column =
-      aggregate(zip_with(col("__q"), array(c.map(lit): _*),
-        (x, y) => (x - y) * (x - y)), lit(0L), (acc, x) => acc + x)
-    val cellStructs = array(centers.zipWithIndex.map { case (c, j) =>
-      struct(distTo(c).as("d"), lit(j).as("cluster"))
-    }: _*)
+    val cellStructs = array(Cluster.distances(col("__q"), centers): _*)
     val probes = qq.select(col("query_id"),
         explode(slice(array_sort(cellStructs), 1, nProbe)).as("__cell"))
-      .select(col("query_id"), col("__cell.cluster").as("cluster"))
+      .select(col("query_id"), col("__cell.c").as("cluster"))
     probes.join(qn, "query_id").join(corpusSide, "cluster")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))

@@ -1,10 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{TempDirs, TestSpark}
 
 /** Guards the degenerate-lint's foundation (tools/degenerate_lint.py):
   * the n0/n1 fixtures must be exactly what the lint assumes — same
@@ -16,7 +14,7 @@ class DegenerateCorpusSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("n0 is empty and n1 holds the deterministic minimum row, schema-preserving") {
-    val out = Files.createTempDirectory("graft-degcorpus").toString
+    val out = TempDirs("graft-degcorpus").toString
     DegenerateCorpus.write(spark, "/root/testdata/sf0.001", out)
     for (tbl <- DegenerateCorpus.tables) {
       val src = sources.Sources.readTable(spark, "/root/testdata/sf0.001", tbl)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Concat, Timeseries}
-import graft.testing.TestSpark
+import graft.testing.{TempDirs, TestSpark}
 import graft.testing.DfAssert.createDf
 
 /** Physical-plan regression guards: the scale properties the library
@@ -121,7 +121,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partitioned write -> partition-pruned read: predicate becomes a directory filter") {
-    val out = java.nio.file.Files.createTempDirectory("graft-partitioned").toString
+    val out = TempDirs("graft-partitioned").toString
     val e = graft.sources.Sources.readTable(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     graft.sources.Sources.writePartitioned(e, out, Seq("event_type"))

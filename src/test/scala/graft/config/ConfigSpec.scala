@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{TempDirs, TestSpark}
 
 class YamlSpec extends AnyFunSuite {
 
@@ -97,7 +97,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("RunLog builds sortable run ids and creates the log dir") {
-    val tmp = Files.createTempDirectory("graft-logs")
+    val tmp = TempDirs("graft-logs")
     val fixed = java.time.ZonedDateTime.of(2026, 8, 12, 14, 30, 55, 0, java.time.ZoneOffset.UTC)
     val rl = new RunLog(Some(tmp), () => fixed)
     assert(rl.logId == "20260812_143055")
@@ -106,7 +106,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("setLoggingConfig writes run-id'd log file through the wired handlers") {
-    val tmp = Files.createTempDirectory("graft-logwire")
+    val tmp = TempDirs("graft-logwire")
     val fixed = java.time.ZonedDateTime.of(2026, 8, 12, 9, 0, 0, 0, java.time.ZoneOffset.UTC)
     val rl = new RunLog(Some(tmp), () => fixed)
     val root = java.util.logging.LogManager.getLogManager.getLogger("")
@@ -136,7 +136,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("log4j2Properties renders both appenders on the run path") {
-    val tmp = Files.createTempDirectory("graft-log4j2")
+    val tmp = TempDirs("graft-log4j2")
     val rl = new RunLog(Some(tmp))
     val props = rl.log4j2Properties()
     assert(props.contains(s"appender.file.fileName = ${rl.logPath}"))
@@ -148,7 +148,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("load() resolves from a directory on disk") {
-    val dir = Files.createTempDirectory("graft-config")
+    val dir = TempDirs("graft-config")
     Files.writeString(dir.resolve("scenario.yaml"), yaml)
     val cfg = Config.load("scenario", dirOverride = Some(dir))
     assert(cfg.get("name") == "test")
@@ -166,14 +166,14 @@ class ValidationSpec extends AnyFunSuite {
 
   test("fileExists memoizes filesystem probes") {
     Validation.clearCache()
-    val f = Files.createTempFile("graft-val", ".txt")
+    val f = Files.createTempFile(TempDirs("graft-val"), "f", ".txt")
     assert(Validation.fileExists(spark, f.toString))
     assert(!Validation.fileExists(spark, f.toString + ".nope"))
   }
 
   test("fileExists cache is LRU-bounded at 32 entries") {
     Validation.clearCache()
-    val f = Files.createTempFile("graft-lru", ".txt")
+    val f = Files.createTempFile(TempDirs("graft-lru"), "f", ".txt")
     assert(Validation.fileExists(spark, f.toString))
     assert(Validation.isCached(f.toString))
     // Probe 40 distinct (missing) paths: capacity is 32, so the earliest
@@ -186,7 +186,7 @@ class ValidationSpec extends AnyFunSuite {
   }
 
   test("validateInputFiles: active:false sections skipped; report formats") {
-    val f = Files.createTempFile("graft-val", ".parquet")
+    val f = Files.createTempFile(TempDirs("graft-val"), "f", ".parquet")
     val cfg = Config.fromString("v",
       s"""input_data:
          |  web:

@@ -31,12 +31,12 @@ class IterationJobsSpec extends AnyFunSuite {
     Seq(1L, 2L, 3L, 4L, 5L, 6L, 10L, 11L, 20L).map(i => Seq[Any](i, (i % 4).toInt)))
 
   private val calls: Seq[(String, Int, () => Unit)] = Seq(
-    ("pageRank", 6, () => Graph.pageRank(g, "s", "t", iterations = 5).collect()),
+    ("pageRank", 5, () => Graph.pageRank(g, "s", "t", iterations = 5).collect()),
     ("personalizedPageRank", 7, () =>
       Graph.personalizedPageRank(g, "s", "t", seeds, "n", iterations = 5).collect()),
     ("labelPropagation", 4, () => Graph.labelPropagation(g, "s", "t", rounds = 4).collect()),
-    ("kCore", 6, () => Graph.kCore(g, "s", "t", k = 2).collect()),
-    ("kTruss", 5, () => Graph.kTruss(g, "s", "t", k = 3).collect()),
+    ("kCore", 5, () => Graph.kCore(g, "s", "t", k = 2).collect()),
+    ("kTruss", 4, () => Graph.kTruss(g, "s", "t", k = 3).collect()),
     ("triangleCount", 2, () => Graph.triangleCount(g, "s", "t").collect()),
     ("localClustering", 2, () => Graph.localClustering(g, "s", "t").collect()),
     ("hits", 9, () => Graph.hits(g, "s", "t", iterations = 3).collect()),
@@ -60,5 +60,17 @@ class IterationJobsSpec extends AnyFunSuite {
     test(s"$name runs $expected Spark actions per call on the fixed graph") {
       assert(SparkActions.count(call()) == expected)
     }
+  }
+
+  test("a huberLocation sweep runs three Spark jobs: broadcast, exchange, checkpoint") {
+    val d = createDf(spark, "g string, v double",
+      Seq(("a", 1.0), ("a", 2.0), ("a", 40.0), ("b", -3.0), ("b", 5.0))
+        .map { case (g, v) => Seq[Any](g, v) })
+    def jobs(sweeps: Int): Int = SparkActions.jobs {
+      Stats.huberLocation(d, Seq("g"), org.apache.spark.sql.functions.col("v"), c = 1.0,
+        sweeps = sweeps)
+      ()
+    }
+    assert(jobs(3) - jobs(2) == 3)
   }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{TempDirs, TestSpark}
 import graft.testing.DfAssert.createDf
 
 class ZOrderSpec extends AnyFunSuite {
@@ -56,7 +56,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("z-ordered files cover bounded rectangles: per-file key spread shrinks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val dir = TempDirs("graft-zorder").toString
     val li = graft.sources.Sources.readTable(spark, "/root/testdata/sf0.001", "lineitem")
       .select((col("l_partkey") % 256).as("x"), (col("l_suppkey") % 256).as("y"))
     ZOrder.writeZOrdered(li, dir, Seq("x", "y"), bits = 8, numFiles = 8)

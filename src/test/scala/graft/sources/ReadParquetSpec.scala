@@ -11,7 +11,7 @@ import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.{SparkActions, TestSpark}
+import graft.testing.{SparkActions, TempDirs, TestSpark}
 
 /** The driver-side parquet schema resolver ([[Sources.readParquet]],
   * [[Sources.readTable]]): the same schema Spark's own inference gives,
@@ -31,7 +31,7 @@ class ReadParquetSpec extends AnyFunSuite {
     * with parquet-hadoop's example writer, at `<dir>/events.parquet`.
     */
   private def nanosTable(): JPath = {
-    val dir = Files.createTempDirectory("graft-nanos")
+    val dir = TempDirs("graft-nanos")
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 ts (TIMESTAMP(NANOS,false)); required int64 id; }")
     val out = HadoopOutputFile.fromPath(new Path(s"$dir/events.parquet"), new Configuration)
@@ -67,7 +67,7 @@ class ReadParquetSpec extends AnyFunSuite {
   }
 
   test("readParquet matches Spark's inferred schema on a Spark-written NTZ file") {
-    val dir = Files.createTempDirectory("graft-ntz").resolve("t").toString
+    val dir = TempDirs("graft-ntz").resolve("t").toString
     spark.sql("SELECT TIMESTAMP_NTZ '2024-03-01 12:34:56.789012' AS ts, 1L AS id, " +
       "CAST('x' AS VARCHAR(3)) AS v").write.parquet(dir)
     assertSameAsInferred(dir)
@@ -80,7 +80,7 @@ class ReadParquetSpec extends AnyFunSuite {
   }
 
   test("readParquet keeps day partitions, their types, and skips _SUCCESS and .crc files") {
-    val dir = Files.createTempDirectory("graft-days").resolve("t")
+    val dir = TempDirs("graft-days").resolve("t")
     spark.range(40).selectExpr("id", "CAST(id * 2 AS INT) AS v",
         "date_add(DATE '2024-03-01', CAST(id % 4 AS INT)) AS day")
       .repartition(3).write.partitionBy("day").parquet(dir.toString)
@@ -92,7 +92,7 @@ class ReadParquetSpec extends AnyFunSuite {
   }
 
   test("readParquet reads a flat directory holding _SUCCESS and .crc files") {
-    val dir = Files.createTempDirectory("graft-flat").resolve("t")
+    val dir = TempDirs("graft-flat").resolve("t")
     spark.range(10).selectExpr("id", "CAST(id AS STRING) AS s").repartition(2)
       .write.parquet(dir.toString)
     // a stray hidden file that is no parquet file must not be picked
@@ -101,7 +101,7 @@ class ReadParquetSpec extends AnyFunSuite {
   }
 
   test("readParquet raises Spark's own errors for a missing path and a data-less directory") {
-    val root = Files.createTempDirectory("graft-errs")
+    val root = TempDirs("graft-errs")
     val missing = intercept[AnalysisException](
       Sources.readParquet(spark, root.resolve("absent").toString))
     assert(missing.getCondition == "PATH_NOT_FOUND")
@@ -114,11 +114,11 @@ class ReadParquetSpec extends AnyFunSuite {
 
   test("readTable, fileStatsIndex and compact's read build their frames with no job") {
     assert(SparkActions.count(tables.foreach(Sources.readTable(spark, sf, _))) == 0)
-    val dir = Files.createTempDirectory("graft-stats").resolve("t").toString
+    val dir = TempDirs("graft-stats").resolve("t").toString
     spark.range(100).selectExpr("id", "id % 7 AS k").repartition(4).write.parquet(dir)
     assert(SparkActions.count(Sources.fileStatsIndex(spark, dir, Seq("k"))) == 0)
     // compact runs exactly its one write action
-    val out = Files.createTempDirectory("graft-compact").resolve("o").toString
+    val out = TempDirs("graft-compact").resolve("o").toString
     assert(SparkActions.count(Sources.compact(spark, dir, out, 1L << 20)) == 1)
     assert(Sources.readParquet(spark, out).count() == 100)
   }

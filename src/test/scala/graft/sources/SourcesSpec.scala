@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{TempDirs, TestSpark}
 
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -19,7 +19,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("readTable handles both physical ts shapes: NTZ micros and nanos-as-long") {
-    val dir = Files.createTempDirectory("graft-ts-shapes")
+    val dir = TempDirs("graft-ts-shapes")
     // NTZ shape (current harness producer: timestamp[us], not UTC-adjusted)
     val ntz = dir.resolve("ntz").toFile; ntz.mkdir()
     spark.sql("SELECT TIMESTAMP_NTZ '2024-03-01 12:34:56.789012' AS ts, 1L AS id")
@@ -40,7 +40,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("readCsv with explicit schema (no inference scan)") {
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = TempDirs("graft-csv")
     Files.writeString(dir.resolve("data.csv"), "id,name\n1,alpha\n2,beta\n")
     val df = Sources.readCsv(spark, dir.toString, "id int, name string")
     assert(df.collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
@@ -48,7 +48,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("ORC round-trip preserves values; pinned ddl prunes columns; filters push down") {
-    val dir = Files.createTempDirectory("graft-orc").resolve("t").toString
+    val dir = TempDirs("graft-orc").resolve("t").toString
     val df = spark.range(100).selectExpr("id", "id * 2 AS v", "CAST(id AS STRING) AS s")
     Sources.writeOrc(df, dir)
     // full round-trip
@@ -66,7 +66,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("overwritePartitionsDynamic replaces only the touched partitions") {
-    val dir = Files.createTempDirectory("graft-dyn").resolve("t").toString
+    val dir = TempDirs("graft-dyn").resolve("t").toString
     val day1 = spark.range(10).selectExpr("id", "'d1' AS day")
     val day2 = spark.range(20).selectExpr("id + 100 AS id", "'d2' AS day")
     Sources.overwritePartitionsDynamic(day1.union(day2), dir, Seq("day"))
@@ -80,7 +80,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("readJsonlQuarantine isolates malformed lines instead of nulling or failing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-dirty")
+    val dir = TempDirs("graft-jsonl-dirty")
     java.nio.file.Files.writeString(dir.resolve("part.jsonl"),
       "{\"id\": 1, \"v\": 2.5}\n" +
         "{\"id\": 2 \"v\": BROKEN\n" +
@@ -100,14 +100,14 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("readJsonl with explicit schema") {
-    val dir = Files.createTempDirectory("graft-jsonl")
+    val dir = TempDirs("graft-jsonl")
     Files.writeString(dir.resolve("data.json"), """{"id":1,"v":2.5}""" + "\n" + """{"id":2,"v":3.5}""" + "\n")
     val df = Sources.readJsonl(spark, dir.toString, "id int, v double")
     assert(df.agg(sum("v")).head().getDouble(0) == 6.0)
   }
 
   test("writePartitioned prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft-part").resolve("t").toString
+    val dir = TempDirs("graft-part").resolve("t").toString
     val df = spark.range(100).toDF("id")
       .withColumn("part", col("id") % 4)
     Sources.writePartitioned(df, dir, Seq("part"))
@@ -146,7 +146,7 @@ class SourcesSpec extends AnyFunSuite {
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
 
   test("compact collapses a many-small-file directory to the size-planned count") {
-    val root = Files.createTempDirectory("graft-compact")
+    val root = TempDirs("graft-compact")
     val in = root.resolve("in").toString
     val out = root.resolve("out").toString
     // 64 deliberately tiny files
@@ -165,7 +165,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("q_compact_audit registers its scratch tree for deletion at JVM exit") {
-    val data = Files.createTempDirectory("graft-audit-src")
+    val data = TempDirs("graft-audit-src")
     spark.range(200).selectExpr("id AS event_id", "id % 7 AS user_id",
         "CAST(id % 3 AS STRING) AS event_type")
       .write.parquet(s"$data/events.parquet")
@@ -186,7 +186,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("fileStatsIndex + pruneFilesByRange: narrow predicates skip most files, results intact") {
-    val root = Files.createTempDirectory("graft-skip")
+    val root = TempDirs("graft-skip")
     val path = root.resolve("t").toString
     // range-clustered layout: each file owns a contiguous id band
     spark.range(10000).toDF("id").withColumn("v", col("id") % 97)
@@ -203,7 +203,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("pruneFilesByRange keeps files with null bounds (skip only provably-irrelevant)") {
-    val root = Files.createTempDirectory("graft-skip2")
+    val root = TempDirs("graft-skip2")
     val path = root.resolve("t").toString
     spark.range(10).toDF("k")
       .withColumn("v", when(col("k") < 5, col("k").cast("double")))
@@ -214,7 +214,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("compact floors at one file and refuses in-place rewrites") {
-    val root = Files.createTempDirectory("graft-compact2")
+    val root = TempDirs("graft-compact2")
     val in = root.resolve("in").toString
     spark.range(10).toDF("id").repartition(5).write.parquet(in)
     val planned = Sources.compact(spark, in, root.resolve("out").toString,
@@ -230,7 +230,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("readEvolved: added columns merge; a pinned target also widens types") {
-    val dir = Files.createTempDirectory("graft-evolve").resolve("t").toString
+    val dir = TempDirs("graft-evolve").resolve("t").toString
     // month 1: (id int, v int); month 2 adds a column and widens v
     spark.range(3).selectExpr("CAST(id AS INT) AS id", "CAST(id * 10 AS INT) AS v")
       .write.parquet(dir)
@@ -246,7 +246,7 @@ class SourcesSpec extends AnyFunSuite {
     // no target: mergeSchema handles the added column (types here agree
     // per-column only in the label case — so restrict to a single-typed
     // subdir for the merge path)
-    val dir2 = Files.createTempDirectory("graft-evolve2").resolve("t").toString
+    val dir2 = TempDirs("graft-evolve2").resolve("t").toString
     spark.range(3).selectExpr("CAST(id AS INT) AS id").write.parquet(dir2)
     spark.range(3, 5).selectExpr("CAST(id AS INT) AS id", "CONCAT('tag', id) AS label")
       .write.mode("append").parquet(dir2)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{TempDirs, TestSpark}
 
 /** Drives the windowing helpers through ACTUAL Structured Streaming
   * execution (MemoryStream source → memory sink, synchronous batches) —
@@ -302,7 +302,7 @@ class StreamingSpec extends AnyFunSuite {
   test("file-sink end-to-end: stream -> parquet sink with checkpoint -> read back") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-sink")
+    val out = TempDirs("graft-stream-sink")
     val input = MemoryStream[(Timestamp, String, Double)]
     val agg = input.toDF().toDF("ts", "k", "v")
       .select(col("ts"), col("k"), col("v"))
@@ -425,7 +425,7 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint resume: session state survives a stop/restart; a wiped checkpoint loses it") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-chk-resume")
+    val base = TempDirs("graft-chk-resume")
     val outDir = base.resolve("data").toString
     val chkDir = base.resolve("chk").toString
 
@@ -475,7 +475,7 @@ class StreamingSpec extends AnyFunSuite {
     // negative control: wipe the checkpoint and deliver the SAME
     // post-restart feed through a fresh source — without the recovered
     // state the in-gap event can only form a 1-event session
-    val base2 = java.nio.file.Files.createTempDirectory("graft-chk-wiped")
+    val base2 = TempDirs("graft-chk-wiped")
     val input2 = MemoryStream[(Timestamp, String, Double)]
     val q3 = sessionsOf(input2).writeStream.outputMode("append")
       .format("parquet").option("path", base2.resolve("data").toString)
@@ -580,7 +580,7 @@ class StreamingSpec extends AnyFunSuite {
   test("upsert snapshot writer refuses to fork the chain after a checkpoint reset") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-upsert-fork").toString
+    val base = TempDirs("graft-upsert-fork").toString
     // an existing chain three versions long...
     Seq((1, "a", 1L)).toDF("k", "v", "version").write.parquet(s"$base/v0")
     Seq((1, "a", 1L)).toDF("k", "v", "version").write.parquet(s"$base/v1")
@@ -607,7 +607,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming CDC: micro-batches fold into versioned snapshots via upsert") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-upsert-snap").toString
+    val base = TempDirs("graft-upsert-snap").toString
     // seed snapshot v0
     Seq((1, "a", 1L), (2, "b", 1L)).toDF("k", "v", "version")
       .write.parquet(s"$base/v0")

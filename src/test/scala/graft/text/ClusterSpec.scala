@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{SparkActions, TestSpark}
 import graft.testing.DfAssert.createDf
 
 class ClusterSpec extends AnyFunSuite {
@@ -67,10 +67,32 @@ class ClusterSpec extends AnyFunSuite {
     val d = createDf(spark, "id bigint, v array<bigint>",
       Seq(Seq[Any](0L, Seq(1L)), Seq[Any](1L, null), Seq[Any](2L, Seq(3L))))
     assert(Cluster.kmeansInt(d, "id", "v", k = 2, iters = 1).count() == 2)
-    val e = intercept[IllegalArgumentException] {
-      Cluster.kmeansInt(d, "id", "v", k = 3, iters = 1)
+    val left = SparkActions.leftPersisted {
+      val e = intercept[IllegalArgumentException] {
+        Cluster.kmeansInt(d, "id", "v", k = 3, iters = 1)
+      }
+      assert(e.getMessage.contains("at least k=3"))
     }
-    assert(e.getMessage.contains("at least k=3"))
+    assert(left.isEmpty, "the error must release the checkpointed input")
+  }
+
+  private val grid = (0L until 12L).map(i => i -> Seq(i % 5, i * 3 % 7 - 3))
+
+  test("centroidSilhouette releases the trainer's checkpointed input") {
+    assert(SparkActions.leftPersisted(
+      Cluster.centroidSilhouette(df(grid), "id", "v", k = 3, iters = 2).collect()).isEmpty)
+  }
+
+  test("building kmeansInt runs iters + 2 Spark actions: checkpoint, init, one per round") {
+    for (iters <- Seq(0, 1, 3))
+      assert(SparkActions.count { Cluster.kmeansInt(df(grid), "id", "v", k = 3, iters = iters); () }
+        == iters + 2, s"iters=$iters")
+  }
+
+  test("one Lloyd round is one exchange: two Spark jobs") {
+    def jobs(iters: Int): Int =
+      SparkActions.jobs { Cluster.kmeansInt(df(grid), "id", "v", k = 3, iters = iters); () }
+    assert(jobs(2) - jobs(1) == 2)
   }
 
   test("reserved output names are rejected") {

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{SparkActions, TestSpark}
 import graft.testing.DfAssert.createDf
 
 class PqSpec extends AnyFunSuite {
@@ -89,5 +89,62 @@ class PqSpec extends AnyFunSuite {
       scored.zipWithIndex.map { case ((n, d), r) => (q, n, d, r + 1) }
     }
     assert(got.toSeq == want)
+  }
+
+  // subspace 0: ids 1 and 2 share their subvector, so in round 1 every
+  // point ties to code 0 and code 1 empties there only; subspace 1 has
+  // negative sums that do not divide evenly (the floor toward -inf)
+  private val skewed: Seq[(Int, Seq[Long])] = Seq(
+    1 -> Seq(5L, 5L, -3L, -7L),
+    2 -> Seq(5L, 5L, 40L, 41L),
+    3 -> Seq(6L, 4L, -5L, -8L),
+    4 -> Seq(-1L, 9L, 38L, 46L),
+    5 -> Seq(7L, 5L, -2L, -2L),
+    6 -> Seq(3L, -8L, 43L, 39L),
+  )
+
+  /** The Lloyd contract on the JVM: the k smallest ids seed the centers,
+    * ties go to the smaller code, means floor, an empty code keeps its
+    * center.
+    */
+  private def jvmLloyd(vs: Seq[(Int, Seq[Long])], k: Int, iters: Int): IndexedSeq[Seq[Long]] = {
+    val points = vs.sortBy(_._1).map(_._2)
+    var c = points.take(k).toIndexedSeq
+    for (_ <- 1 to iters) {
+      val byCode = points.groupBy(v => c.indices.minBy(i => (jvmD2(v, c(i)), i)))
+      c = c.indices.map(i => byCode.get(i).fold(c(i))(ps =>
+        ps.transpose.map(xs => Math.floorDiv(xs.sum, ps.length.toLong))))
+    }
+    c
+  }
+
+  test("one-pass codebooks equal per-subspace kmeansIntWithCenters and the JVM Lloyd") {
+    val d = createDf(spark, "id int, v array<bigint>", skewed.map { case (i, v) => Seq[Any](i, v) })
+    for (m <- Seq(1, 2, 4); iters <- Seq(1, 2, 3)) {
+      val sub = 4 / m
+      val got = Pq.train(d, "id", "v", d = 4, m = m, k = 2, iters = iters)
+      val perSubspace = (0 until m).map { s =>
+        val sliced = d.select(col("id"), slice(col("v"), s * sub + 1, sub).as("sv"))
+        Cluster.kmeansIntWithCenters(sliced, "id", "sv", k = 2, iters = iters)._2
+      }
+      val jvm = (0 until m).map(s =>
+        jvmLloyd(skewed.map { case (i, v) => i -> v.slice(s * sub, (s + 1) * sub) }, 2, iters))
+      assert(got == perSubspace, s"m=$m iters=$iters")
+      assert(got == jvm, s"m=$m iters=$iters")
+    }
+    // the emptied code kept its seed in subspace 0 but moved in subspace 1
+    val one = Pq.train(d, "id", "v", d = 4, m = 2, k = 2, iters = 1)
+    assert(one(0)(1) == Seq(5L, 5L) && one(1)(1) != Seq(40L, 41L))
+    assert(one(1)(0) == Seq(-4L, -6L), "(-10/3, -17/3) floors toward -inf")
+  }
+
+  test("train builds all m codebooks in iters + 2 Spark actions") {
+    for (m <- Seq(1, 2, 4); iters <- Seq(1, 2))
+      assert(SparkActions.count { Pq.train(df, "id", "v", d = 4, m = m, k = 2, iters = iters); () }
+        == iters + 2, s"m=$m iters=$iters")
+  }
+
+  test("train releases its checkpointed input") {
+    assert(SparkActions.leftPersisted(Pq.train(df, "id", "v", d = 4, m = 2, k = 2, iters = 2)).isEmpty)
   }
 }

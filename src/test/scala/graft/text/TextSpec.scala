@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{TempDirs, TestSpark}
 import graft.testing.DfAssert.createDf
 
 class TextStatsSpec extends AnyFunSuite {
@@ -628,7 +628,7 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val corpus = createDf(spark, "vec_id bigint, v array<float>", manyVecs)
     val built = Similarity.ivfBuild(corpus, "vec_id", "v", nCells = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = TempDirs("graft-ivf").toString
     Similarity.ivfSave(built, dir)
     val loaded = Similarity.ivfLoad(spark, dir)
     assert(loaded.centers == built.centers)
