@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 import graft.plans.GraftExtensions
@@ -16,7 +18,8 @@ import graft.plans.GraftExtensions
   * real cluster should pass `shufflePartitions ≈ 2-3× total cores` and let
   * AQE coalesce down), UTC session time, and the library's extensions
   * (SQL-registered native expressions) injected. [[local]] adds the
-  * host-sized master, UI off and WARN logging for the mains.
+  * host-sized master, UI off and WARN logging for the mains (ERROR for
+  * the checkpoint-release warning).
   */
 object GraftSession {
 
@@ -49,8 +52,16 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    quietCheckpointRelease()
     spark
   }
+
+  /** Spark warns on every release of a local checkpoint that its lineage
+    * was truncated; `Observe.release` frees them on purpose, so that
+    * logger is kept at ERROR.
+    */
+  private[graft] def quietCheckpointRelease(): Unit =
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
 
   /** `SPARK_GRAFT_CPUS` as a core count: a positive integer, or the
     * host's core count when unset.

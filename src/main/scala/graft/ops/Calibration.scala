@@ -204,7 +204,7 @@ object Calibration {
       .filter(col("bin").isNotNull && col("bin") >= 0)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("__p")).as("n_pos"))
-    val bins = byBin.orderBy(col("bin")).collect()
+    val bins = Observe.sortedCollect(byBin, "bin")
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     final case class Blk(n: Long, p: Long, size: Int)
     val stack = scala.collection.mutable.ArrayBuffer.empty[Blk]

@@ -218,8 +218,8 @@ object Funnel {
     // states²-bounded; count the state domain distributed BEFORE the
     // collect so a raw-id typeCol fails with a contract error, not an OOM
     val counts: Array[(String, String, Long)] = Observe.releasing(cells) {
-      val nStates = cells.select(col("from_type").as("__s"))
-        .union(cells.select(col("to_type"))).distinct().count()
+      val nStates = Observe.rowCount(cells.select(col("from_type").as("__s"))
+        .union(cells.select(col("to_type"))).distinct())
       require(nStates <= maxStates.toLong,
         s"stationaryDistribution materializes a states²-bounded transition " +
           s"table on the driver; got $nStates distinct states (cap " +
@@ -691,8 +691,8 @@ object Funnel {
       .agg(count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cells: Array[(String, String, Long)] = Observe.releasing(cellsDf) {
-      val nStates = cellsDf.select(col("from_type").as("__x"))
-        .union(cellsDf.select(col("to_type"))).distinct().count()
+      val nStates = Observe.rowCount(cellsDf.select(col("from_type").as("__x"))
+        .union(cellsDf.select(col("to_type"))).distinct())
       require(nStates <= maxStates.toLong,
         s"removalEffects materializes a states²-bounded transition table " +
           s"on the driver; got $nStates distinct states (cap $maxStates) — " +

@@ -205,15 +205,14 @@ object Graph {
       .withColumn("d", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .localCheckpoint(true)
-    val flagged = e.select(col("src").as("node"))
+    // the seed count and the node count ride the checkpoint job
+    val (flagged, Seq(nsProbe, nProbe)) = Observe.checkpointed(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .join(sources.select(col(sourceCol).as("node")).distinct()
         .withColumn("__s", lit(1L)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__s"), lit(0L)).as("isrc"))
-      .localCheckpoint(true)
-    val nsProbe = flagged.filter(col("isrc") === 1L).count()
+      .select(col("node"), coalesce(col("__s"), lit(0L)).as("isrc")),
+      Seq(sum(col("isrc")), count(lit(1))))
     require(nsProbe > 0, "personalizedPageRank: no seed appears in the graph")
-    val nProbe = flagged.count()
     val useBroadcast = Hints.fitsBroadcast(edges.sparkSession, nProbe, rowBytes = 32L)
     val eJoined = if (useBroadcast) e else e.repartition(col("src")).localCheckpoint(true)
     // |S| is the nsProbe scalar the seed guard already paid for — as a

@@ -1,8 +1,12 @@
 package graft.ops
 
 import scala.collection.concurrent.TrieMap
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
@@ -20,6 +24,17 @@ import org.apache.spark.sql.functions._
   * materializes a generation), the checkpoint cadence of fixed-round
   * loops, the fixpoint loop with its backstop and rounds record, and
   * the release of cached or checkpointed frames on every exit.
+  *
+  * And it holds the driver-read rule: a value the driver reads costs one
+  * Spark job, not one per exchange (under AQE every exchange is a job of
+  * its own). A global aggregate is read through [[scalars]] (a row count
+  * through [[rowCount]]), which drains the frame through one observed pass
+  * instead of adding the aggregate's exchange; only exact metrics move
+  * there (counts, integer or decimal sums, min, max), since an observed
+  * double sum folds in task-completion order. A small table read in order
+  * is collected through [[sortedCollect]], which sorts on the driver
+  * instead of paying a range-sampling job and a sort exchange. A metric
+  * that a checkpoint job can compute rides it through [[checkpointed]].
   */
 object Observe {
 
@@ -39,11 +54,54 @@ object Observe {
     * the `keep` columns are materialized, all when none are named.
     */
   def checkpointed(df: DataFrame, metric: Column, keep: String*): (DataFrame, Long) = {
+    val (cp, ms) = checkpointed(df, Seq(metric), keep: _*)
+    (cp, ms.head)
+  }
+
+  /** [[checkpointed]] with several long-valued metrics, all read from the
+    * one checkpoint job, in the order given.
+    */
+  def checkpointed(df: DataFrame, metrics: Seq[Column], keep: String*): (DataFrame, Seq[Long]) = {
     val obs = Observation()
-    val observed = df.observe(obs, metric.as("m"))
-    val cp = atCaller(df)(
+    val observed = df.observe(obs, metrics.head, metrics.tail: _*)
+    val cp = atCaller(df, "localCheckpoint")(
       (if (keep.isEmpty) observed else observed.select(keep.map(col): _*)).localCheckpoint(true))
-    (cp, Option(obs.get("m")).fold(0L)(_.asInstanceOf[Number].longValue))
+    val row = Await.result(obs.future, Duration.Inf)
+    (cp, metrics.indices.map(i => if (row.isNullAt(i)) 0L else row.getAs[Number](i).longValue))
+  }
+
+  /** Global aggregates `metrics` over `df`, read on the driver in one Spark
+    * job: the metrics ride an observed pass that drains `df` into the
+    * `noop` sink, so no aggregate exchange runs (`agg(...).head()` costs
+    * that exchange as a job of its own, and a cold persisted `df` its
+    * cache build as a third). The row holds the metrics in the order
+    * given, with the types and nulls `df.agg(metrics: _*).head()` has.
+    * Exact metrics only (counts, integer or decimal sums, min, max): an
+    * observed double sum folds in task-completion order.
+    */
+  def scalars(df: DataFrame, metrics: Column*): Row = {
+    val obs = Observation()
+    // the empty projection keeps the scan to the columns the metrics read
+    val drained = df.observe(obs, metrics.head, metrics.tail: _*).select()
+    atCaller(df, "scalars")(drained.write.format("noop").mode("overwrite").save())
+    Await.result(obs.future, Duration.Inf)
+  }
+
+  /** `df.count()` in one Spark job: [[scalars]] of the row count. */
+  def rowCount(df: DataFrame): Long = scalars(df, count(lit(1))).getLong(0)
+
+  /** `df.orderBy(by: _*).collect()` for a driver-sized `df`, sorted on the
+    * driver in Spark's own ascending order (nulls first): one job fewer
+    * than the range-sampling job and sort exchange `orderBy` costs.
+    */
+  def sortedCollect(df: DataFrame, by: String*): Array[Row] = {
+    val idx = by.map(df.schema.fieldIndex)
+    val types = idx.map(df.schema(_).dataType)
+    val toCatalyst = types.map(CatalystTypeConverters.createToCatalystConverter)
+    val order = InterpretedOrdering.forSchema(types)
+    df.collect()
+      .map(r => (InternalRow.fromSeq(idx.zip(toCatalyst).map { case (i, c) => c(r.get(i)) }), r))
+      .sortBy(_._1)(order).map(_._2)
   }
 
   /** Round `i` of `n` in a fixed-round loop: `df` checkpointed every third
@@ -51,7 +109,7 @@ object Observe {
     * materialization job every round.
     */
   def cadence(df: DataFrame, i: Int, n: Int): DataFrame =
-    if (i % 3 == 0 || i == n) atCaller(df)(df.localCheckpoint(true)) else df
+    if (i % 3 == 0 || i == n) atCaller(df, "localCheckpoint")(df.localCheckpoint(true)) else df
 
   /** Rounds the last run of each named [[fixpoint]] loop took: a
     * measurement-only record for the ScaleProbe protocol, last writer
@@ -105,12 +163,12 @@ object Observe {
     case _ => df.unpersist(false); ()
   }
 
-  /** Run `body` with the call site of the jobs it starts set to the first
-    * caller outside this object, so they read `localCheckpoint at
-    * Graph.scala:141` (in the UI and in listener events) rather than name
-    * this helper. A call site the caller already set is kept.
+  /** Run `body` with the call site of the jobs it starts set to `op` at
+    * the first caller outside this object, so they read `localCheckpoint
+    * at Graph.scala:141` (in the UI and in listener events) rather than
+    * name this helper. A call site the caller already set is kept.
     */
-  private def atCaller[T](df: DataFrame)(body: => T): T = {
+  private def atCaller[T](df: DataFrame, op: String)(body: => T): T = {
     val sc = df.sparkSession.sparkContext
     val caller = Thread.currentThread.getStackTrace.find { f =>
       val c = f.getClassName
@@ -118,7 +176,7 @@ object Observe {
     }
     caller match {
       case Some(f) if sc.getLocalProperty("callSite.short") == null =>
-        sc.setCallSite(s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}")
+        sc.setCallSite(s"$op at ${f.getFileName}:${f.getLineNumber}")
         try body finally sc.clearCallSite()
       case _ => body
     }

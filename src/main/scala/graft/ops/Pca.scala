@@ -55,7 +55,7 @@ object Pca {
       pairIdx.map { case (i, j) =>
         sum(col(s"__x$i").cast(dec) * col(s"__x$j").cast(dec)).as(s"__p${i}_$j")
       }
-    val row = base.agg(aggs.head, aggs.tail: _*).collect().head
+    val row = Observe.scalars(base, aggs: _*)
     val n = BigInt(row.getLong(0))
     def dcm(idx: Int): BigInt =
       Option(row.getDecimal(idx)).map(d => BigInt(d.toBigInteger)).getOrElse(BigInt(0))

@@ -547,8 +547,8 @@ object PriceIndex {
     geksPairsCache.synchronized(Option(geksPairsCache.get(key))).getOrElse {
       val fresh = GeksPairs(
         projected.collect(), // bounded: periods × window rows
-        df.select(periodCol.as("__pdr")).distinct().orderBy(col("__pdr"))
-          .select(col("__pdr").cast("string")).collect().map(_.getString(0)))
+        Observe.sortedCollect(df.select(periodCol.as("__pdr")).distinct()
+          .select(col("__pdr"), col("__pdr").cast("string")), "__pdr").map(_.getString(1)))
       geksPairsCache.synchronized {
         Option(geksPairsCache.get(key)).getOrElse { geksPairsCache.put(key, fresh); fresh }
       }

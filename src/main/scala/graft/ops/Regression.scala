@@ -544,12 +544,12 @@ object Regression {
       val b1 = b1n.toDouble / 1e9
       val p = lit(1.0) / (lit(1.0) + exp(-(lit(b0) + lit(b1) * col("__x"))))
       val w = p * (lit(1.0) - p)
-      val r = base.agg(
+      val r = Observe.scalars(base,
         sum(nano(col("__y") - p)).as("g0"),
         sum(nano(col("__x") * (col("__y") - p))).as("g1"),
         sum(nano(w)).as("h00"),
         sum(nano(col("__x") * w)).as("h01"),
-        sum(nano(col("__x") * col("__x") * w)).as("h11")).head()
+        sum(nano(col("__x") * col("__x") * w)).as("h11"))
       def dbl(i: Int): Double =
         if (r.isNullAt(i)) 0.0 else r.getDecimal(i).doubleValue() / 1e9
       val (g0, g1, h00, h01, h11) = (dbl(0), dbl(1), dbl(2), dbl(3), dbl(4))
@@ -877,7 +877,7 @@ object Regression {
     // released on every exit (r15, ADVICE r14): the fit runs driver-side
     // sweeps that can throw; the lazy influence scan below reads the source
     val ((b0n, b1n, degenerate), m) = Observe.releasing(base) {
-      (logisticFitNano(base, iterations), base.agg(
+      (logisticFitNano(base, iterations), Observe.scalars(base,
         sum(when(isT, 1L).otherwise(0L)).as("n1"),
         sum(when(!isT, 1L).otherwise(0L)).as("n0"),
         armSum(t = true, col("__x"), "sx1"), armSum(t = true, col("__o"), "so1"),
@@ -885,7 +885,7 @@ object Regression {
         armSum(t = true, col("__x") * col("__x"), "sxx1"),
         armSum(t = false, col("__x"), "sx0"), armSum(t = false, col("__o"), "so0"),
         armSum(t = false, col("__x") * col("__o"), "sxo0"),
-        armSum(t = false, col("__x") * col("__x"), "sxx0")).head())
+        armSum(t = false, col("__x") * col("__x"), "sxx0")))
     }
     val n1 = m.getLong(0)
     val n0 = m.getLong(1)
@@ -1236,12 +1236,12 @@ object Regression {
       val b0 = b0n.toDouble / 1e9
       val b1 = b1n.toDouble / 1e9
       val lam = exp(lit(b0) + lit(b1) * col("__x"))
-      val r = base.agg(
+      val r = Observe.scalars(base,
         sum(nano(col("__y") - lam)).as("g0"),
         sum(nano(col("__x") * (col("__y") - lam))).as("g1"),
         sum(nano(lam)).as("h00"),
         sum(nano(col("__x") * lam)).as("h01"),
-        sum(nano(col("__x") * col("__x") * lam)).as("h11")).head()
+        sum(nano(col("__x") * col("__x") * lam)).as("h11"))
       def dbl(i: Int): Double =
         if (r.isNullAt(i)) 0.0 else r.getDecimal(i).doubleValue() / 1e9
       val (g0, g1, h00, h01, h11) = (dbl(0), dbl(1), dbl(2), dbl(3), dbl(4))
@@ -1324,8 +1324,8 @@ object Regression {
     val wins: Array[(String, String, Long)] = Observe.releasing(cells) {
       // hard bounded-panel contract (r12): count the panel distributed,
       // BEFORE anything reaches the driver — a contract error, not an OOM
-      val nItems = cells.select(col("__w").as("__i"))
-        .union(cells.select(col("__l"))).distinct().count()
+      val nItems = Observe.rowCount(cells.select(col("__w").as("__i"))
+        .union(cells.select(col("__l"))).distinct())
       require(nItems <= maxItems.toLong,
         s"bradleyTerry materializes an items²-bounded duel table on the " +
           s"driver; got $nItems distinct items (cap $maxItems). Aggregate " +

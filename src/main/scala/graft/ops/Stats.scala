@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.graftshim.GraftColumns
+import org.apache.spark.sql.types.{DecimalType, MapType, StructType}
 
 /** Planning and inference statistics — the numbers you compute ABOUT a
   * pipeline before or after running it: how big a join will be, how
@@ -3014,6 +3018,22 @@ object Stats {
       :+ when(defined && c > 0.0, round(h / c, 6)).as("h_tie"): _*)
   }
 
+  /** The `value` column of driver-held `rows` (of `schema`) keyed by
+    * their `keys` columns, as one literal map: `lookup(key)` reads it for a
+    * struct of the key columns. Every value carries its exact type.
+    */
+  private def literalMap(rows: Array[Row], schema: StructType, keys: Seq[String],
+                         value: String): Column => Column = {
+    val keyType = StructType(keys.map(schema(_)))
+    val toKey = CatalystTypeConverters.createToCatalystConverter(keyType)
+    val (ki, vi) = (keys.map(schema.fieldIndex), schema.fieldIndex(value))
+    val toValue = CatalystTypeConverters.createToCatalystConverter(schema(vi).dataType)
+    val map = ArrayBasedMapData(
+      rows.map(r => toKey(Row.fromSeq(ki.map(r.get)))), rows.map(r => toValue(r.get(vi))))
+    val mapLit = GraftColumns.ofExpr(Literal(map, MapType(keyType, schema(vi).dataType)))
+    key => mapLit(key)
+  }
+
   /** Huber M-estimator of location — the robust mean BETWEEN the mean
     * (efficient, outlier-fragile) and the median (robust, inefficient):
     * IRLS sweeps of the weighted mean with weights
@@ -3032,9 +3052,10 @@ object Stats {
     * group sums; μ re-quantizes to micro each sweep, and the oracle
     * replays every sweep CTE-for-CTE (the GLM iteration contract).
     *
-    * Scale shape: `sweeps`+1 group-keyed map-combined aggregations
-    * with a k-row broadcast μ join between — nothing data-sized ever
-    * joins or windows; state is the checkpointed k-row μ table.
+    * Scale shape: `sweeps`+1 group-keyed map-combined aggregations,
+    * each collected to the driver — nothing data-sized ever joins or
+    * windows; state is the k-row μ table, which each sweep reads as a
+    * literal group → μ map (an O(k) lookup per row).
     */
   def huberLocation(df: DataFrame, groupBy: Seq[String], value: Column,
                     c: Double, sweeps: Int = 4): DataFrame = {
@@ -3052,33 +3073,38 @@ object Stats {
     val base = df.select(gCols :+ round(value * lit(1e6), 0).cast("long").as("__x"): _*)
       .filter(gCols.map(_.isNotNull).reduce(_ && _) && col("__x").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the k-row mu table is driver-sized by contract: each generation is
+    // collected, and the next sweep reads mu from a literal map of it (the
+    // k-means-centers posture), so a sweep is its aggregate's exchange and
+    // the collect, with no broadcast job and no checkpoint to release
+    def held(q: DataFrame): (DataFrame, Column) = {
+      val rows = q.collect()
+      (q.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), q.schema),
+        literalMap(rows, q.schema, groupBy, "__mu")(struct(gCols: _*)))
+    }
+    def counts: Seq[Column] = Seq(count(lit(1)).as("__n"), sum(col("__x").cast(dec)).as("__s1"))
     val mu =
       Observe.releasing(base) {
-        val m0 = base.groupBy(gCols: _*)
-          .agg(count(lit(1)).as("__n"), sum(col("__x").cast(dec)).as("__s1"))
-        var muV = m0.select(gCols :+ col("__n") :+ col("__s1")
+        var (muV, muOf) = held(base.groupBy(gCols: _*).agg(counts.head, counts.tail: _*)
+          .select(gCols :+ col("__n") :+ col("__s1")
             :+ round(col("__s1").cast("double") / col("__n").cast("double"), 0)
-              .cast("long").as("__mu"): _*)
-          .localCheckpoint(true)
+              .cast("long").as("__mu"): _*))
         for (_ <- 1 to sweeps) {
-          // one broadcast per sweep: n and s1 (constant per group) ride the
-          // aggregate, so it is the next generation as it stands
-          val j = base.join(broadcast(muV.drop("__w")), groupBy)
-          val d = abs(col("__x") - col("__mu"))
+          val d = abs(col("__x") - muOf)
           val w = when(d <= cMicro, lit(1.0))
             .otherwise(lit(cMicro.toDouble) / d.cast("double"))
-          val next = j.groupBy(gCols: _*)
-            .agg(first(col("__n")).as("__n"), first(col("__s1")).as("__s1"),
-              sum(round(w * col("__x").cast("double"), 0).cast(dec)).as("__wx"),
-              sum(round(w * lit(1e6), 0).cast("long").cast(dec)).as("__w"))
+          // n and s1 are recounted with the sweep's sums (exact integers),
+          // so the aggregate is the next generation as it stands
+          val next = held(base.groupBy(gCols: _*)
+            .agg(counts.head, counts.tail :+
+              sum(round(w * col("__x").cast("double"), 0).cast(dec)).as("__wx") :+
+              sum(round(w * lit(1e6), 0).cast("long").cast(dec)).as("__w"): _*)
             .select(gCols :+ col("__n") :+ col("__s1")
               :+ round(col("__wx").cast("double") * lit(1e6) /
                 col("__w").cast("double"), 0).cast("long").as("__mu")
-              :+ col("__w"): _*)
-            .localCheckpoint(true)
-          // the eager checkpoint above no longer reads the superseded sweep
-          Observe.release(muV)
-          muV = next
+              :+ col("__w"): _*))
+          muV = next._1
+          muOf = next._2
         }
         muV
       }
@@ -3671,8 +3697,8 @@ object Stats {
     // group list is k-bounded BY DEFINITION — driver literals (the
     // k-means-centers posture), so the pair explode stays narrow and
     // no non-equi join ever reaches the plan guard
-    val groups = counts.select(col("__g")).distinct()
-      .orderBy(col("__g")).collect().map(_.getString(0)).toSeq
+    val groups = Observe.sortedCollect(counts.select(col("__g")).distinct(), "__g")
+      .map(_.getString(0)).toSeq
     val pairs = for {
       i <- groups.indices
       j <- groups.indices
@@ -4727,11 +4753,13 @@ object Stats {
       .filter(gCols.map(_.isNotNull).reduce(_ && _) && col("__x").isNotNull)
       .groupBy(gCols :+ col("__x"): _*)
       .agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // not persisted: the returned frame reads byVal after this call ends,
+    // so nothing could release a cache entry, and ReuseExchange already
+    // shares its one exchange among the reads of that frame
     // the Walsh grid squares with the value domain — guard it with one
     // cheap aggregation before paying the join (the quadPairCount posture)
-    val worst = byVal.groupBy(gCols: _*).agg(count(lit(1)).as("__d"))
-      .agg(max(col("__d"))).collect().head
+    val worst = Observe.scalars(byVal.groupBy(gCols: _*).agg(count(lit(1)).as("__d")),
+      max(col("__d")))
     val worstD = if (worst.isNullAt(0)) 0L else worst.getLong(0)
     require(worstD <= maxDistinct,
       s"hodgesLehmann's Walsh grid is distinct-value²-bounded; a group " +
@@ -4978,8 +5006,8 @@ object Stats {
       .filter(col("__x").isNotNull && col("__y").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cells: Array[(Long, Long, Long)] = Observe.releasing(base) {
-      val ext = base.agg(min(col("__x")), max(col("__x")),
-        min(col("__y")), max(col("__y"))).collect().head
+      val ext = Observe.scalars(base, min(col("__x")), max(col("__x")),
+        min(col("__y")), max(col("__y")))
       require(!ext.isNullAt(0), "distanceCorrelation needs at least one row")
       val (xmn, xmx) = (ext.getLong(0), ext.getLong(1))
       val (ymn, ymx) = (ext.getLong(2), ext.getLong(3))
@@ -5069,9 +5097,11 @@ object Stats {
       .filter(gCols.map(_.isNotNull).reduce(_ && _) && col("__x").isNotNull)
       .groupBy(gCols :+ col("__x"): _*)
       .agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val worst = byVal.groupBy(gCols: _*).agg(count(lit(1)).as("__d"))
-      .agg(max(col("__d"))).collect().head
+    // not persisted: the returned frame reads byVal after this call ends,
+    // so nothing could release a cache entry, and ReuseExchange already
+    // shares its one exchange among the reads of that frame
+    val worst = Observe.scalars(byVal.groupBy(gCols: _*).agg(count(lit(1)).as("__d")),
+      max(col("__d")))
     val worstD = if (worst.isNullAt(0)) 0L else worst.getLong(0)
     require(worstD <= maxDistinct,
       s"qnScale's difference grid is distinct-value²-bounded; a group " +

@@ -75,7 +75,7 @@ object Survey {
     val cells: Array[(String, String, Long, BigInt)] = Observe.releasing(cellsDf) {
       // hard bounded-panel contract: count the design cells distributed
       // BEFORE anything reaches the driver
-      val nCells = cellsDf.count()
+      val nCells = Observe.rowCount(cellsDf)
       require(nCells <= maxCells.toLong,
         s"rake materializes the margin-cell table on the driver; got " +
           s"$nCells occupied cells (cap $maxCells). Raking margins must " +

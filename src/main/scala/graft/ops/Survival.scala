@@ -400,8 +400,8 @@ object Survival {
       val dD = col("__d").cast("double")
       val uT = col("__sx").cast("double") / lit(1e9) - dD * (s1 / s0)
       val iT = dD * (s2 / s0 - (s1 / s0) * (s1 / s0))
-      val agg = cum.filter(col("__d") > 0L && col("__s0") > 0)
-        .agg(sum(nano(uT)).as("__u"), sum(nano(iT)).as("__i")).head()
+      val agg = Observe.scalars(cum.filter(col("__d") > 0L && col("__s0") > 0),
+        sum(nano(uT)).as("__u"), sum(nano(iT)).as("__i"))
       def dbl(i: Int): Double =
         if (agg.isNullAt(i)) 0.0 else agg.getDecimal(i).doubleValue() / 1e9
       (dbl(0), dbl(1))
@@ -468,7 +468,7 @@ object Survival {
     val grid0 = Observe.releasing(cells) {
       val tTbl = cells.select(col("__t")).distinct()
       val sTbl = cells.select(col("__s")).distinct()
-      val (nT, nS) = (tTbl.count(), sTbl.count())
+      val (nT, nS) = (Observe.rowCount(tTbl), Observe.rowCount(sTbl))
       require(nT * nS <= maxGrid,
         s"concordanceIndex densifies a ${nT}×${nS} duration×score grid " +
           s"(cap $maxGrid cells). Quantize the score into coarser buckets " +

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.multimodal.Multimodal
-import graft.ops.{AsOf, Columns, Concat, Grouped, Merge, Pack, Profile, RangeJoin, Reshape, Sampling, Skew, Timeseries}
+import graft.ops.{AsOf, Columns, Concat, Grouped, Merge, Observe, Pack, Profile, RangeJoin, Reshape, Sampling, Skew, Timeseries}
 import graft.streaming.Streaming
 import graft.text.{Boilerplate, Cluster, Dedup, Dsir, LangModel, Pq, Rank, Similarity, TextStats}
 
@@ -134,23 +134,23 @@ object DedupQueries {
     val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
     // LEFT joins: a vertex MISSING from cc must count as a violation,
     // not silently drop the edge row — the check may not fail open.
-    val edgeViol = pairs
+    val edgeViol = Observe.rowCount(pairs
       .join(cc.select(col("v").as("id_a"), col("label").as("la")), Seq("id_a"), "left")
       .join(cc.select(col("v").as("id_b"), col("label").as("lb")), Seq("id_b"), "left")
-      .filter(col("la").isNull || col("lb").isNull || col("la") =!= col("lb")).count()
-    val minViol = cc.groupBy(col("label")).agg(min(col("v")).as("min_v"))
-      .filter(col("label") =!= col("min_v")).count()
+      .filter(col("la").isNull || col("lb").isNull || col("la") =!= col("lb")))
+    val minViol = Observe.rowCount(cc.groupBy(col("label")).agg(min(col("v")).as("min_v"))
+      .filter(col("label") =!= col("min_v")))
     // vertex completeness: cc must cover exactly the pair endpoints
-    val nEndpoints = pairs.select(col("id_a").as("v"))
-      .union(pairs.select(col("id_b").as("v"))).distinct().count()
-    val nVerts = cc.count()
+    val nEndpoints = Observe.rowCount(pairs.select(col("id_a").as("v"))
+      .union(pairs.select(col("id_b").as("v"))).distinct())
+    val nVerts = Observe.rowCount(cc)
     val vertViol = if (nVerts == nEndpoints) 0L else 1L
     // keep-one identity, derived from the SAME cc result (running
     // dedupByPairs would re-run the whole iterative loop)
     val losers = cc.filter(col("v") =!= col("label")).select(col("v").as("doc_id"))
-    val kept = docs.join(losers, Seq("doc_id"), "left_anti").count()
-    val nDocs = docs.count()
-    val nComponents = cc.select(col("label")).distinct().count()
+    val kept = Observe.rowCount(docs.join(losers, Seq("doc_id"), "left_anti"))
+    val nDocs = Observe.rowCount(docs)
+    val nComponents = Observe.rowCount(cc.select(col("label")).distinct())
     val keepViol = if (kept == nDocs - nVerts + nComponents) 0L else 1L
     pairs.unpersist()
     val spark = s

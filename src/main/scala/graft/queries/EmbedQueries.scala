@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.multimodal.Multimodal
-import graft.ops.{AsOf, Columns, Concat, Grouped, Merge, Pack, Profile, RangeJoin, Reshape, Sampling, Skew, Timeseries}
+import graft.ops.{AsOf, Columns, Concat, Grouped, Merge, Observe, Pack, Profile, RangeJoin, Reshape, Sampling, Skew, Timeseries}
 import graft.streaming.Streaming
 import graft.text.{Boilerplate, Cluster, Dedup, Dsir, LangModel, Pq, Rank, Similarity, TextStats}
 
@@ -1159,10 +1159,9 @@ object EmbedQueries {
       transform(col("embedding"),
         x => round(x.cast("double") * 1000, 0).cast("long")).as("q"))
     // per-dim integer codebook bounds, shipped back as plan literals
-    val stats = e.select(posexplode(col("q")).as(Seq("__i", "__v")))
+    val stats = Observe.sortedCollect(e.select(posexplode(col("q")).as(Seq("__i", "__v")))
       .groupBy(col("__i"))
-      .agg(min(col("__v")).as("mn"), max(col("__v")).as("mx"))
-      .orderBy(col("__i")).collect()
+      .agg(min(col("__v")).as("mn"), max(col("__v")).as("mx")), "__i")
     val mnLit = typedLit(stats.map(_.getLong(1)).toSeq)
     val rgLit = typedLit(stats.map(r => r.getLong(2) - r.getLong(1)).toSeq)
     def idiv(num: Column, den: Column): Column =

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Observe
+
 /** Blocked fuzzy (edit-distance) matching — the record-linkage /
   * typo-dedup companion to the token-set operators in [[Dedup]].
   *
@@ -175,9 +177,8 @@ object Fuzzy {
                             pairBudget: Long): Long =
     if (pairBudget == 0L) Long.MaxValue
     else {
-      val s = rows.groupBy(blockNames.map(col): _*).agg(count(lit(1)).as("__c"))
-        .agg(sum(expr("cast(__c as decimal(38,0)) * (__c - 1)")))
-        .collect().head
+      val s = Observe.scalars(rows.groupBy(blockNames.map(col): _*).agg(count(lit(1)).as("__c")),
+        sum(expr("cast(__c as decimal(38,0)) * (__c - 1)")))
       if (s.isNullAt(0)) 0L
       else {
         val half = s.getDecimal(0).toBigInteger.shiftRight(1)

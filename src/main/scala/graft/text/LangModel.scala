@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ops.Observe
+
 /** Statistical n-gram language-model scoring — the perplexity-proxy
   * quality filter of the classic pretraining pipelines (CCNet-style):
   * train bigram counts on a trusted corpus, score candidate documents by
@@ -59,7 +61,7 @@ object LangModel {
     * smoothing denominator's support.
     */
   def vocabSize(model: DataFrame): Long =
-    model.select("w1").distinct().count()
+    Observe.rowCount(model.select("w1").distinct())
 
   /** Score each document against a trained bigram model with add-k
     * smoothing: `P(w2|w1) = (c12 + k) / (c1 + k·V)`, unseen pairs and

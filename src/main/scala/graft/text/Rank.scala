@@ -398,7 +398,8 @@ object Rank {
     * a TakeOrdered top-max(k) — never a whole-vocabulary
     * single-partition sort — then a ≤max(k)-row cumulative window and
     * an O(|ks|) literal-array explode; corpus totals ride a 1-row
-    * broadcast. The counting pass is shared via persist.
+    * broadcast. The counting exchange feeds totals and top-k through
+    * ReuseExchange, with no cache entry left behind.
     */
   def vocabCoverage(docs: DataFrame, text: Column, ks: Seq[Int]): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1) && ks.max <= 1000000,
@@ -408,7 +409,6 @@ object Rank {
       .select(explode(split(lower(text), "[^a-z0-9]+")).as("__w"))
       .filter(col("__w") =!= "")
       .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
-      .persist() // vocabulary-sized; feeds totals + top-k
     val totals = freqs.agg(sum(col("__f")).as("__total"))
     val W = org.apache.spark.sql.expressions.Window
       .orderBy(col("__f").desc, col("__w").asc)

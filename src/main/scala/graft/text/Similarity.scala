@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Observe
 import graft.sources.Sources
 
 /** Embedding similarity search.
@@ -639,11 +640,9 @@ object Similarity {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val rows = df.select(col(idCol).as("__id"), toDoubleArr(col(vecCol)).as("__v"))
       .filter(col("__id").isNotNull && col("__v").isNotNull)
-    val stats = rows.select(posexplode(col("__v")).as(Seq("__i", "__x")))
+    val stats = Observe.sortedCollect(rows.select(posexplode(col("__v")).as(Seq("__i", "__x")))
       .groupBy(col("__i"))
-      .agg(min(col("__x")).as("__mn"), max(col("__x")).as("__mx"))
-      .orderBy(col("__i"))
-      .collect()
+      .agg(min(col("__x")).as("__mn"), max(col("__x")).as("__mx")), "__i")
     require(stats.nonEmpty, "sq8Audit needs at least one vector")
     val minArr = stats.map(_.getDouble(1))
     val rangeArr = stats.map(r => r.getDouble(2) - r.getDouble(1))
@@ -713,7 +712,7 @@ object Similarity {
     require(k >= 1 && k <= 1000, s"k out of range: $k")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-    val n = base.count()
+    val n = Observe.rowCount(base)
     require(n <= maxVectors,
       s"hubnessAudit is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
         s"$maxVectors — sample upstream (the audit posture) or use the " +
@@ -770,7 +769,7 @@ object Similarity {
               maxVectors: Long = 100000L): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-    val n = base.count()
+    val n = Observe.rowCount(base)
     require(n <= maxVectors,
       s"twoNnId is the EXACT O(n^2) audit: $n vectors > maxVectors=" +
         s"$maxVectors — sample upstream (the audit posture)")

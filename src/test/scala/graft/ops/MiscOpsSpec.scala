@@ -211,6 +211,57 @@ class ObserveSpec extends AnyFunSuite {
     assert(none == 0L && empty.isEmpty)
   }
 
+  test("checkpointed: several metrics ride the one checkpoint job, in order") {
+    val df = createDf(spark, "v bigint", Seq(Seq[Any](2L), Seq[Any](6L), Seq[Any](7L)))
+    var got: (org.apache.spark.sql.DataFrame, Seq[Long]) = null
+    val actions = graft.testing.SparkActions.count {
+      got = Observe.checkpointed(df, Seq(sum(col("v")), count(lit(1)), max(col("v"))))
+    }
+    assert(actions == 1 && got._2 == Seq(15L, 3L, 7L))
+    assert(got._1.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 6L, 7L))
+  }
+
+  test("scalars: agg(...).head()'s row in one job, on a fixture, an empty and a cold cached frame") {
+    val df = createDf(spark, "k string, v bigint, x double",
+      Seq(Seq[Any]("a", 1L, 0.5), Seq[Any]("b", null, 2.5), Seq[Any]("a", 4L, -1.0)))
+    def metrics = Seq(count(lit(1)).as("n"), sum(col("v")).as("s"),
+      sum(col("v").cast("decimal(38,0)")).as("sd"), min(col("x")), max(col("k")),
+      sum(when(col("k") === "a", 1L).otherwise(0L)).as("na"))
+    def check(d: org.apache.spark.sql.DataFrame): Unit = {
+      val expected = d.agg(metrics.head, metrics.tail: _*).head()
+      var got: org.apache.spark.sql.Row = null
+      val jobs = graft.testing.SparkActions.jobs { got = Observe.scalars(d, metrics: _*) }
+      assert(got == expected && jobs == 1)
+      assert(got.schema.map(_.dataType) == expected.schema.map(_.dataType))
+    }
+    check(df)
+    val empty = df.filter(col("v") > 100L)
+    check(empty)
+    assert(Observe.scalars(empty, metrics: _*).toSeq == Seq(0L, null, null, null, null, null))
+    val cold = df.filter(col("k").isNotNull).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      var got: org.apache.spark.sql.Row = null
+      val jobs = graft.testing.SparkActions.jobs { got = Observe.scalars(cold, metrics: _*) }
+      assert(jobs == 1, "the cold cache builds in the one observed job")
+      assert(got == df.filter(col("k").isNotNull).agg(metrics.head, metrics.tail: _*).head())
+    } finally Observe.release(cold)
+  }
+
+  test("sortedCollect: orderBy's rows for int, string and date keys, nulls first") {
+    val df = createDf(spark, "i int, s string, d date",
+      Seq(Seq[Any](3, "b", java.sql.Date.valueOf("2024-03-01")),
+        Seq[Any](null, "é", null),
+        Seq[Any](-1, "a", java.sql.Date.valueOf("2023-12-31")),
+        Seq[Any](10, null, java.sql.Date.valueOf("2024-01-15")),
+        Seq[Any](2, "B", java.sql.Date.valueOf("1999-07-04"))))
+    for (c <- Seq("i", "s", "d"))
+      assert(Observe.sortedCollect(df, c).toSeq == df.orderBy(col(c)).collect().toSeq, c)
+    assert(Observe.sortedCollect(df, "s", "i").toSeq ==
+      df.orderBy(col("s"), col("i")).collect().toSeq)
+    val grouped = df.groupBy(col("s")).count()
+    assert(graft.testing.SparkActions.jobs { Observe.sortedCollect(grouped, "s"); () } == 2)
+  }
+
   /** Halve every value until the sum stops moving: 7 -> 3 -> 1 -> 0 -> 0. */
   private def halving(maxRounds: Int) = {
     val init = createDf(spark, "x bigint", Seq(Seq[Any](7L))).localCheckpoint(true)

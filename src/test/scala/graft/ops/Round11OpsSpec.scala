@@ -92,6 +92,13 @@ class Round11OpsSpec extends AnyFunSuite {
     assert(out(2) == ((10L, 4L, 8L, 8L, 1.0))) // vocab smaller than k
   }
 
+  test("vocab coverage leaves no cached frame behind") {
+    val docs = createDf(spark, "text string",
+      Seq(Seq[Any]("a a b c"), Seq[Any]("a b d A")))
+    assert(graft.testing.SparkActions.leftPersisted(
+      graft.text.Rank.vocabCoverage(docs, col("text"), Seq(1, 2, 10)).collect()).isEmpty)
+  }
+
   test("selectedAtHalf agrees with thresholding the score away from the boundary") {
     val w = graft.text.Classify.demoWeightsMicros(64)
     val docs = graft.sources.Sources.readTable(spark, "/root/testdata/sf0.001", "documents")

@@ -200,6 +200,15 @@ class Round12OpsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("distinct quantized values"))
   }
 
+  test("hodgesLehmann leaves no cached frame behind, on the guard's throw too") {
+    val df = createDf(spark, "v double",
+      Seq(1.0, 2.0, 10.0).map(v => Seq[Any](v))).withColumn("g", lit("x"))
+    assert(graft.testing.SparkActions.leftPersisted(
+      Stats.hodgesLehmann(df, Seq("g"), col("v")).collect()).isEmpty)
+    assert(graft.testing.SparkActions.leftPersisted(intercept[IllegalArgumentException](
+      Stats.hodgesLehmann(df, Seq("g"), col("v"), maxDistinct = 2L))).isEmpty)
+  }
+
   test("hodgesLehmann: duplicated values weight the diagonal correctly") {
     // {1,1,3}: Walsh avgs = 1 (x3: (1,1),(1,1'),(1',1')), 2 (x2), 3 (x1)
     // sorted: 1,1,1,2,2,3 -> median (1+2)/2 = 1.5 -> quarter 6e6

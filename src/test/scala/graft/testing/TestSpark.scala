@@ -18,6 +18,7 @@ object TestSpark {
     // whole-frame windows warn on every run; the registry sweep's window
     // guard already pins each one to a bounded table
     Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
+    GraftSession.quietCheckpointRelease()
     s
   }
 }
