@@ -630,9 +630,10 @@ object PriceIndex {
     * sweep), then one period-keyed reduction: two exchanges per sweep,
     * both linear. The level vector P is period-bounded (time-, not
     * data-sized), so it round-trips through the driver between sweeps
-    * as a broadcast literal frame — the same bounded contract as
-    * k-means centers — which also keeps the final plan flat instead of
-    * `2·iters` joins deep. The item table never collects.
+    * as a literal map read per row — the same bounded contract as
+    * k-means centers, with no broadcast job per sweep — which also keeps
+    * the final plan flat instead of `2·iters` joins deep. The item table
+    * never collects.
     */
   def gearyKhamis(df: DataFrame, itemCol: String, periodCol: Column,
                   expCol: String, qtyCol: String,
@@ -647,6 +648,7 @@ object PriceIndex {
       .select(col("__it"), col("__pd"),
         (col("__S").cast("double") / col("__Q").cast("double")).as("__p"),
         col("__Q").cast("double").as("__q"))
+      .filter(col("__pd").isNotNull) // a period without a name has no level
       .withColumn("__qm", micro(col("__q")))
       .withColumn("__pqm", micro(col("__p") * col("__q")))
       // persist the panel PRE-partitioned and PRE-sorted on the item key:
@@ -670,13 +672,13 @@ object PriceIndex {
       var converged = false
       val Wit = org.apache.spark.sql.expressions.Window.partitionBy(col("__it"))
       while (itersRun < iters && !converged) {
-        val pDf = pLevels.toDF("__pd", "__lv")
+        val levelOf = typedLit(pLevels.toMap)
         // π as an item-partitioned window: integer sums partition exactly
         // like the aggregate form (same longs, any order), but the panel
         // shuffles ONCE per sweep instead of aggregate-then-join's twice
         val pi = sum(micro((col("__p") / col("__lv")) * col("__q"))).over(Wit)
           .cast("double") / sum(col("__qm")).over(Wit).cast("double")
-        val newLevels = uv.join(broadcast(pDf), Seq("__pd"))
+        val newLevels = uv.withColumn("__lv", levelOf(col("__pd").cast("string")))
           .withColumn("__pi", pi)
           .groupBy(col("__pd"))
           .agg(sum(col("__pqm")).as("__nu"),
@@ -736,7 +738,7 @@ object PriceIndex {
     * same sweep plan — every row of the item needs γ back, and the
     * window form computes and re-attaches it in ONE item-keyed
     * exchange where aggregate-then-join would shuffle the panel twice.
-    * Each sweep is a single distributed job: broadcast δ literals →
+    * Each sweep is a single distributed job: δ read from a literal map →
     * item-window γ → period-keyed δ reduction. No inter-sweep caching
     * needed.
     */
@@ -784,8 +786,8 @@ object PriceIndex {
             // γ from the PREVIOUS δ as an item-partitioned window: the
             // exact integer sums partition identically to the old
             // aggregate-then-join form, but the panel shuffles once
-            val dDf = broadcast(deltas.toDF("__pd", "__dnano"))
-            uv.join(dDf, Seq("__pd"))
+            val deltaOf = typedLit(deltas.toMap)
+            uv.withColumn("__dnano", deltaOf(col("__pd")))
               .withColumn("__g",
                 sum(nano(col("__s") * (col("__lnp")
                     - col("__dnano").cast("double") / lit(1e9)))).over(Wit)

@@ -537,26 +537,17 @@ object Similarity {
   /** Approximate near-dup pairs: only same-LSH-bucket pairs are scored.
     * High-cosine pairs land in the same bucket with probability
     * `(1 - θ/π)^nPlanes` (θ = angle), so a near-dup threshold like 0.9
-    * keeps recall high at few planes while the bucket join — one shuffle
-    * on the bucket id, pair work bounded by the largest bucket — replaces
-    * the O(n²) cross product entirely.
+    * keeps recall high at few planes while the bucket join replaces the
+    * O(n²) cross product entirely.
+    *
+    * Scale shape: the one-band case of [[lshNearDupPairsBanded]]
+    * (`bandedPlanes(nPlanes, 1, dim)` draws exactly `randomPlanes(nPlanes,
+    * dim)`): `(bucket, id)` rows shuffle once, and each same-bucket pair
+    * is reranked once against the normalized vectors.
     */
   def lshNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                      threshold: Double, nPlanes: Int = 6, dim: Int = 64): DataFrame = {
-    val planes = randomPlanes(nPlanes, dim)
-    // One normalize+bucket lineage, shuffled once on the bucket: the
-    // repartition makes both self-join sides identical Exchange subtrees,
-    // so ReuseExchange computes normalization/bucketing once, and the
-    // bucket join needs no further shuffle.
-    val bucketed = normalized(df, idCol, vecCol, "__id", "__v")
-      .withColumn("bucket", lshBucket(col("__v"), planes))
-      .repartition(col("bucket"))
-    val a = bucketed.select(col("bucket"), col("__id").as("id_a"), col("__v").as("va"))
-    val b = bucketed.select(col("bucket"), col("__id").as("id_b"), col("__v").as("vb"))
-    a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), dot(col("va"), col("vb")).as("cos"))
-      .filter(col("cos") > threshold)
-  }
+                      threshold: Double, nPlanes: Int = 6, dim: Int = 64): DataFrame =
+    lshNearDupPairsBanded(df, idCol, vecCol, threshold, nPlanes, nBands = 1, dim)
 
   /** The deterministic plane sets behind [[lshNearDupPairsBanded]]:
     * `nBands` independent groups of `nPlanes` Gaussian hyperplanes drawn
@@ -572,15 +563,22 @@ object Similarity {
     * over [[lshNearDupPairs]]: a pair is a candidate if it shares a
     * bucket in ANY of `nBands` independent plane sets, so per-pair
     * recall is `1 - (1 - p^nPlanes)^nBands` (p = per-plane agreement)
-    * instead of `p^nPlanes`. Candidates from all bands union, dedup,
-    * and pass the same EXACT cosine filter — banding affects which pairs
-    * are examined, never the score.
+    * instead of `p^nPlanes`. Candidates from all bands pass the same
+    * EXACT cosine filter — banding affects which pairs are examined,
+    * never the score. Ids are row keys (unique, as `vec_id` is).
     *
-    * Scale shape: vectors explode ×nBands onto (band, bucket) keys, one
-    * shuffle on that composite key, pair work bounded by the largest
-    * single bucket. No cross product anywhere; `distinct` on the scored
-    * pair is exact because the dot product is a deterministic sequential
-    * fold (bit-identical in every band).
+    * Scale shape: candidate generation, then one exact rerank.
+    *  - Candidates: each row keeps its id and its `nBands` bucket ids as
+    *    one int array, posexploded onto `(band, bucket)`; only those keys
+    *    shuffle (one exchange, read by both self-join sides), never a
+    *    vector. A pair sharing buckets in several bands is kept only in
+    *    the FIRST band where its two bucket arrays agree, so every pair
+    *    comes out exactly once with no `distinct` exchange. Pair work is
+    *    bounded by the largest single bucket; no cross product anywhere.
+    *  - Rerank: each candidate joins the normalized vectors on `id_a` and
+    *    on `id_b` (one broadcast, reused by the second join, when the
+    *    planner judges the vectors small; a shuffle join otherwise) and is
+    *    scored once with the sequential-fold dot product.
     *
     * Tuning: at production near-dup thresholds the defaults are strong
     * (cos ≥ 0.9 → per-plane agreement p ≈ 0.86, recall ≈ 0.87;
@@ -594,23 +592,22 @@ object Similarity {
   def lshNearDupPairsBanded(df: DataFrame, idCol: String, vecCol: String,
                             threshold: Double, nPlanes: Int = 6, nBands: Int = 4,
                             dim: Int = 64, seed: Long = 42L): DataFrame = {
-    val bands = bandedPlanes(nPlanes, nBands, dim, seed)
-    val bucketed = normalized(df, idCol, vecCol, "__id", "__v")
-      .select(col("__id"), col("__v"),
-        explode(array(bands.zipWithIndex.map { case (planes, bi) =>
-          struct(lit(bi).as("band"), lshBucket(col("__v"), planes).as("bucket"))
-        }: _*)).as("__bb"))
-      .select(col("__id"), col("__v"),
-        col("__bb.band").as("band"), col("__bb.bucket").as("bucket"))
+    val nv = normalized(df, idCol, vecCol, "__id", "__v")
+    val keyed = nv
+      .select(col("__id"), array(bandedPlanes(nPlanes, nBands, dim, seed)
+        .map(lshBucket(col("__v"), _)): _*).as("__bk"))
+      // _outer: same rows (never an empty array), no inferred size filter recomputing __bk
+      .select(col("__id"), col("__bk"), posexplode_outer(col("__bk")).as(Seq("band", "bucket")))
       .repartition(col("band"), col("bucket"))
-    val a = bucketed.select(col("band"), col("bucket"),
-      col("__id").as("id_a"), col("__v").as("va"))
-    val b = bucketed.select(col("band"), col("bucket"),
-      col("__id").as("id_b"), col("__v").as("vb"))
-    a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
+    def side(id: String, bk: String): DataFrame =
+      keyed.select(col("band"), col("bucket"), col("__id").as(id), col("__bk").as(bk))
+    val firstBand = array_position(zip_with(col("bka"), col("bkb"), _ === _), true) - 1
+    def vectors(id: String, v: String): DataFrame = nv.select(col("__id").as(id), col("__v").as(v))
+    side("id_a", "bka").join(side("id_b", "bkb"), Seq("band", "bucket"))
+      .filter(col("id_a") < col("id_b") && firstBand === col("band"))
+      .join(vectors("id_a", "va"), "id_a").join(vectors("id_b", "vb"), "id_b")
       .select(col("id_a"), col("id_b"), dot(col("va"), col("vb")).as("cos"))
       .filter(col("cos") > threshold)
-      .distinct()
   }
 
   /** Int8 scalar-quantization audit — the "can I ship 4× smaller

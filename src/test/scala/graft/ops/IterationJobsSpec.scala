@@ -73,4 +73,28 @@ class IterationJobsSpec extends AnyFunSuite {
     }
     assert(jobs(3) - jobs(2) == 2)
   }
+
+  // two items over three periods; tol = 0 always pays every sweep
+  private def panel: DataFrame = createDf(spark, "item int, pd string, exp double, qty double",
+    Seq((1, "p0", 20.0, 2.0), (1, "p1", 60.0, 3.0), (1, "p2", 20.0, 4.0),
+      (2, "p0", 30.0, 3.0), (2, "p1", 33.0, 3.0), (2, "p2", 36.0, 3.0))
+      .map { case (i, p, e, q) => Seq[Any](i, p, e, q) })
+
+  test("a gearyKhamis sweep runs two Spark jobs: exchange, collect") {
+    def jobs(iters: Int): Int = SparkActions.jobs {
+      PriceIndex.gearyKhamis(panel, "item", org.apache.spark.sql.functions.col("pd"),
+        "exp", "qty", iters = iters, tol = 0.0)
+      ()
+    }
+    assert(jobs(3) - jobs(2) == 2)
+  }
+
+  test("a timeProductDummy sweep runs two Spark jobs: exchange, collect") {
+    def jobs(iters: Int): Int = SparkActions.jobs {
+      PriceIndex.timeProductDummy(panel, "item", org.apache.spark.sql.functions.col("pd"),
+        "exp", "qty", iters = iters, tolNanos = 0L)
+      ()
+    }
+    assert(jobs(3) - jobs(2) == 2)
+  }
 }

@@ -291,6 +291,17 @@ class PriceIndexSpec extends AnyFunSuite {
     assert(got.forall { case (_, n, gk) => n == 2 && gk == 1.0 }, got.mkString(","))
   }
 
+  test("gearyKhamis: a row without a period takes no part in the index") {
+    val rows = Seq(
+      Seq[Any](1, "p0", 20.0, 2.0), Seq[Any](2, "p0", 30.0, 3.0),
+      Seq[Any](1, "p1", 60.0, 3.0), Seq[Any](2, "p1", 33.0, 3.0))
+    def gk(extra: Seq[Seq[Any]]) = PriceIndex.gearyKhamis(
+        createDf(spark, "item int, pd string, exp double, qty double", rows ++ extra),
+        "item", col("pd"), "exp", "qty", iters = 4, tol = 0.0)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    assert(gk(Seq(Seq[Any](1, null, 500.0, 1.0))) == gk(Nil))
+  }
+
   test("timeProductDummy: single-item panel publishes the price relative") {
     // one item: s=1, round 1 gives δ_t = ln p_t and the alternation is
     // stationary from there — TPD = p_t/p_0 exactly

@@ -1,6 +1,10 @@
 package graft.text
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.testing.{TempDirs, TestSpark}
@@ -700,6 +704,96 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh.subsetOf(brute))
     assert(lsh.contains((1L, 2L)), "near-identical vectors must share every bucket")
+  }
+
+  // 3 bands of 2 planes over 3 dims: 24 seeded vectors, an identical pair
+  // (same buckets in every band), a zero vector and a null vector
+  private val (bandPlanes, nBands, bandDim) = (2, 3, 3)
+  private def banded: DataFrame = {
+    val rnd = new scala.util.Random(7L)
+    val drawn = (1L to 24L).map(i => Seq[Any](i, Seq.fill(bandDim)(rnd.nextGaussian().toFloat)))
+    createDf(spark, "vec_id bigint, v array<float>", drawn ++ Seq(
+      Seq[Any](100L, Seq(0.3f, -0.2f, 0.9f)), Seq[Any](101L, Seq(0.3f, -0.2f, 0.9f)),
+      Seq[Any](102L, Seq(0.0f, 0.0f, 0.0f)), Seq[Any](103L, null)))
+  }
+
+  /** The banded generator as it stood before candidates moved onto ids:
+    * vectors ride the `(band, bucket)` shuffle into the self-join, and a
+    * `distinct` collapses a pair found in several bands.
+    */
+  private def vectorJoinPairs(d: DataFrame, threshold: Double): DataFrame = {
+    val bands = Similarity.bandedPlanes(bandPlanes, nBands, bandDim)
+    val bucketed = Similarity.normalized(d, "vec_id", "v", "__id", "__v")
+      .select(col("__id"), col("__v"),
+        explode(array(bands.zipWithIndex.map { case (planes, bi) =>
+          struct(lit(bi).as("band"), Similarity.lshBucket(col("__v"), planes).as("bucket"))
+        }: _*)).as("__bb"))
+      .select(col("__id"), col("__v"),
+        col("__bb.band").as("band"), col("__bb.bucket").as("bucket"))
+      .repartition(col("band"), col("bucket"))
+    val a = bucketed.select(col("band"), col("bucket"),
+      col("__id").as("id_a"), col("__v").as("va"))
+    val b = bucketed.select(col("band"), col("bucket"),
+      col("__id").as("id_b"), col("__v").as("vb"))
+    a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), Similarity.dot(col("va"), col("vb")).as("cos"))
+      .filter(col("cos") > threshold)
+      .distinct()
+  }
+
+  private def bandedPairs(d: DataFrame, threshold: Double): DataFrame =
+    Similarity.lshNearDupPairsBanded(d, "vec_id", "v", threshold,
+      nPlanes = bandPlanes, nBands = nBands, dim = bandDim)
+
+  private def triples(d: DataFrame): Seq[(Long, Long, Double)] =
+    d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+
+  test("lshNearDupPairsBanded equals the vector-carrying join with distinct") {
+    // the fixture holds a pair whose buckets agree in every band and one
+    // whose buckets agree only in the last band
+    val buckets = Similarity.normalized(banded, "vec_id", "v", "id", "nv")
+      .select(col("id"), array(Similarity.bandedPlanes(bandPlanes, nBands, bandDim)
+        .map(Similarity.lshBucket(col("nv"), _)): _*))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val agreement = for {
+      (a, ba) <- buckets.toSeq; (b, bb) <- buckets.toSeq if a < b
+    } yield ba.zip(bb).map { case (x, y) => x == y }
+    assert(agreement.contains(Seq(true, true, true)))
+    assert(agreement.contains(Seq(false, false, true)))
+    Seq(-1.0, 0.5).foreach { threshold =>
+      val (got, ref) = (bandedPairs(banded, threshold), vectorJoinPairs(banded, threshold))
+      assert(got.schema.map(f => f.name -> f.dataType) == ref.schema.map(f => f.name -> f.dataType))
+      val want = triples(ref)
+      assert(want.nonEmpty)
+      assert(triples(got) == want, s"threshold $threshold")
+    }
+    // a zero vector scores 0 against everything; a null vector never pairs
+    val loose = triples(bandedPairs(banded, -1.0))
+    assert(loose.exists { case (a, _, c) => a == 100L && c > 0.999 })
+    assert(loose.exists { case (_, b, c) => b == 102L && c == 0.0 })
+    assert(!loose.exists { case (a, b, _) => a == 103L || b == 103L })
+    val empty = createDf(spark, "vec_id bigint, v array<float>", Seq.empty[Seq[Any]])
+    assert(bandedPairs(empty, -1.0).collect().isEmpty)
+    assert(vectorJoinPairs(empty, -1.0).collect().isEmpty)
+  }
+
+  test("lshNearDupPairsBanded shuffles ids and buckets, never a vector") {
+    // read back from parquet, as the corpus tables are: the scan's size
+    // estimate lets the planner broadcast the normalized vectors
+    val path = TempDirs("lsh-ids").resolve("vecs").toString
+    banded.write.parquet(path)
+    val pairs = bandedPairs(graft.sources.Sources.readParquet(spark, path), 0.5)
+    pairs.collect()
+    val shuffles = new AdaptiveSparkPlanHelper {}.collect(pairs.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(shuffles.nonEmpty, "the (band, bucket) candidate shuffle is missing")
+    val carrying = shuffles.filter(_.output.exists(_.dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }))
+    assert(carrying.isEmpty,
+      s"a shuffle carries a vector: ${carrying.map(_.output.mkString(", ")).mkString("; ")}")
   }
 
   test("simpsonDiversity: uniform tokens diversify, repeats collapse, short docs null") {
