@@ -1,8 +1,8 @@
 package graft
 
 /** Central clear/inspect hook over every operator-level memo cache in the
-  * library (deterministic-IVF + ML-IVF indexes, the GEKS pairwise
-  * log-index table). Two callers:
+  * library (the IVF index memo, the GEKS pairwise log-index table). Two
+  * callers:
   *
   *   - a long-lived driver session that overwrites a corpus IN PLACE
   *     (the one documented situation where the plan-hash memo keys go

@@ -76,7 +76,7 @@ object EmbedQueries {
     * the DETERMINISTIC path ([[graft.text.Similarity
     * .ivfTopKDeterministic]]): integer-lattice cell training, integer
     * probe ranking, exact cosine scoring — fully oracled, training
-    * included. The Spark-ML IVF path stays covered by [[qIvfExact]].
+    * included. Probing every cell is checked by [[qIvfExact]].
     */
   private def qIvfTopk(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
@@ -325,16 +325,18 @@ object EmbedQueries {
     Sampling.negativePairs(t(s, dir, "documents").select(col("doc_id")), "doc_id", 2, 64)
       .orderBy(col("doc_id"), col("j"))
 
-  /** Semantic check for the IVF path: probing EVERY cell must reproduce
-    * the brute-force top-k exactly — same neighbors, same ranks, same
-    * cosine bits (both paths share the normalize+dot scoring and the
-    * (cos desc, id) tiebreak). A wrong cell assignment, a dropped
-    * member, or a scoring drift all fire it. Violations = 0.
+  /** Semantic check for the IVF path: probing EVERY cell of the
+    * deterministic index ([[graft.text.Similarity.ivfTopKDeterministic]]
+    * with `nProbe = nCells`) must reproduce the brute-force top-k exactly
+    * — same neighbors, same ranks, same cosine bits (both paths share the
+    * normalize+dot scoring and the (cos desc, id) tiebreak). A wrong cell
+    * assignment, a dropped member, or a scoring drift all fire it.
+    * Violations = 0.
     */
   private def qIvfExact(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val queries = e.filter(col("vec_id") < 10)
-    val ivf = Similarity.ivfTopK(queries, e, "vec_id", "embedding", 5,
+    val ivf = Similarity.ivfTopKDeterministic(queries, e, "vec_id", "embedding", 5,
         nCells = 16, nProbe = 16)
       .select(col("query_id"), col("rank"),
         col("neighbor_id").as("n_ivf"), col("cos").as("cos_ivf"))

@@ -8,13 +8,10 @@ import graft.ops.{Guards, Observe}
 
 /** Integer-exact k-means clustering.
   *
-  * [[graft.text.Similarity.ivfBuild]] already trains float k-means (via
-  * Spark ML) for ANN cells, where bit-reproducibility doesn't matter —
-  * any decent partition of the space works. This operator is the
-  * AUDITABLE complement: Lloyd's algorithm over integer-component
-  * vectors (e.g. globally quantized embeddings) with centroids kept ON
-  * the integer lattice — each round's center is the per-dimension FLOOR
-  * of the mean — so every assignment, every distance, and every center
+  * Lloyd's algorithm over integer-component vectors (e.g. globally
+  * quantized embeddings) with centroids kept ON the integer lattice —
+  * each round's center is the per-dimension FLOOR of the mean — so
+  * every assignment, every distance, and every center
   * is exact integer arithmetic that an independent engine can replay
   * bit-for-bit. That is what makes cluster-based curation decisions
   * (cluster-balanced sampling, semantic-dedup cells, mixture design)
@@ -31,7 +28,8 @@ import graft.ops.{Guards, Observe}
   * are collected; the driver floors each mean and assembles the centers
   * by position. `iters` driver round-trips of k·d integers each: the
   * same bounded-driver contract as BPE training (one winner row per
-  * round, text/Bpe.scala) and IVF (k centers). The trainer runs `m`
+  * round, text/Bpe.scala) and the IVF cells of
+  * [[graft.text.Similarity.ivfIndexFor]] (k centers). The trainer runs `m`
   * contiguous subspaces in that same pass, so [[Pq]] codebooks cost no
   * more jobs than one k-means.
   */

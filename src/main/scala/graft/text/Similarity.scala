@@ -9,16 +9,17 @@ import graft.sources.Sources
 
 /** Embedding similarity search.
   *
-  * Two paths, same contract:
+  * Three paths, same contract (one exact rerank: `(cos desc, neighbor_id)`):
   *   - [[bruteForceTopK]]: exact cosine top-k via a broadcast cross join —
   *     correct baseline; cost is |queries| × |corpus|, only viable when the
   *     query set is small (it is broadcast).
   *   - [[lshTopK]]: random-hyperplane LSH — corpus and queries are bucketed
   *     by sign-bit signature and only same-bucket pairs are scored. This is
   *     the 100 TB path: the bucket join replaces the cross product, and
-  *     bucket count (2^planes) scales with corpus size. An IVF variant
-  *     (k-means cells) would slot into the same shape with learned instead
-  *     of random partitions.
+  *     bucket count (2^planes) scales with corpus size.
+  *   - [[ivfTopKDeterministic]]: the same shape with learned instead of
+  *     random partitions — integer k-means cells ([[ivfIndexFor]]), probed
+  *     by [[ivfProbe]], saved and reloaded by [[ivfSave]]/[[ivfLoad]].
   *
   * Vectors are L2-normalized ONCE up front (one pass over the corpus), so
   * per-pair work is a single sequential dot product — a left-to-right
@@ -80,6 +81,14 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
+    rankTopK(scored, k)
+  }
+
+  /** The one exact rerank behind every top-k search: per `query_id`,
+    * `rank` = row number by `(cos desc, neighbor_id)`, kept while
+    * `rank <= k`.
+    */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
@@ -211,26 +220,34 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
       .distinct() // a neighbor can surface from several probed buckets
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    rankTopK(scored, k)
   }
 
   private object GraftBitops {
     def xor(a: Column, b: Column): Column = a.bitwiseXOR(b)
   }
 
-  /** A trained IVF index: driver-held centroids (nCells × dim doubles —
-    * tiny) plus the cell-assigned, L2-normalized corpus, persisted so
-    * probe-time queries never re-normalize or re-assign. Train ONCE per
-    * corpus ([[ivfBuild]]); every query invocation then only probes.
+  /** A trained IVF index: integer lattice centers (nCells × dim longs —
+    * driver-sized), the `latticeScale` the corpus was quantized with, and
+    * the cell-assigned, L2-normalized corpus `(neighbor_id, cluster, cv)`,
+    * persisted so probe-time queries never re-normalize or re-assign.
+    * Train once per corpus ([[ivfIndexFor]]); every query then only
+    * probes ([[ivfProbe]]).
     */
-  final case class IvfIndex(centers: Seq[(Int, Seq[Double])], cells: DataFrame) {
+  final case class IvfIndex(centers: IndexedSeq[Seq[Long]], latticeScale: Int,
+                            cells: DataFrame) {
     def unpersist(): Unit = { cells.unpersist(); () }
   }
 
+  /** The integer lattice IVF trains and probes on: every component
+    * scaled by `latticeScale` and rounded to a long.
+    */
+  private def latt(c: Column, latticeScale: Int): Column =
+    transform(c, x => round(x.cast("double") * latticeScale).cast("long"))
+
   /** Keyed by (session, canonicalized corpus plan, params): repeated
-    * [[ivfTopK]] calls over the same corpus reuse one trained index
-    * instead of paying the iterative k-means fit per invocation.
+    * probes over the same corpus reuse one trained index instead of
+    * paying the iterative k-means fit per invocation.
     *
     * Bounded LRU (like [[graft.config.Validation]]'s file cache): a
     * long-lived driver probing many distinct filtered corpora would
@@ -241,9 +258,9 @@ object Similarity {
     * the life of the session (the norm for training-data builds). If the
     * underlying files are overwritten in place, the plan hash — and so
     * the cached index — goes stale: call [[clearIvfCache]] (or manage an
-    * explicit [[ivfBuild]]/[[ivfSave]]/[[ivfLoad]] index) in that case.
+    * explicit [[ivfSave]]/[[ivfLoad]] index) in that case.
     */
-  private type IvfKey = (SparkSession, Int, String, String, Int, Long)
+  private type IvfKey = (SparkSession, Int, String, String, Int, Int, Int)
   private[text] val maxIvfCacheEntries = 8
   private val ivfCache =
     new java.util.LinkedHashMap[IvfKey, IvfIndex](16, 0.75f, /*accessOrder=*/ true) {
@@ -251,235 +268,144 @@ object Similarity {
         if (size() > maxIvfCacheEntries) { e.getValue.unpersist(); true } else false
     }
 
-  private[text] def ivfCacheSize: Int = ivfCache.synchronized(ivfCache.size())
-
-  /** Entries across both IVF memo caches (the [[graft.Caches]] registry
-    * hook — Bench uses it to detect that a query populated a memo).
+  /** Entries in the IVF memo (the [[graft.Caches]] registry hook — Bench
+    * uses it to detect that a query populated a memo).
     */
-  private[graft] def memoEntryCount: Int =
-    ivfCache.synchronized(ivfCache.size()) +
-      detIvfCache.synchronized(detIvfCache.size())
+  private[graft] def memoEntryCount: Int = ivfCache.synchronized(ivfCache.size())
 
   /** Drop every memoized index and unpersist their cell tables (use
     * after overwriting a corpus in place, or to release executor
     * storage on a long-lived driver).
     */
-  def clearIvfCache(): Unit = {
-    ivfCache.synchronized {
-      ivfCache.values.forEach(_.unpersist())
-      ivfCache.clear()
-    }
-    detIvfCache.synchronized {
-      detIvfCache.values.forEach(_.unpersist())
-      detIvfCache.clear()
-    }
+  def clearIvfCache(): Unit = ivfCache.synchronized {
+    ivfCache.values.forEach(_.unpersist())
+    ivfCache.clear()
   }
 
-  /** Fit the IVF index: k-means cells learned from the corpus replace
-    * [[lshBucket]]'s random hyperplanes — learned partitions follow the
-    * data distribution, so recall per probe is higher. This is the one
-    * expensive step (iterative, driver-coordinated); at 100 TB it runs
-    * once per corpus build, not per query. `nCells` scales with corpus
-    * size (√n is the usual starting point).
-    */
-  def ivfBuild(corpus: DataFrame, idCol: String, vecCol: String,
-               nCells: Int = 16, seed: Long = 42L): IvfIndex = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
-    val c = normalized(corpus, idCol, vecCol, "neighbor_id", "cv")
-      .withColumn("features", array_to_vector(col("cv")))
-    // Spark ML KMeans dies with an internal ArrayIndexOutOfBounds when the
-    // corpus holds fewer vectors than cells — refuse by contract instead
-    // (limit(nCells) bounds the check scan; it never reads the full corpus)
-    val have = c.limit(nCells).count()
-    require(have >= nCells,
-      s"ivfBuild needs at least nCells=$nCells vectors, got $have")
-    val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(5).setTol(1e-3).fit(c)
-    val cells = model.transform(c)
-      .select(col("neighbor_id"), col("cv"), col("prediction").as("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centers = model.clusterCenters.zipWithIndex
-      .map { case (v, i) => (i, v.toArray.toSeq) }.toSeq
-    IvfIndex(centers, cells)
-  }
-
-  /** Memoizing wrapper around [[ivfBuild]]: same session + semantically
-    * identical corpus plan + same params → the already-trained index.
-    * The (iterative, slow) fit runs OUTSIDE the cache monitor; if two
-    * threads race on the same key, one insert wins and the loser's
-    * freshly trained index is unpersisted instead of leaking its cells.
+  /** Train (or fetch from the memo) the IVF index of `corpus`: cells
+    * come from [[Cluster.kmeansIntWithCenters]] over the globally
+    * quantized integer lattice — every assignment and center is exact
+    * integer arithmetic an independent engine replays bit-for-bit.
+    * Corpus rows with a null vector are dropped by the trainer and never
+    * enter a cell. This is the one expensive step ([[Cluster.kmeansInt]]'s
+    * bounded-driver loop, k·d integers per round); it runs once per
+    * (session, corpus snapshot, params). The fit runs outside the memo
+    * monitor; if two threads race on one key, one insert wins and the
+    * loser's cells are unpersisted instead of leaking.
     */
   def ivfIndexFor(corpus: DataFrame, idCol: String, vecCol: String,
-                  nCells: Int = 16, seed: Long = 42L): IvfIndex = {
+                  nCells: Int = 16, iters: Int = 2,
+                  latticeScale: Int = 1000): IvfIndex = {
     val key: IvfKey = (corpus.sparkSession,
-      corpus.queryExecution.analyzed.semanticHash(), idCol, vecCol, nCells, seed)
-    val cached = ivfCache.synchronized(Option(ivfCache.get(key)))
-    cached.getOrElse {
-      val fresh = ivfBuild(corpus, idCol, vecCol, nCells, seed)
-      val winner = ivfCache.synchronized {
-        val existing = ivfCache.get(key)
-        if (existing != null) existing
-        else { ivfCache.put(key, fresh); fresh }
-      }
-      if (!(winner eq fresh)) fresh.unpersist()
-      winner
-    }
-  }
-
-  /** Probe a trained index: queries rank the broadcast centroids by dot
-    * product, keep their `nProbe` nearest cells, and score only those
-    * cells' members. Cell assignment is a narrow map over the broadcast
-    * centroids; candidate scoring joins on the 4-byte cell id — no fit
-    * job, no cross product.
-    */
-  def ivfProbe(index: IvfIndex, queries: DataFrame,
-               idCol: String, vecCol: String, k: Int, nProbe: Int = 3): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centers = index.centers.toDF("cell", "center")
-
-    val q = normalized(queries, idCol, vecCol, "query_id", "qv")
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("center_dot").desc, col("cell"))
-    val qCells = q.crossJoin(broadcast(centers))
-      .withColumn("center_dot", dot(col("qv"), col("center")))
-      .withColumn("probe_rank", row_number().over(wProbe))
-      .filter(col("probe_rank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cell"))
-
-    val scored = index.cells.join(broadcast(qCells), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** Persist a trained index: centroids (tiny, coalesced to one file) and
-    * the cell-assigned corpus, both parquet. At 100 TB this is the real
-    * train-once contract — the index is built alongside the corpus build
-    * and every query JOB (not just query invocation) reloads it instead
-    * of re-fitting; the cells table can additionally be bucketed/sorted
-    * by `cell` at write time so probe joins skip the shuffle entirely.
-    */
-  def ivfSave(index: IvfIndex, path: String): Unit = {
-    val spark = index.cells.sparkSession
-    import spark.implicits._
-    index.centers.toDF("cell", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centers")
-    index.cells.write.mode("overwrite").parquet(s"$path/cells")
-  }
-
-  /** Reload a persisted index ([[ivfSave]]); probe-ready, no fit job. */
-  def ivfLoad(spark: SparkSession, path: String): IvfIndex = {
-    val centers = Sources.readParquet(spark, s"$path/centers").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
-    IvfIndex(centers, Sources.readParquet(spark, s"$path/cells"))
-  }
-
-  /** Deterministic IVF top-k — the AUDITABLE variant of [[ivfTopK]]:
-    * cells come from [[Cluster.kmeansIntWithCenters]] over the globally
-    * quantized integer lattice (every assignment and center exact
-    * integer arithmetic an independent engine replays bit-for-bit), cell
-    * probing ranks integer center distances with a cluster-id tiebreak,
-    * and candidates score with the exact sequential-fold cosine on the
-    * RAW vectors — so any returned pair's score equals the brute-force
-    * score, and the full pipeline (training included) is SQL-oracleable.
-    * Use [[ivfTopK]] when bit-reproducibility doesn't matter and Spark
-    * ML's k-means|| init is preferred.
-    *
-    * Scale shape: training is [[Cluster.kmeansInt]]'s bounded-driver
-    * loop (k·d integers per round), memoized per (session, corpus
-    * snapshot, params) like [[ivfIndexFor]] so repeated probes pay the
-    * fit once; probing shuffles the corpus once on its cell id;
-    * candidate work is bounded by the `nProbe` probed cells per query —
-    * no cross product anywhere.
-    */
-  /** A trained deterministic-IVF index: integer centers + the
-    * cell-assigned normalized corpus, persisted (same contract as
-    * [[IvfIndex]]: the corpus is an immutable snapshot).
-    */
-  private[text] final case class DetIvfIndex(centers: IndexedSeq[Seq[Long]],
-                                             cells: DataFrame) {
-    def unpersist(): Unit = { cells.unpersist(); () }
-  }
-
-  private type DetIvfKey = (SparkSession, Int, String, String, Int, Int, Int)
-  private val detIvfCache =
-    new java.util.LinkedHashMap[DetIvfKey, DetIvfIndex](16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[DetIvfKey, DetIvfIndex]): Boolean =
-        if (size() > maxIvfCacheEntries) { e.getValue.unpersist(); true } else false
-    }
-
-  /** Train-once memo for [[ivfTopKDeterministic]] — the same
-    * (session, canonical corpus plan, params) keying as [[ivfIndexFor]]:
-    * repeated probes over one corpus snapshot pay the integer k-means
-    * fit exactly once.
-    */
-  private def detIvfIndexFor(corpus: DataFrame, idCol: String, vecCol: String,
-                             nCells: Int, iters: Int,
-                             latticeScale: Int): DetIvfIndex = {
-    val key = (corpus.sparkSession,
       corpus.queryExecution.analyzed.semanticHash(), idCol, vecCol,
       nCells, iters, latticeScale)
-    detIvfCache.synchronized(Option(detIvfCache.get(key))).getOrElse {
-      def latt(c: Column): Column =
-        transform(c, x => round(x.cast("double") * latticeScale).cast("long"))
+    ivfCache.synchronized(Option(ivfCache.get(key))).getOrElse {
       val corpusQ = corpus.select(col(idCol), col(vecCol))
-        .withColumn("__q", latt(col(vecCol)))
+        .withColumn("__q", latt(col(vecCol), latticeScale))
       val (assigned, centers) =
         Cluster.kmeansIntWithCenters(corpusQ, idCol, "__q", nCells, iters)
       val cn = normalized(corpus, idCol, vecCol, "neighbor_id", "cv")
       val cells = assigned.select(col(idCol).as("neighbor_id"), col("cluster"))
         .join(cn, "neighbor_id")
         .persist()
-      val fresh = DetIvfIndex(centers, cells)
-      detIvfCache.synchronized {
-        Option(detIvfCache.get(key)) match {
+      val fresh = IvfIndex(centers, latticeScale, cells)
+      ivfCache.synchronized {
+        Option(ivfCache.get(key)) match {
           case Some(raced) => fresh.unpersist(); raced
-          case None        => detIvfCache.put(key, fresh); fresh
+          case None        => ivfCache.put(key, fresh); fresh
         }
       }
     }
   }
 
-  /** Scored candidate pairs `(query_id, neighbor_id, cos)` from the
-    * deterministic IVF probe — the shared stage under
-    * [[ivfTopKDeterministic]] and [[hardNegativesDeterministic]] (rank
-    * and any label filter belong to the caller).
+  /** Scored candidate pairs `(query_id, neighbor_id, cos)` from probing
+    * `index` — the shared stage under [[ivfProbe]] and
+    * [[hardNegativesDeterministic]] (rank and any label filter belong to
+    * the caller).
     */
-  private def detIvfCandidates(queries: DataFrame, corpus: DataFrame,
-                               idCol: String, vecCol: String,
-                               nCells: Int, iters: Int, nProbe: Int,
-                               latticeScale: Int): DataFrame = {
-    def latt(c: Column): Column =
-      transform(c, x => round(x.cast("double") * latticeScale).cast("long"))
-    val index = detIvfIndexFor(corpus, idCol, vecCol, nCells, iters, latticeScale)
-    val centers = index.centers
-    val corpusSide = index.cells
+  private def ivfCandidates(index: IvfIndex, queries: DataFrame,
+                            idCol: String, vecCol: String, nProbe: Int): DataFrame = {
     val qn = normalized(queries, idCol, vecCol, "query_id", "qv")
-    val qq = queries.select(col(idCol).as("query_id"), latt(col(vecCol)).as("__q"))
+    val qq = queries.select(col(idCol).as("query_id"),
+      latt(col(vecCol), index.latticeScale).as("__q"))
     // centers are k·d driver-held integers: distances attach as literal
     // expressions (narrow map), probe order = [distance, cluster] struct
     // sort — integer-exact, tie toward the smaller cluster id
-    val cellStructs = array(Cluster.distances(col("__q"), centers): _*)
+    val cellStructs = array(Cluster.distances(col("__q"), index.centers): _*)
     val probes = qq.select(col("query_id"),
         explode(slice(array_sort(cellStructs), 1, nProbe)).as("__cell"))
       .select(col("query_id"), col("__cell.c").as("cluster"))
-    probes.join(qn, "query_id").join(corpusSide, "cluster")
+    probes.join(qn, "query_id").join(index.cells, "cluster")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))
   }
 
+  /** Probe a trained index: each query ranks the literal integer centers
+    * by lattice distance (cluster-id tiebreak), keeps its `nProbe`
+    * nearest cells, and scores only those cells' members with the exact
+    * sequential-fold cosine — so any returned pair's score equals the
+    * brute-force score. No fit job; probing shuffles the corpus once on
+    * its cell id, and candidate work is bounded by the probed cells — no
+    * cross product anywhere.
+    */
+  def ivfProbe(index: IvfIndex, queries: DataFrame,
+               idCol: String, vecCol: String, k: Int, nProbe: Int = 3): DataFrame =
+    rankTopK(ivfCandidates(index, queries, idCol, vecCol, nProbe), k)
+
+  /** Persist a trained index: centers (tiny, coalesced to one file, as
+    * `(cluster, center, lattice_scale)`) and the cell-assigned corpus,
+    * both parquet. At 100 TB this is the real train-once contract — the
+    * index is built alongside the corpus build and every query JOB (not
+    * just query invocation) reloads it instead of re-fitting; the cells
+    * table can additionally be bucketed/sorted by `cluster` at write
+    * time so probe joins skip the shuffle entirely.
+    */
+  def ivfSave(index: IvfIndex, path: String): Unit = {
+    val spark = index.cells.sparkSession
+    import spark.implicits._
+    index.centers.zipWithIndex.map { case (c, i) => (i, c, index.latticeScale) }
+      .toDF("cluster", "center", "lattice_scale")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centers")
+    index.cells.write.mode("overwrite").parquet(s"$path/cells")
+  }
+
+  /** Reload a persisted index ([[ivfSave]]); probe-ready, no fit job.
+    * The files come from outside the program, so the centers table must
+    * hold one `lattice_scale`, cluster ids `0 until n`, and equal-length
+    * non-null centers.
+    */
+  def ivfLoad(spark: SparkSession, path: String): IvfIndex = {
+    val rows = Observe.sortedCollect(Sources.readParquet(spark, s"$path/centers")
+      .select(col("cluster"), col("center"), col("lattice_scale")), "cluster")
+    val scales = rows.map(_.get(2)).distinct
+    require(scales.length == 1 && scales.head != null,
+      s"ivfLoad: $path/centers must hold one lattice_scale, got ${scales.mkString(", ")}")
+    require(rows.indices.forall(i => rows(i).get(0) == i),
+      s"ivfLoad: $path/centers cluster ids must be 0 until ${rows.length}")
+    val centers = rows.map(_.getSeq[java.lang.Long](1))
+    require(centers.forall(c => c != null && c.nonEmpty &&
+        c.length == centers.head.length && !c.contains(null)),
+      s"ivfLoad: $path/centers must hold non-null centers of one length")
+    IvfIndex(centers.map(_.map(_.longValue)).toIndexedSeq, rows.head.getInt(2),
+      Sources.readParquet(spark, s"$path/cells"))
+  }
+
+  /** Deterministic IVF top-k: [[ivfIndexFor]] (train-once, memoized)
+    * then [[ivfProbe]] — the full pipeline, training included, is
+    * SQL-oracleable.
+    *
+    * With `nProbe = nCells` every cell is probed, so the result equals
+    * [[bruteForceTopK]] (same neighbors, ranks and cosine bits) as long
+    * as `k` stays below the number of corpus rows with a vector: a
+    * corpus row with a null vector is never returned here (the trainer
+    * drops it), while brute force ranks it last with a null cosine.
+    */
   def ivfTopKDeterministic(queries: DataFrame, corpus: DataFrame,
                            idCol: String, vecCol: String, k: Int,
                            nCells: Int = 16, iters: Int = 2, nProbe: Int = 3,
-                           latticeScale: Int = 1000): DataFrame = {
-    val cand = detIvfCandidates(queries, corpus, idCol, vecCol,
-      nCells, iters, nProbe, latticeScale)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+                           latticeScale: Int = 1000): DataFrame =
+    ivfProbe(ivfIndexFor(corpus, idCol, vecCol, nCells, iters, latticeScale),
+      queries, idCol, vecCol, k, nProbe)
 
   /** ANN hard-negative mining — contrastive training's "most confusable
     * wrong answers": for each query, the top-`k` nearest corpus vectors
@@ -501,25 +427,14 @@ object Similarity {
                                  k: Int, nCells: Int = 16, iters: Int = 2,
                                  nProbe: Int = 3,
                                  latticeScale: Int = 1000): DataFrame = {
-    val cand = detIvfCandidates(queries, corpus, idCol, vecCol,
-      nCells, iters, nProbe, latticeScale)
+    val cand = ivfCandidates(ivfIndexFor(corpus, idCol, vecCol, nCells, iters, latticeScale),
+      queries, idCol, vecCol, nProbe)
     val qLab = queries.select(col(idCol).as("query_id"), col(labelCol).as("__ql"))
     val nLab = corpus.select(col(idCol).as("neighbor_id"), col(labelCol).as("__nl"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(qLab, "query_id").join(nLab, "neighbor_id")
+    rankTopK(cand.join(qLab, "query_id").join(nLab, "neighbor_id")
       .filter(col("__ql") =!= col("__nl"))
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("cos")), k)
   }
-
-  /** IVF approximate top-k — convenience composition of [[ivfIndexFor]]
-    * (train-once, memoized) and [[ivfProbe]].
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              nCells: Int = 16, nProbe: Int = 3, seed: Long = 42L): DataFrame =
-    ivfProbe(ivfIndexFor(corpus, idCol, vecCol, nCells, seed), queries, idCol, vecCol, k, nProbe)
 
   /** Embedding near-duplicate pairs above a cosine threshold. Brute-force
     * pair generation at test scale; at corpus scale use

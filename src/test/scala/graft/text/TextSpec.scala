@@ -572,18 +572,46 @@ class SimilaritySpec extends AnyFunSuite {
     assert(b.forall(x => x >= 0 && x < 16))
   }
 
-  test("ivfTopK returns ranked neighbors from learned cells") {
+  test("ivfTopKDeterministic returns ranked neighbors from learned cells") {
     val manyVecs = (0 until 40).map { i =>
       val base = if (i % 2 == 0) Seq(1.0f, 0.0f, 0.1f) else Seq(0.0f, 1.0f, 0.1f)
       Seq[Any](i.toLong, base.map(_ + (i % 7) * 0.01f))
     }
     val df = createDf(spark, "vec_id bigint, v array<float>", manyVecs)
-    val top = Similarity.ivfTopK(df.filter(col("vec_id") < 2), df, "vec_id", "v",
+    val top = Similarity.ivfTopKDeterministic(df.filter(col("vec_id") < 2), df, "vec_id", "v",
       k = 3, nCells = 2, nProbe = 1)
     val byQuery = top.collect().groupBy(_.getAs[Long]("query_id"))
     assert(byQuery.keySet == Set(0L, 1L))
     // query 0 is an even (x-axis) vector: its cell holds even vecs only
     assert(byQuery(0L).forall(_.getAs[Long]("neighbor_id") % 2 == 0))
+  }
+
+  test("ivfTopKDeterministic probing every cell equals bruteForceTopK, ties and zero vector included") {
+    val rnd = new scala.util.Random(11)
+    val rows = (0 until 24).map { i =>
+      val v =
+        if (i == 0) Seq(0.0f, 0.0f, 0.0f) // zero vector: cos 0 against every row
+        else if (i % 4 == 1) Seq(0.3f, 0.4f, 0.5f) // duplicates: tied cos, broken by id
+        else Seq.fill(3)(rnd.nextFloat() - 0.5f)
+      Seq[Any](i.toLong, v)
+    } :+ Seq[Any](99L, null)
+    val corpus = createDf(spark, "vec_id bigint, v array<float>", rows)
+    val queries = corpus.filter(col("vec_id") < 6)
+    def ranked(df: DataFrame): Set[(Long, Int, Long, Long)] = df.collect().map(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"),
+        java.lang.Double.doubleToRawLongBits(r.getAs[Double]("cos")))).toSet
+    def ivf(k: Int) =
+      Similarity.ivfTopKDeterministic(queries, corpus, "vec_id", "v", k, nCells = 4, nProbe = 4)
+    val viaIvf = ranked(ivf(5))
+    assert(viaIvf.size == 6 * 5)
+    assert(viaIvf == ranked(Similarity.bruteForceTopK(queries, corpus, "vec_id", "v", 5)))
+    // the tied duplicates of query 1 come back in id order
+    assert(viaIvf.filter(_._1 == 1L).toSeq.sortBy(_._2).map(_._3) == Seq(5L, 9L, 13L, 17L, 21L))
+    // the null-vector row never enters a cell, so it is never returned;
+    // brute force ranks it last with a null cosine
+    assert(ivf(100).filter(col("neighbor_id") === 99L).isEmpty)
+    assert(Similarity.bruteForceTopK(queries, corpus, "vec_id", "v", 100)
+      .filter(col("neighbor_id") === 99L && col("cos").isNull && col("rank") === 24).count() == 6)
   }
 
   test("IVF index trains once and is reused across query sets") {
@@ -612,17 +640,17 @@ class SimilaritySpec extends AnyFunSuite {
       Seq[Any](i.toLong, Seq(1.0f + i * 0.01f, 0.5f, 0.1f))
     }
     val corpus = createDf(spark, "vec_id bigint, v array<float>", manyVecs)
-    val first = Similarity.ivfIndexFor(corpus, "vec_id", "v", nCells = 2, seed = 100L)
+    val first = Similarity.ivfIndexFor(corpus, "vec_id", "v", nCells = 2, latticeScale = 100)
     assert(first.cells.storageLevel.useMemory)
-    // fill the cache past capacity with distinct keys (seed varies)
+    // fill the cache past capacity with distinct keys (latticeScale varies)
     (1 to Similarity.maxIvfCacheEntries).foreach { i =>
-      Similarity.ivfIndexFor(corpus, "vec_id", "v", nCells = 2, seed = 100L + i)
+      Similarity.ivfIndexFor(corpus, "vec_id", "v", nCells = 2, latticeScale = 100 + i)
     }
-    assert(Similarity.ivfCacheSize == Similarity.maxIvfCacheEntries)
+    assert(Similarity.memoEntryCount == Similarity.maxIvfCacheEntries)
     assert(first.cells.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "evicted eldest index must release its persisted cells")
     Similarity.clearIvfCache()
-    assert(Similarity.ivfCacheSize == 0)
+    assert(Similarity.memoEntryCount == 0)
   }
 
   test("IVF index round-trips through save/load with identical probe results") {
@@ -631,17 +659,33 @@ class SimilaritySpec extends AnyFunSuite {
       Seq[Any](i.toLong, base.map(_ + (i % 7) * 0.01f))
     }
     val corpus = createDf(spark, "vec_id bigint, v array<float>", manyVecs)
-    val built = Similarity.ivfBuild(corpus, "vec_id", "v", nCells = 2)
+    val built = Similarity.ivfIndexFor(corpus, "vec_id", "v", nCells = 2, latticeScale = 500)
     val dir = TempDirs("graft-ivf").toString
     Similarity.ivfSave(built, dir)
     val loaded = Similarity.ivfLoad(spark, dir)
     assert(loaded.centers == built.centers)
+    assert(loaded.latticeScale == 500)
     val queries = corpus.filter(col("vec_id") < 3)
     def probeRows(idx: Similarity.IvfIndex) =
       Similarity.ivfProbe(idx, queries, "vec_id", "v", k = 3)
         .select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
     assert(probeRows(loaded) == probeRows(built))
-    built.unpersist()
+    Similarity.clearIvfCache()
+  }
+
+  test("ivfLoad rejects centers with mixed lattice scales, gapped cluster ids or ragged centers") {
+    import spark.implicits._
+    def rejected(centers: Seq[(Int, Seq[Long], Int)]): String = {
+      val dir = TempDirs("graft-ivf-bad").toString
+      centers.toDF("cluster", "center", "lattice_scale").write.parquet(s"$dir/centers")
+      intercept[IllegalArgumentException](Similarity.ivfLoad(spark, dir)).getMessage
+    }
+    assert(rejected(Seq((0, Seq(1L, 0L), 1000), (1, Seq(0L, 1L), 100)))
+      .contains("one lattice_scale"))
+    assert(rejected(Seq((0, Seq(1L, 0L), 1000), (2, Seq(0L, 1L), 1000)))
+      .contains("cluster ids must be 0 until 2"))
+    assert(rejected(Seq((0, Seq(1L, 0L), 1000), (1, Seq(0L), 1000)))
+      .contains("centers of one length"))
   }
 
   test("cosineNearDupPairs finds only the near-identical pair at 0.9") {
