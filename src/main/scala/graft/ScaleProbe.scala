@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Scaling-point probe for the ITERATIVE operator families (VERDICT r10
   * #3): measures, at whatever corpus directory it is pointed at, both
   * the wall time AND the data-dependent ROUND COUNT of every iterative
@@ -12,66 +10,42 @@ import org.apache.spark.sql.functions._
   * while rows grow 100×, the log-diameter/bounded-sweep design claims
   * are pinned with data.
   *
-  * Round sources per family:
-  *   - connected components (q_dup_components, q_semdedup,
-  *     q_group_split), k-core peel (q_kcore) and k-truss peel
-  *     (q_ktruss): [[graft.ops.Observe.rounds]], which the shared
-  *     fixpoint loop records under the operator's name at convergence;
-  *   - GK / TPD / stationary (q_gk_index, q_tpd_index, q_stationary):
-  *     the `iters_run` column those queries already emit as their
-  *     convergence contract;
-  *   - fixed-round by contract (q_lpa, q_modularity) and non-iterative
-  *     spines (q_geks_index, q_geks_half, q_pagerank): timing only,
-  *     rounds reported as the contractual constant or null.
+  * Rounds come from one source, [[graft.ops.Observe.rounds]]: every
+  * driver loop (`Observe.iterate`, and the `Observe.fixpoint` loops of
+  * connected components, k-core and k-truss built on it) records the
+  * rounds it ran under its loop name. The record is cleared before each
+  * run, so a query reports `"rounds": {loop: n}` for every loop its last
+  * run took, and `{}` for a query with no driver loop (the fixed-round
+  * `cadence` loops of q_lpa, q_modularity and q_pagerank, and the
+  * non-iterative GEKS spines, are timing only).
   *
   * Timing protocol matches [[Bench]]: caches cleared before every run,
   * best-of-2, count() action. One JSON line on stdout.
   *
   * Usage: `sbt "runMain graft.ScaleProbe /root/testdata/sf0.1"`, then
-  * the same against the scaled dir. The session is
+  * the same against the scaled dir; names after the directory probe any
+  * registered queries instead of the iterative defaults. The session is
   * [[GraftSession.local]]: `local[n]` with `n` = `SPARK_GRAFT_CPUS`,
   * else the host's core count, so reproducing BASELINE.md's `local[32]`
   * decade protocol needs `SPARK_GRAFT_CPUS=32`.
   */
 object ScaleProbe {
 
+  /** The iterative queries probed when no names are given. */
+  private val defaults = Seq("q_dup_components", "q_semdedup", "q_group_split", "q_kcore",
+    "q_ktruss", "q_gk_index", "q_tpd_index", "q_stationary", "q_lpa", "q_modularity",
+    "q_geks_index", "q_geks_half", "q_pagerank")
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <dataDir> [query...]")
     val dir = args(0)
+    val wanted = if (args.length > 1) args.tail.toSeq else defaults
+    wanted.foreach(n => require(SparkEntry.queries.contains(n), s"unknown query: $n"))
     val spark = GraftSession.local("graft-scale-probe")
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    // (query, how to read its round count after a run)
-    def fixpointRounds(loop: String) = () => graft.ops.Observe.rounds.get(loop).map(_.toLong)
-    val componentRounds = fixpointRounds("connectedComponents")
-    val kcoreRounds = fixpointRounds("kCore")
-    val ktrussRounds = fixpointRounds("kTruss")
-    val noRounds = () => Option.empty[Long]
-    val defaults: Seq[(String, () => Option[Long])] = Seq(
-      "q_dup_components" -> componentRounds,
-      "q_semdedup" -> componentRounds,
-      "q_group_split" -> componentRounds,
-      "q_kcore" -> kcoreRounds,
-      "q_ktruss" -> ktrussRounds,
-      "q_gk_index" -> noRounds,     // iters_run column
-      "q_tpd_index" -> noRounds,    // iters_run column
-      "q_stationary" -> noRounds,   // iters_run column
-      "q_lpa" -> noRounds,          // fixed 4 by contract
-      "q_modularity" -> noRounds,   // fixed 4 by contract
-      "q_geks_index" -> noRounds,
-      "q_geks_half" -> noRounds,
-      "q_pagerank" -> noRounds)
-    // explicit names probe ANY registered query (round counts only for
-    // the known iterative families); no names = the iterative defaults
-    val wanted: Seq[(String, () => Option[Long])] =
-      if (args.length > 1) args.tail.toSeq.map { n =>
-        require(SparkEntry.queries.contains(n), s"unknown query: $n")
-        n -> defaults.toMap.getOrElse(n, noRounds)
-      }
-      else defaults
-
     val out = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    for ((name, roundsOf) <- wanted) {
+    for (name <- wanted) {
       val fn = SparkEntry.queries(name)
       // count()-prunable queries (see Bench.countPrunableQueries) force
       // through the noop sink so the decade tables measure real work
@@ -81,20 +55,14 @@ object ScaleProbe {
         else df => { df.count(); () }
       val times = (1 to 2).map { _ =>
         Caches.clearAll()
+        graft.ops.Observe.rounds.clear()
         val t0 = System.nanoTime()
         force(fn(spark, dir))
         (System.nanoTime() - t0) / 1e9
       }
-      // iters_run-emitting queries: read the max emitted count (one
-      // extra cheap run; caches already warm is fine — rounds are what
-      // we're after, and they're load-independent)
-      val df = fn(spark, dir)
-      val rounds: Option[Long] =
-        if (df.columns.contains("iters_run"))
-          Option(df.agg(max(col("iters_run"))).head().get(0))
-            .map(_.asInstanceOf[Number].longValue())
-        else roundsOf()
-      out(name) = f"""{"sec":${times.min}%.2f,"rounds":${rounds.map(_.toString).getOrElse("null")}}"""
+      val rounds = graft.ops.Observe.rounds.toSeq.sorted
+        .map { case (loop, n) => s""""$loop":$n""" }.mkString("{", ",", "}")
+      out(name) = f"""{"sec":${times.min}%.2f,"rounds":$rounds}"""
     }
     spark.stop()
     println(s"""{"dir":"$dir","per_query":{${out.map { case (k, v) => s""""$k":$v""" }.mkString(",")}}}""")

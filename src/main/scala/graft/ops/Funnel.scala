@@ -231,31 +231,25 @@ object Funnel {
     val outs: Map[String, Long] =
       counts.groupBy(_._1).map { case (s, cs) => s -> cs.map(_._3).sum }
     val kCount = math.max(states.length, 1)
-    var pi: Map[String, Long] = states.map(s => s -> unit / kCount).toMap
-    var itersRun = 0
-    var converged = false
-    while (itersRun < iterations && !converged) {
+    val (pi, sweeps) = Observe.iterate("stationaryDistribution",
+        states.map(s => s -> unit / kCount).toMap, iterations) { pi =>
       val inflow = scala.collection.mutable.Map.empty[String, Long]
       counts.foreach { case (s, t2, n) =>
         // truncating div on non-negative longs — the SQL `//` replays it
         inflow(t2) = inflow.getOrElse(t2, 0L) + (pi(s) / outs(s)) * n
       }
-      val newPi = states.map { s =>
+      states.map { s =>
         val held = if (outs.contains(s)) 0L else pi(s) // absorbing
         s -> (inflow.getOrElse(s, 0L) + held)
       }.toMap
-      itersRun += 1
-      if (tolUnits > 0L)
-        converged = states.foldLeft(0L)((m, s) =>
-          math.max(m, math.abs(newPi(s) - pi(s)))) < tolUnits
-      pi = newPi
-    }
+    }((prev, next) => tolUnits > 0L &&
+      states.foldLeft(0L)((m, s) => math.max(m, math.abs(next(s) - prev(s)))) < tolUnits)
     import spark.implicits._
     states.map { s =>
       (s, pi(s),
         BigDecimal(pi(s).toDouble / unit.toDouble)
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        itersRun.toLong)
+        sweeps.toLong)
     }.toDF("state", "pi_units", "pi", "iters_run")
   }
 
@@ -630,10 +624,11 @@ object Funnel {
     * (Anderl et al. 2016): user journeys become a Markov chain
     * `start → touches… → conversion | null` (each journey truncates at
     * its FIRST conversion), the chain's absorption probability into
-    * `conversion` is computed by `iterations` monotone value-iteration
-    * sweeps, and channel c's worth is how much that probability DROPS
-    * when c is knocked out (its state forced to 0 — the "redirect to
-    * dropout" semantics). Per channel:
+    * `conversion` is computed by at most `iterations` monotone
+    * value-iteration sweeps, stopping at the exact fixed point (a sweep
+    * that leaves every probability unchanged), and channel c's worth is
+    * how much that probability DROPS when c is knocked out (its state
+    * forced to 0 — the "redirect to dropout" semantics). Per channel:
     * `(channel, p_base_units, p_removed_units, removal_units,
     * share_micros)` — probabilities in exact 10⁹ units, shares the
     * usual normalized attribution weights.
@@ -702,15 +697,16 @@ object Funnel {
     val states = (cells.map(_._1) ++ cells.map(_._2)).distinct.sorted.toSeq
     val outs: Map[String, Long] =
       cells.groupBy(_._1).map { case (s, cs) => s -> cs.map(_._3).sum }
-    def absorb(removed: Option[String]): Long = {
-      var p: Map[String, BigInt] = states.map(s =>
-        s -> (if (s == "conversion") BigInt(unit) else BigInt(0))).toMap
-      for (_ <- 1 to iterations) {
+    // the sweep map reads nothing but p, so a sweep that leaves p
+    // unchanged is the fixed point: every later sweep repeats it
+    def absorb(removed: Option[String]): Long =
+      Observe.iterate("removalEffects", states.map(s =>
+          s -> (if (s == "conversion") BigInt(unit) else BigInt(0))).toMap, iterations) { p =>
         val num = scala.collection.mutable.Map.empty[String, BigInt]
         cells.foreach { case (f, t2, n) =>
           num(f) = num.getOrElse(f, BigInt(0)) + p(t2) * n
         }
-        p = states.map { s =>
+        states.map { s =>
           val v: BigInt =
             if (s == "conversion") BigInt(unit)
             else if (removed.contains(s)) BigInt(0)
@@ -718,9 +714,7 @@ object Funnel {
             else num.getOrElse(s, BigInt(0)) / outs(s)
           s -> v
         }.toMap
-      }
-      p.getOrElse("start", BigInt(0)).toLong
-    }
+      }(_ == _)._1.getOrElse("start", BigInt(0)).toLong
     val pBase = absorb(None)
     val rows = channels.sorted.map { c =>
       val pc = if (states.contains(c)) absorb(Some(c)) else pBase

@@ -121,12 +121,8 @@ object Linkage {
     def nano(x: Double): Long = BigDecimal(x * 1e9)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
     def clamp(x: Long): Long = math.max(1L, math.min(999999999L, x))
-    var p = nano(p0)
-    var m = m0.map(nano).toArray
-    var u = u0.map(nano).toArray
-    var itersRun = 0
-    var converged = false
-    while (itersRun < iterations && !converged) {
+    val ((p, m, u), sweeps) = Observe.iterate("emFit",
+        (nano(p0), m0.map(nano).toArray, u0.map(nano).toArray), iterations) { case (p, m, u) =>
       // E-step: γ per pattern, nano-quantized (left-fold products in
       // field order — the tree the oracle replays verbatim)
       val gam: Array[Long] = census.map { case (bitsG, _) =>
@@ -159,18 +155,15 @@ object Linkage {
         else clamp(BigDecimal(sb.toDouble / sc.toDouble * 1e9)
           .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
       }
-      itersRun += 1
-      if (tolNano > 0L) {
-        val worst = (Seq(math.abs(pNew - p)) ++
-          (0 until k).map(i => math.abs(mNew(i) - m(i))) ++
-          (0 until k).map(i => math.abs(uNew(i) - u(i)))).max
-        converged = worst < tolNano
-      }
-      p = pNew; m = mNew; u = uNew
+      (pNew, mNew, uNew)
+    } { case ((p, m, u), (pNew, mNew, uNew)) =>
+      tolNano > 0L && (Seq(math.abs(pNew - p)) ++
+        (0 until k).map(i => math.abs(mNew(i) - m(i))) ++
+        (0 until k).map(i => math.abs(uNew(i) - u(i)))).max < tolNano
     }
     import spark.implicits._
     (0 until k).map(i =>
-        (i.toLong, m(i), u(i), p, nTot.toLong, itersRun.toLong))
+        (i.toLong, m(i), u(i), p, nTot.toLong, sweeps.toLong))
       .toDF("field", "m_nano", "u_nano", "p_nano", "n_pairs", "iters_run")
   }
 }

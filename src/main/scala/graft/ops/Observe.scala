@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.annotation.tailrec
 import scala.collection.concurrent.TrieMap
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
@@ -22,8 +23,9 @@ import org.apache.spark.sql.functions._
   * It also holds the one iteration policy of the iterative operators:
   * the observed checkpoint (a convergence metric riding the job that
   * materializes a generation), the checkpoint cadence of fixed-round
-  * loops, the fixpoint loop with its backstop and rounds record, and
-  * the release of cached or checkpointed frames on every exit.
+  * loops, the one driver loop with its rounds record, the fixpoint loop
+  * built on it with its backstop, and the release of cached or
+  * checkpointed frames on every exit.
   *
   * And it holds the driver-read rule: a value the driver reads costs one
   * Spark job, not one per exchange (under AQE every exchange is a job of
@@ -111,11 +113,33 @@ object Observe {
   def cadence(df: DataFrame, i: Int, n: Int): DataFrame =
     if (i % 3 == 0 || i == n) atCaller(df, "localCheckpoint")(df.localCheckpoint(true)) else df
 
-  /** Rounds the last run of each named [[fixpoint]] loop took: a
+  /** Rounds the last run of each named [[iterate]] loop took: a
     * measurement-only record for the ScaleProbe protocol, last writer
     * wins, never read by operators.
     */
   private[graft] val rounds = TrieMap.empty[String, Int]
+
+  /** The driver loop: from `init`, apply `step` at most `maxRounds` times,
+    * stopping after the first round where `done(previous, next)` holds.
+    * Returns the last state and the rounds run, which are also recorded
+    * in [[rounds]] under `name`. A loop whose state is exact (integers,
+    * or doubles from exact sums) and whose round reads nothing but that
+    * state stops at its fixed point with `done = _ == _`: once a round
+    * leaves the state unchanged, every later round is the identity, so
+    * the result is the one `maxRounds` rounds give.
+    */
+  def iterate[S](name: String, init: S, maxRounds: Int)(step: S => S)(
+      done: (S, S) => Boolean): (S, Int) = {
+    @tailrec def go(s: S, n: Int): (S, Int) =
+      if (n == maxRounds) (s, n)
+      else {
+        val next = step(s)
+        if (done(s, next)) (next, n + 1) else go(next, n + 1)
+      }
+    val (last, n) = go(init, 0)
+    rounds(name) = n
+    (last, n)
+  }
 
   /** The fixpoint loop: from `init`, each round `step` builds and
     * checkpoints the next generation and returns it with the round's
@@ -128,25 +152,19 @@ object Observe {
     */
   def fixpoint(name: String, init: DataFrame, start: Long, maxRounds: Int)(
       step: DataFrame => (DataFrame, Long))(converged: (Long, Long) => Boolean): DataFrame = {
-    var cur = init
-    var prev = start
-    var done = start == 0L
-    var n = 0
-    while (!done) {
-      if (n == maxRounds) {
-        release(cur)
-        throw new IllegalStateException(
-          s"$name did not converge within $maxRounds rounds (depth exceeds the backstop)")
-      }
+    // (generation, its metric, whether that round converged)
+    val ((last, _, fixed), _) = iterate(name, (init, start, start == 0L),
+        if (start == 0L) 0 else maxRounds) { case (cur, prev, _) =>
       val (next, m) = step(cur)
       release(cur)
-      cur = next
-      done = converged(prev, m)
-      prev = m
-      n += 1
+      (next, m, converged(prev, m))
+    }((_, next) => next._3)
+    if (!fixed) {
+      release(last)
+      throw new IllegalStateException(
+        s"$name did not converge within $maxRounds rounds (depth exceeds the backstop)")
     }
-    rounds(name) = n
-    cur
+    last
   }
 
   /** Run `body`, then release `frames` on every exit, normal or thrown. */

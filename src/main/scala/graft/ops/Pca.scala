@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongTyp
 object Pca {
 
   /** Top eigenvector of the scatter matrix of the first `dims`
-    * embedding coordinates, by `iterations` rounds of integer power
-    * iteration. Returns one row per dimension:
+    * embedding coordinates, by at most `iterations` rounds of integer
+    * power iteration, stopping at the exact fixed point (a round that
+    * leaves the vector unchanged). Returns one row per dimension:
     * `(dim, loading, eigenvalue, var_share)` — dim is 1-based (the SQL
     * indexing convention), loading the unit-ish eigvector component in
     * [−1, 1], eigenvalue the explained variance in original units²,
@@ -69,17 +70,18 @@ object Pca {
       val p = if (i <= j) pMap((i, j)) else pMap((j, i))
       n * p - s1(i) * s1(j)
     }
-    var v = Array.fill(dims)(BigInt(1000000))
-    var degenerate = n < 2
-    var it = 0
-    while (it < iterations && !degenerate) {
-      val u = Array.tabulate(dims)(i =>
-        (0 until dims).map(j => scat(i)(j) * v(j)).sum)
-      val mx = u.map(_.abs).max
-      if (mx == 0) degenerate = true
-      else v = u.map(_ * 1000000 / mx)
-      it += 1
-    }
+    // power iteration on the exact scatter; None once a round's product is
+    // the zero vector (always so below two rows, where the scatter is 0).
+    // The state is exact, so a round that leaves v unchanged is the fixed
+    // point: every later round repeats it
+    val (vOpt, _) = Observe.iterate("pcaTopComponent",
+        Option(Vector.fill(dims)(BigInt(1000000))), iterations) {
+      _.flatMap { v =>
+        val u = Vector.tabulate(dims)(i => (0 until dims).map(j => scat(i)(j) * v(j)).sum)
+        val mx = u.map(_.abs).max
+        if (mx == 0) None else Some(u.map(_ * 1000000 / mx))
+      }
+    }((prev, next) => next.isEmpty || prev == next)
     val spark = df.sparkSession
     val schema = StructType(Seq(
       StructField("dim", IntegerType, nullable = false),
@@ -91,9 +93,10 @@ object Pca {
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val trace = (0 until dims).map(i => scat(i)(i)).sum
     val out: Seq[Row] =
-      if (degenerate || trace <= 0)
+      if (vOpt.isEmpty || trace <= 0)
         (0 until dims).map(i => Row(i + 1, n.toLong, null, null, null))
       else {
+        val v = vOpt.get
         val num = (for { i <- 0 until dims; j <- 0 until dims }
           yield v(i) * scat(i)(j) * v(j)).sum
         val den = (0 until dims).map(i => v(i) * v(i)).sum

@@ -660,25 +660,25 @@ object PriceIndex {
       .persist()
     Observe.releasing(uv) {
       import spark.implicits._
-      // P as driver-held (period, level) rows: period-bounded by definition
-      var pLevels: Seq[(String, Double)] = uv
-        .select(col("__pd").cast("string")).distinct()
-        .collect().map(r => (r.getString(0), 1.0)).toSeq
+      // each period's item count, and so the period list, in one collect
+      val counts = uv.groupBy(col("__pd")).agg(count(lit(1)).as("n_items"))
+        .select(col("__pd").cast("string"), col("n_items"))
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       // refuse an empty panel by name (the sweep's convergence .max and the
       // base-period minBy would otherwise die on empty collections)
-      require(pLevels.nonEmpty,
+      require(counts.nonEmpty,
         "gearyKhamis: the price panel is empty — no (item, period) sales to index")
-      var itersRun = 0
-      var converged = false
       val Wit = org.apache.spark.sql.expressions.Window.partitionBy(col("__it"))
-      while (itersRun < iters && !converged) {
+      // P as driver-held (period, level) rows: period-bounded by definition
+      val (pLevels, sweeps) = Observe.iterate("gearyKhamis",
+          counts.keys.toSeq.map(pd => (pd, 1.0)), iters) { pLevels =>
         val levelOf = typedLit(pLevels.toMap)
         // π as an item-partitioned window: integer sums partition exactly
         // like the aggregate form (same longs, any order), but the panel
         // shuffles ONCE per sweep instead of aggregate-then-join's twice
         val pi = sum(micro((col("__p") / col("__lv")) * col("__q"))).over(Wit)
           .cast("double") / sum(col("__qm")).over(Wit).cast("double")
-        val newLevels = uv.withColumn("__lv", levelOf(col("__pd").cast("string")))
+        uv.withColumn("__lv", levelOf(col("__pd").cast("string")))
           .withColumn("__pi", pi)
           .groupBy(col("__pd"))
           .agg(sum(col("__pqm")).as("__nu"),
@@ -686,22 +686,18 @@ object PriceIndex {
           .select(col("__pd").cast("string"),
             (col("__nu").cast("double") / col("__de").cast("double")).as("__lv"))
           .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      } { (prev, next) =>
         // both vectors are bit-identical doubles in the oracle, so this
         // comparison replays exactly there; strict < keeps tol=0 as the
         // "always pay `iters`" switch
-        val prev = pLevels.toMap
-        converged = newLevels.map { case (pd, lv) => math.abs(lv - prev(pd)) }.max < tol
-        pLevels = newLevels
-        itersRun += 1
+        val p = prev.toMap
+        next.map { case (pd, lv) => math.abs(lv - p(pd)) }.max < tol
       }
-      val counts = uv.groupBy(col("__pd")).agg(count(lit(1)).as("n_items"))
-        .select(col("__pd").cast("string"), col("n_items"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       val lv0 = pLevels.minBy(_._1)._2
       pLevels.sortBy(_._1).map { case (pd, lv) =>
         (pd, counts(pd),
           BigDecimal(lv / lv0).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-          itersRun.toLong)
+          sweeps.toLong)
       }.toDF("period", "n_items", "gk", "iters_run")
     }
   }
@@ -753,18 +749,22 @@ object PriceIndex {
     val uv0 = df
       .groupBy(col(itemCol).as("__it"), periodCol.cast("string").as("__pd"))
       .agg(sum(col(expCol).cast(dec)).as("__S"), sum(col(qtyCol).cast(dec)).as("__Q"))
+      .filter(col("__pd").isNotNull) // a period without a name has no effect
       .select(col("__it"), col("__pd"),
         log(col("__S").cast("double") / col("__Q").cast("double")).as("__lnp"),
         round(col("__S").cast("double") * lit(1e6), 0).cast("long").as("__em"))
-    // per-period expenditure totals: period-bounded — literal-attach
-    val totals = uv0.groupBy(col("__pd")).agg(sum(col("__em")).as("__tot"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    // per-period expenditure totals and item counts in one collect:
+    // period-bounded — literal-attach
+    val totals = uv0.groupBy(col("__pd"))
+      .agg(sum(col("__em")).as("__tot"), count(lit(1)).as("n_items"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     // refuse an empty panel by name (the sweep-2 convergence .max and the
     // base-period minBy would otherwise die on empty collections)
     require(totals.nonEmpty,
       "tpdIndex: the price panel is empty — no (item, period) sales to index")
+    val counts = totals.map(t => t._1 -> t._3).toMap
     val uv = uv0
-      .join(broadcast(totals.toDF("__pd", "__tot")), Seq("__pd"))
+      .join(broadcast(totals.map(t => (t._1, t._2)).toDF("__pd", "__tot")), Seq("__pd"))
       .select(col("__it"), col("__pd"), col("__lnp"),
         (col("__em").cast("double") / col("__tot").cast("double")).as("__s"),
         nano(col("__em").cast("double") / col("__tot").cast("double")).as("__sn"))
@@ -774,14 +774,12 @@ object PriceIndex {
       .sortWithinPartitions(col("__it"))
       .persist()
     Observe.releasing(uv) {
-      var deltas: Seq[(String, Long)] = Nil // period -> δ nanos
-      var itersRun = 0
-      var converged = false
       val Wit = org.apache.spark.sql.expressions.Window.partitionBy(col("__it"))
-      while (itersRun < iters && !converged) {
-        val r = itersRun + 1
+      // period -> δ nanos; sweep 1 starts from γ = 0
+      val (deltas, sweeps) = Observe.iterate("timeProductDummy",
+          Seq.empty[(String, Long)], iters) { deltas =>
         val resid =
-          if (r == 1) uv.withColumn("__g", lit(0.0))
+          if (deltas.isEmpty) uv.withColumn("__g", lit(0.0))
           else {
             // γ from the PREVIOUS δ as an item-partitioned window: the
             // exact integer sums partition identically to the old
@@ -793,29 +791,23 @@ object PriceIndex {
                     - col("__dnano").cast("double") / lit(1e9)))).over(Wit)
                   .cast("double") / sum(col("__sn")).over(Wit).cast("double"))
           }
-        val newDeltas = resid
+        resid
           .groupBy(col("__pd"))
           .agg(sum(nano(col("__s") * (col("__lnp") - col("__g")))).as("__dn"))
           .collect().map(row => (row.getString(0), row.getLong(1))).toSeq
+      } { (prev, next) =>
         // δ are exact BIGINT nanos in any engine, so the integer movement
         // check replays verbatim in the oracle; sweep 1 has no previous
         // vector to compare against
-        if (r >= 2) {
-          val prev = deltas.toMap
-          converged = newDeltas
-            .map { case (pd, dn) => math.abs(dn - prev(pd)) }.max < tolNanos
-        }
-        deltas = newDeltas
-        itersRun = r
+        val p = prev.toMap
+        prev.nonEmpty && next.map { case (pd, dn) => math.abs(dn - p(pd)) }.max < tolNanos
       }
-      val counts = uv.groupBy(col("__pd")).agg(count(lit(1)).as("n_items"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       val dBase = deltas.minBy(_._1)._2
       deltas.sortBy(_._1).map { case (pd, dn) =>
         (pd, counts(pd),
           BigDecimal(math.exp((dn - dBase) / 1e9))
             .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-          itersRun.toLong)
+          sweeps.toLong)
       }.toDF("period", "n_items", "tpd", "iters_run")
     }
   }

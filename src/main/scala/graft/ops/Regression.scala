@@ -45,6 +45,12 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Regression {
 
+  /** The exact sum type of this object, and the per-row nano
+    * quantization into it before every exact sum.
+    */
+  private val dec = DecimalType(38, 0)
+  private def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
+
   /** Fit `y = intercept + slope·x` per group. Returns the group columns
     * plus `(n, slope, intercept, r2)`, rounded to 6 dp.
     *
@@ -55,7 +61,6 @@ object Regression {
     */
   def groupOls(df: DataFrame, groupBy: Seq[String], x: Column, y: Column): DataFrame = {
     require(groupBy.nonEmpty, "groupOls needs at least one group column")
-    val dec = DecimalType(38, 0)
     def q(c: Column): Column = round(c * lit(1e6), 0).cast(dec)
     val g = df
       .select(groupBy.map(col) :+ q(x).as("__x") :+ q(y).as("__y"): _*)
@@ -111,7 +116,6 @@ object Regression {
                  lambda: Double): DataFrame = {
     require(groupBy.nonEmpty, "groupRidge needs at least one group column")
     require(lambda >= 0.0 && lambda.isFinite, s"lambda must be finite >= 0: $lambda")
-    val dec = DecimalType(38, 0)
     def q(c: Column): Column = round(c * lit(1e6), 0).cast(dec)
     // λ in micro² units, exact: round once on the driver (a constant)
     val lamMicro2 = BigDecimal(lambda).*(BigDecimal(10).pow(12))
@@ -162,7 +166,6 @@ object Regression {
     *         VIFs ordered as the argument columns
     */
   def vif3(df: DataFrame, x1: Column, x2: Column, x3: Column): DataFrame = {
-    val dec = DecimalType(38, 0)
     def q(c: Column): Column = round(c * lit(1e6), 0).cast(dec)
     val base = df.select(q(x1).as("__a"), q(x2).as("__b"), q(x3).as("__c"))
       .filter(col("__a").isNotNull && col("__b").isNotNull && col("__c").isNotNull)
@@ -218,7 +221,6 @@ object Regression {
   def groupOlsLogLog(df: DataFrame, groupBy: Seq[String], x: Column,
                      y: Column): DataFrame = {
     require(groupBy.nonEmpty, "groupOlsLogLog needs at least one group column")
-    val dec = DecimalType(38, 0)
     def ql(c: Column): Column = round(log(c) * lit(1e9), 0).cast("long").cast(dec)
     val g = df
       .filter(y > 0 && x > 0)
@@ -268,7 +270,6 @@ object Regression {
                 k: Int): DataFrame = {
     require(groupBy.nonEmpty, "cooksTopK needs group columns")
     require(k >= 1, s"k must be positive: $k")
-    val dec = DecimalType(38, 0)
     def q(c: Column): Column = round(c * lit(1e6), 0).cast(dec)
     val base = df
       .select(groupBy.map(col) :+ q(x).as("__x") :+ q(y).as("__y"): _*)
@@ -342,7 +343,6 @@ object Regression {
                               cutoff: Double, bandwidth: Double): DataFrame = {
     require(bandwidth > 0.0 && bandwidth.isFinite,
       s"bandwidth must be finite > 0: $bandwidth")
-    val dec = DecimalType(38, 0)
     def q(c: Column): Column = round(c * lit(1e6), 0).cast(dec)
     val base = df
       .select(running.as("__r"), outcome.as("__y0"))
@@ -408,7 +408,6 @@ object Regression {
     * row. The 100 TB posture for every encouragement-design readout.
     */
   def ivWald(df: DataFrame, instrument: Column, x: Column, y: Column): DataFrame = {
-    val dec = DecimalType(38, 0)
     def q(c: Column): Column = round(c * lit(1e6), 0).cast(dec)
     val base = df.select(instrument.cast("boolean").as("__z"),
         q(x).as("__x"), q(y).as("__y"))
@@ -469,7 +468,6 @@ object Regression {
   def groupWls(df: DataFrame, groupBy: Seq[String], x: Column, y: Column,
                w: Column): DataFrame = {
     require(groupBy.nonEmpty, "groupWls needs at least one group column")
-    val dec = DecimalType(38, 0)
     def q(c: Column): Column = round(c * lit(1e6), 0).cast(dec)
     val base = df
       .select(groupBy.map(col) :+ q(x).as("__x") :+ q(y).as("__y") :+ q(w).as("__w"): _*)
@@ -496,57 +494,23 @@ object Regression {
       when(varX > 0.0, round(inter, 6)).as("intercept")): _*)
   }
 
-  /** Single-feature logistic regression TRAINED IN THE ENGINE — a fixed
-    * number of Newton–Raphson (IRLS) steps on ln p/(1−p) = b₀ + b₁·x,
-    * each step ONE map-side-combined aggregation of five score/Hessian
-    * sums followed by the closed-form 2×2 solve:
-    *
-    *   g = Σ(y−p), Σx(y−p);  H = Σw, Σxw, Σx²w,  w = p(1−p)
-    *   Δb = H⁻¹g  (det-form),  b ← b + Δb
-    *
-    * The bridge between [[graft.queries.TextQueries]]' fixed-weight
-    * scorer (inference only) and real in-cluster training: `iterations`
-    * passes over the data, TWO scalars of driver state (the [[graft
-    * .text.Bpe]] bounded-collect posture), no solver library. Newton on
-    * a concave log-likelihood is quadratically convergent — 4 steps
-    * reach 6-dp stability on anything non-separable.
-    *
-    * Returns one row `(n, n_pos, b0, b1, ll)` with the final
-    * log-likelihood (natural units). Degenerate inputs (all one class,
-    * constant x) keep det ≤ 0 or w ≡ 0 and emit the safe all-null
-    * coefficient row.
-    *
-    * Determinism: coefficients carry between iterations as NANO-
-    * quantized integers; within an iteration every per-row term (y−p,
-    * x(y−p), w, xw, x²w, per-row log-likelihood) nano-quantizes before
-    * the exact DECIMAL sums, and the driver-side 2×2 solve is the same
-    * fixed IEEE tree the oracle replays CTE-for-CTE (the [[graft.text
-    * .Cluster.kmeansInt]] iterative-replay contract).
-    *
-    * Scale shape: `iterations` scans with map-side combine to ONE row
-    * each — embarrassingly parallel, no shuffle of row data, state on
-    * the driver is 2 longs.
+  /** The shared Newton fit behind [[logisticNewton]], [[poissonNewton]]
+    * and the causal family: fits (b₀, b₁) of a single-feature GLM on a
+    * frame with `__y`/`__x` columns, carrying the coefficients as nano
+    * integers between the map-combined five-sum scans. `link` maps the
+    * linear predictor η = b₀ + b₁·x to the per-row residual y − μ and
+    * Newton weight. At most `iterations` scans: the loop stops at the
+    * exact fixed point (a round that moves neither nano coefficient),
+    * or at the first degenerate round. Returns (b0_nano, b1_nano,
+    * degenerate).
     */
-  /** The shared Newton loop behind [[logisticNewton]] and [[ipwAte]]
-    * (r12 refactor): fits (b₀, b₁) on a frame with `__y`/`__x` columns,
-    * carrying coefficients as nano integers between the map-combined
-    * five-sum scans. Returns (b0_nano, b1_nano, degenerate).
-    */
-  private[ops] def logisticFitNano(base: DataFrame,
-                                   iterations: Int): (Long, Long, Boolean) = {
-    val dec = DecimalType(38, 0)
-    def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
-    var b0n = 0L
-    var b1n = 0L
-    var degenerate = false
-    for (_ <- 1 to iterations if !degenerate) {
-      val b0 = b0n.toDouble / 1e9
-      val b1 = b1n.toDouble / 1e9
-      val p = lit(1.0) / (lit(1.0) + exp(-(lit(b0) + lit(b1) * col("__x"))))
-      val w = p * (lit(1.0) - p)
+  private def newtonFitNano(name: String, base: DataFrame, iterations: Int)(
+      link: Column => (Column, Column)): (Long, Long, Boolean) =
+    Observe.iterate(name, (0L, 0L, false), iterations) { case (b0n, b1n, _) =>
+      val (resid, w) = link(lit(b0n.toDouble / 1e9) + lit(b1n.toDouble / 1e9) * col("__x"))
       val r = Observe.scalars(base,
-        sum(nano(col("__y") - p)).as("g0"),
-        sum(nano(col("__x") * (col("__y") - p))).as("g1"),
+        sum(nano(resid)).as("g0"),
+        sum(nano(col("__x") * resid)).as("g1"),
         sum(nano(w)).as("h00"),
         sum(nano(col("__x") * w)).as("h01"),
         sum(nano(col("__x") * col("__x") * w)).as("h11"))
@@ -554,18 +518,21 @@ object Regression {
         if (r.isNullAt(i)) 0.0 else r.getDecimal(i).doubleValue() / 1e9
       val (g0, g1, h00, h01, h11) = (dbl(0), dbl(1), dbl(2), dbl(3), dbl(4))
       val det = h00 * h11 - h01 * h01
-      if (!(det > 0.0)) degenerate = true
-      else {
-        val db0 = (h11 * g0 - h01 * g1) / det
-        val db1 = (h00 * g1 - h01 * g0) / det
-        b0n += BigDecimal(db0 * 1e9)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-        b1n += BigDecimal(db1 * 1e9)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      }
+      def toNanos(d: Double): Long =
+        BigDecimal(d * 1e9).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      if (!(det > 0.0)) (b0n, b1n, true)
+      else (b0n + toNanos((h11 * g0 - h01 * g1) / det),
+        b1n + toNanos((h00 * g1 - h01 * g0) / det), false)
+    }((prev, next) => next._3 || prev == next)._1
+
+  /** [[newtonFitNano]] under the logit link: p = 1/(1 + e^−η), residual
+    * y − p, weight p(1 − p).
+    */
+  private[ops] def logisticFitNano(base: DataFrame, iterations: Int): (Long, Long, Boolean) =
+    newtonFitNano("logisticNewton", base, iterations) { eta =>
+      val p = lit(1.0) / (lit(1.0) + exp(-eta))
+      (col("__y") - p, p * (lit(1.0) - p))
     }
-    (b0n, b1n, degenerate)
-  }
 
   /** Inverse-propensity-weighted (Hájek) average treatment effect with
     * an IN-ENGINE propensity model: P(treated | x) comes from
@@ -596,8 +563,6 @@ object Regression {
              iterations: Int = 4): DataFrame = {
     require(iterations >= 1 && iterations <= 16,
       s"iterations out of range: $iterations")
-    val dec = DecimalType(38, 0)
-    def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
     val base = df.select(
         when(treated, 1.0).otherwise(0.0).as("__y"),
         x.cast("double").as("__x"),
@@ -747,8 +712,6 @@ object Regression {
       s"need 1..16 covariates: ${covariates.size}")
     require(covariates.map(_._1).distinct.size == covariates.size,
       "covariate names must be unique")
-    val dec = DecimalType(38, 0)
-    def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
     val cNames = covariates.indices.map(i => s"__c$i")
     val base = df.select(
         (when(treated, 1.0).otherwise(0.0).as("__y") +:
@@ -859,8 +822,6 @@ object Regression {
               iterations: Int = 4): DataFrame = {
     require(iterations >= 1 && iterations <= 16,
       s"iterations out of range: $iterations")
-    val dec = DecimalType(38, 0)
-    def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
     def nanoLong(v: Double): Long =
       BigDecimal(v * 1e9).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
     val base = df.select(
@@ -970,8 +931,6 @@ object Regression {
     require(iterations >= 1 && iterations <= 16,
       s"iterations out of range: $iterations")
     require(caliperMicros > 0L, s"caliperMicros must be positive: $caliperMicros")
-    val dec = DecimalType(38, 0)
-    def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
     val base = df.select(
         id.cast("long").as("__id"),
         when(treated, 1.0).otherwise(0.0).as("__y"),
@@ -1061,8 +1020,6 @@ object Regression {
     */
   def twoWayFixedEffects(df: DataFrame, entity: Column, time: Column,
                          y: Column, x: Column): DataFrame = {
-    val dec = DecimalType(38, 0)
-    def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
     val base = df.select(entity.as("__i"), time.as("__t"),
         y.cast("double").as("__y"), x.cast("double").as("__x"))
       .filter(col("__i").isNotNull && col("__t").isNotNull &&
@@ -1125,8 +1082,6 @@ object Regression {
     require(candidates >= 1 && candidates <= 256,
       s"candidates out of range: $candidates")
     require(epsMicros > 0L, s"epsMicros must be positive: $epsMicros")
-    val dec = DecimalType(38, 0)
-    def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
     val eps = lit(epsMicros.toDouble / 1e6)
     val base = df.select(id.cast("string").as("__id"),
         x.cast("double").as("__x"), y.cast("double").as("__y"))
@@ -1170,12 +1125,42 @@ object Regression {
         when(det > 0.0, round(b1, 6)).as("b1"))
   }
 
+  /** Single-feature logistic regression TRAINED IN THE ENGINE — up to
+    * `iterations` Newton–Raphson (IRLS) steps on ln p/(1−p) = b₀ + b₁·x,
+    * each step ONE map-side-combined aggregation of five score/Hessian
+    * sums followed by the closed-form 2×2 solve:
+    *
+    *   g = Σ(y−p), Σx(y−p);  H = Σw, Σxw, Σx²w,  w = p(1−p)
+    *   Δb = H⁻¹g  (det-form),  b ← b + Δb
+    *
+    * The bridge between [[graft.queries.TextQueries]]' fixed-weight
+    * scorer (inference only) and real in-cluster training: at most
+    * `iterations` passes over the data, TWO scalars of driver state
+    * (the [[graft.text.Bpe]] bounded-collect posture), no solver library. Newton on
+    * a concave log-likelihood is quadratically convergent — 4 steps
+    * reach 6-dp stability on anything non-separable.
+    *
+    * Returns one row `(n, n_pos, b0, b1, ll)` with the final
+    * log-likelihood (natural units). Degenerate inputs (all one class,
+    * constant x) keep det ≤ 0 or w ≡ 0 and emit the safe all-null
+    * coefficient row.
+    *
+    * Determinism: coefficients carry between iterations as NANO-
+    * quantized integers; within an iteration every per-row term (y−p,
+    * x(y−p), w, xw, x²w, per-row log-likelihood) nano-quantizes before
+    * the exact DECIMAL sums, and the driver-side 2×2 solve is the same
+    * fixed IEEE tree the oracle replays CTE-for-CTE (the [[graft.text
+    * .Cluster.kmeansInt]] iterative-replay contract).
+    *
+    * Scale shape: at most `iterations` scans, stopping at the exact fixed
+    * point (a round that moves neither nano coefficient), each with
+    * map-side combine to ONE row — embarrassingly parallel, no shuffle
+    * of row data, state on the driver is 2 longs.
+    */
   def logisticNewton(df: DataFrame, label: Column, x: Column,
                      iterations: Int = 4): DataFrame = {
     require(iterations >= 1 && iterations <= 16,
       s"iterations out of range: $iterations")
-    val dec = DecimalType(38, 0)
-    def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
     val base = df
       .select(when(label, 1.0).otherwise(0.0).as("__y"), x.cast("double").as("__x"))
       .filter(col("__y").isNotNull && col("__x").isNotNull)
@@ -1216,45 +1201,21 @@ object Regression {
     * = Fisher scoring here, so steps are stable whenever x is bounded
     * (cap or log-transform unbounded covariates — λ exponentiates).
     *
-    * Determinism and scale shape: exactly [[logisticNewton]] —
-    * `iterations` map-combined five-sum scans, per-term nano
+    * Determinism and scale shape: exactly [[logisticNewton]] (the one
+    * Newton fit under the log link) — at most `iterations` map-combined
+    * five-sum scans, stopping at the exact fixed point, per-term nano
     * quantization, 2 longs of driver state.
     */
   def poissonNewton(df: DataFrame, yCount: Column, x: Column,
                     iterations: Int = 4): DataFrame = {
     require(iterations >= 1 && iterations <= 16,
       s"iterations out of range: $iterations")
-    val dec = DecimalType(38, 0)
-    def nano(c: Column): Column = round(c * lit(1e9), 0).cast(dec)
     val base = df
       .select(yCount.cast("double").as("__y"), x.cast("double").as("__x"))
       .filter(col("__y").isNotNull && col("__y") >= 0.0 && col("__x").isNotNull)
-    var b0n = 0L
-    var b1n = 0L
-    var degenerate = false
-    for (_ <- 1 to iterations if !degenerate) {
-      val b0 = b0n.toDouble / 1e9
-      val b1 = b1n.toDouble / 1e9
-      val lam = exp(lit(b0) + lit(b1) * col("__x"))
-      val r = Observe.scalars(base,
-        sum(nano(col("__y") - lam)).as("g0"),
-        sum(nano(col("__x") * (col("__y") - lam))).as("g1"),
-        sum(nano(lam)).as("h00"),
-        sum(nano(col("__x") * lam)).as("h01"),
-        sum(nano(col("__x") * col("__x") * lam)).as("h11"))
-      def dbl(i: Int): Double =
-        if (r.isNullAt(i)) 0.0 else r.getDecimal(i).doubleValue() / 1e9
-      val (g0, g1, h00, h01, h11) = (dbl(0), dbl(1), dbl(2), dbl(3), dbl(4))
-      val det = h00 * h11 - h01 * h01
-      if (!(det > 0.0)) degenerate = true
-      else {
-        val db0 = (h11 * g0 - h01 * g1) / det
-        val db1 = (h00 * g1 - h01 * g0) / det
-        b0n += BigDecimal(db0 * 1e9)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-        b1n += BigDecimal(db1 * 1e9)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      }
+    val (b0n, b1n, degenerate) = newtonFitNano("poissonNewton", base, iterations) { eta =>
+      val lam = exp(eta)
+      (col("__y") - lam, lam)
     }
     val b0 = b0n.toDouble / 1e9
     val b1 = b1n.toDouble / 1e9
@@ -1342,14 +1303,12 @@ object Regression {
       games(key) = games.getOrElse(key, 0L) + n
     }
     val k = math.max(items.length, 1)
-    var theta: Map[String, Long] = items.map(i => i -> unit / k).toMap
     // convergence contract (r12, the q_stationary discipline): with
     // tolUnits > 0 the MM stops once max_i |Δθ_i| < tolUnits and
     // iters_run reports the data-dependent sweep count; tolUnits = 0
     // always pays `iterations`. Exact-integer check — engine-free.
-    var itersRun = 0
-    var converged = false
-    while (itersRun < iterations && !converged) {
+    val (theta, sweeps) = Observe.iterate("bradleyTerry",
+        items.map(i => i -> unit / k).toMap, iterations) { theta =>
       // raw_i = W_i / (Σ_j nano(n_ij/(θ_i+θ_j)) / 1e9) — the denominator
       // sum is an exact integer, so j-order is irrelevant
       val raw: Seq[(String, Double)] = items.map { i =>
@@ -1371,18 +1330,14 @@ object Regression {
         i -> BigDecimal(r * 1e9).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
       }
       val tot = rawNano.map(_._2).sum
-      val newTheta = rawNano.map { case (i, r) =>
+      rawNano.map { case (i, r) =>
         i -> (if (tot > 0L)
           BigDecimal(r.toDouble / tot.toDouble * unit.toDouble)
             .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
         else unit / k)
       }.toMap
-      itersRun += 1
-      if (tolUnits > 0L)
-        converged = items.foldLeft(0L)((m, i) =>
-          math.max(m, math.abs(newTheta(i) - theta(i)))) < tolUnits
-      theta = newTheta
-    }
+    }((prev, next) => tolUnits > 0L &&
+      items.foldLeft(0L)((m, i) => math.max(m, math.abs(next(i) - prev(i)))) < tolUnits)
     val gamesTot: Map[String, Long] = items.map { i =>
       i -> games.collect { case ((a, b), n) if a == i || b == i => n }.sum
     }.toMap
@@ -1391,7 +1346,7 @@ object Regression {
       (i, winTot.getOrElse(i, 0L), gamesTot(i),
         BigDecimal(theta(i).toDouble / unit.toDouble)
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        itersRun.toLong)
+        sweeps.toLong)
     }.sortBy(r => (-r._4, r._1))
       .toDF("item", "wins", "games", "theta", "iters_run")
   }

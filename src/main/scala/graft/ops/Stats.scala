@@ -3041,10 +3041,12 @@ object Stats {
     *   w = min(1, c/|x − μ|)
     *
     * so points within `c` of the current center count fully and points
-    * beyond count down-weighted by distance — `sweeps` fixed iterations
-    * from the exact mean (IRLS on a convex loss converges fast;
-    * emitting both `huber_mu` and `mean` makes the outlier pull
-    * visible). Per group: `(groupBy..., n, mean, huber_mu, w_sum)`.
+    * beyond count down-weighted by distance — at most `sweeps`
+    * iterations from the exact mean, stopping at the exact fixed point
+    * (a sweep that leaves every μ unchanged; IRLS on a convex loss
+    * converges fast; emitting both `huber_mu` and `mean` makes the
+    * outlier pull visible). Per group:
+    * `(groupBy..., n, mean, huber_mu, w_sum)`.
     *
     * Determinism: x and the carried μ are integer micro units, so
     * |x − μ| is an EXACT integer and the w branch is an integer
@@ -3052,10 +3054,10 @@ object Stats {
     * group sums; μ re-quantizes to micro each sweep, and the oracle
     * replays every sweep CTE-for-CTE (the GLM iteration contract).
     *
-    * Scale shape: `sweeps`+1 group-keyed map-combined aggregations,
-    * each collected to the driver — nothing data-sized ever joins or
-    * windows; state is the k-row μ table, which each sweep reads as a
-    * literal group → μ map (an O(k) lookup per row).
+    * Scale shape: at most `sweeps`+1 group-keyed map-combined
+    * aggregations, each collected to the driver — nothing data-sized
+    * ever joins or windows; state is the k-row μ table, which each
+    * sweep reads as a literal group → μ map (an O(k) lookup per row).
     */
   def huberLocation(df: DataFrame, groupBy: Seq[String], value: Column,
                     c: Double, sweeps: Int = 4): DataFrame = {
@@ -3077,25 +3079,26 @@ object Stats {
     // collected, and the next sweep reads mu from a literal map of it (the
     // k-means-centers posture), so a sweep is its aggregate's exchange and
     // the collect, with no broadcast job and no checkpoint to release
-    def held(q: DataFrame): (DataFrame, Column) = {
-      val rows = q.collect()
-      (q.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), q.schema),
-        literalMap(rows, q.schema, groupBy, "__mu")(struct(gCols: _*)))
-    }
+    def held(q: DataFrame): (StructType, Array[Row]) = (q.schema, q.collect())
+    def mus(g: (StructType, Array[Row])): Set[Seq[Any]] =
+      g._2.map(r => (groupBy :+ "__mu").map(r.getAs[Any])).toSet
     def counts: Seq[Column] = Seq(count(lit(1)).as("__n"), sum(col("__x").cast(dec)).as("__s1"))
-    val mu =
+    val (schema, rows) =
       Observe.releasing(base) {
-        var (muV, muOf) = held(base.groupBy(gCols: _*).agg(counts.head, counts.tail: _*)
+        val init = held(base.groupBy(gCols: _*).agg(counts.head, counts.tail: _*)
           .select(gCols :+ col("__n") :+ col("__s1")
             :+ round(col("__s1").cast("double") / col("__n").cast("double"), 0)
               .cast("long").as("__mu"): _*))
-        for (_ <- 1 to sweeps) {
+        // a sweep reads nothing but the previous mu, so one that leaves mu
+        // unchanged is the fixed point: every later sweep repeats it
+        Observe.iterate("huberLocation", init, sweeps) { case (sch, rows) =>
+          val muOf = literalMap(rows, sch, groupBy, "__mu")(struct(gCols: _*))
           val d = abs(col("__x") - muOf)
           val w = when(d <= cMicro, lit(1.0))
             .otherwise(lit(cMicro.toDouble) / d.cast("double"))
           // n and s1 are recounted with the sweep's sums (exact integers),
           // so the aggregate is the next generation as it stands
-          val next = held(base.groupBy(gCols: _*)
+          held(base.groupBy(gCols: _*)
             .agg(counts.head, counts.tail :+
               sum(round(w * col("__x").cast("double"), 0).cast(dec)).as("__wx") :+
               sum(round(w * lit(1e6), 0).cast("long").cast(dec)).as("__w"): _*)
@@ -3103,11 +3106,9 @@ object Stats {
               :+ round(col("__wx").cast("double") * lit(1e6) /
                 col("__w").cast("double"), 0).cast("long").as("__mu")
               :+ col("__w"): _*))
-          muV = next._1
-          muOf = next._2
-        }
-        muV
+        }((prev, next) => mus(prev) == mus(next))._1
       }
+    val mu = base.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     mu.select(gCols
       :+ col("__n").as("n")
       :+ round(col("__s1").cast("double") / col("__n").cast("double") / lit(1e6), 6)

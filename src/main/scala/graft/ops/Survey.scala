@@ -96,31 +96,27 @@ object Survey {
         s"cover every observed margin value")
     for (c <- cKeys) require(colT.contains(c),
       s"colTargets missing sample col key '$c'")
-    var w: Map[(String, String), BigInt] =
+    val base: Map[(String, String), BigInt] =
       cells.map(t => (t._1, t._2) -> t._4).toMap
-    val base = w
-    var itersRun = 0
-    var converged = false
-    while (itersRun < iterations && !converged) {
+    def margins(w: Map[(String, String), BigInt], key: ((String, String)) => String) =
+      w.groupBy(kv => key(kv._1)).map { case (k, m) => k -> m.values.sum }
+    val (w, sweeps) = Observe.iterate("rake", base, iterations) { w0 =>
       // row sweep: margins hit their targets exactly (up to div floor)
-      val rm = w.groupBy(_._1._1).map { case (r, m) => r -> m.values.sum }
-      w = w.map { case ((r, c), v) => ((r, c), v * rowT(r) / rm(r)) }
+      val rm = margins(w0, _._1)
+      val w1 = w0.map { case ((r, c), v) => ((r, c), v * rowT(r) / rm(r)) }
       // column sweep
-      val cm = w.groupBy(_._1._2).map { case (c, m) => c -> m.values.sum }
-      w = w.map { case ((r, c), v) => ((r, c), v * colT(c) / cm(c)) }
-      itersRun += 1
-      if (tolUnits > 0L) {
-        val rm2 = w.groupBy(_._1._1).map { case (r, m) => r -> m.values.sum }
-        val cm2 = w.groupBy(_._1._2).map { case (c, m) => c -> m.values.sum }
-        val worst =
-          (rKeys.map(r => (rm2(r) - rowT(r)).abs) ++
-            cKeys.map(c => (cm2(c) - colT(c)).abs)).max
-        converged = worst < BigInt(tolUnits)
+      val cm = margins(w1, _._2)
+      w1.map { case ((r, c), v) => ((r, c), v * colT(c) / cm(c)) }
+    } { (_, w) =>
+      tolUnits > 0L && {
+        val (rm, cm) = (margins(w, _._1), margins(w, _._2))
+        (rKeys.map(r => (rm(r) - rowT(r)).abs) ++
+          cKeys.map(c => (cm(c) - colT(c)).abs)).max < BigInt(tolUnits)
       }
     }
     import spark.implicits._
     cells.toSeq.map { case (r, c, n, _) =>
-      (r, c, n, base((r, c)).toLong, w((r, c)).toLong, itersRun.toLong)
+      (r, c, n, base((r, c)).toLong, w((r, c)).toLong, sweeps.toLong)
     }.sortBy(t => (t._1, t._2))
       .toDF("row_key", "col_key", "n_rows", "w_base_units",
         "w_raked_units", "iters_run")

@@ -362,10 +362,11 @@ object Survival {
     * update replays CTE-for-CTE (the [[graft.ops.Regression
     * .logisticNewton]] contract).
     *
-    * Scale shape: per iteration, one duration-keyed map-combined
-    * aggregation + cumulative windows over the duration table (rows =
-    * distinct durations — the [[kaplanMeier]] bound, never subjects) +
-    * a 2-value reduce. Driver state: one long.
+    * Scale shape: at most `iterations` iterations, stopping at the exact
+    * fixed point (a round that leaves the nano β unchanged), each one
+    * duration-keyed map-combined aggregation + cumulative windows over
+    * the duration table (rows = distinct durations — the [[kaplanMeier]]
+    * bound, never subjects) + a 2-value reduce. Driver state: one long.
     */
   def coxNewton(df: DataFrame, duration: Column, event: Column, x: Column,
                 iterations: Int = 4): DataFrame = {
@@ -406,14 +407,14 @@ object Survival {
         if (agg.isNullAt(i)) 0.0 else agg.getDecimal(i).doubleValue() / 1e9
       (dbl(0), dbl(1))
     }
-    var bn = 0L
-    var degenerate = false
-    for (_ <- 1 to iterations if !degenerate) {
-      val (u, i) = score(bn.toDouble / 1e9)
-      if (!(i > 0.0)) degenerate = true
-      else bn += BigDecimal(u / i * 1e9)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    }
+    // β in nanos and whether a round met I ≤ 0; stops at the exact fixed
+    // point, where every later round would repeat the last
+    val ((bn, degenerate), _) = Observe.iterate("coxNewton", (0L, false), iterations) {
+      case (bn, _) =>
+        val (u, i) = score(bn.toDouble / 1e9)
+        if (!(i > 0.0)) (bn, true)
+        else (bn + BigDecimal(u / i * 1e9).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong, false)
+    }((prev, next) => next._2 || prev == next)
     val beta = bn.toDouble / 1e9
     val (uF, iF) = if (degenerate) (0.0, 0.0) else score(beta)
     val fin = base.agg(count(lit(1)).as("n"), sum(col("__e")).as("n_events"))

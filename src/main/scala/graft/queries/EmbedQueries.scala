@@ -187,8 +187,9 @@ object EmbedQueries {
   }
 
   /** Integer-exact k-means ([[graft.text.Cluster.kmeansInt]]): embeddings
-    * globally quantized to the integer lattice (round(x·1000)), then 3
-    * Lloyd rounds with 8 centers — initial centers are the 8 smallest
+    * globally quantized to the integer lattice (round(x·1000)), then up
+    * to 3 Lloyd rounds with 8 centers, stopping at the exact fixed point
+    * — initial centers are the 8 smallest
     * vec_ids, ties break to the smaller cluster, centroids floor to the
     * lattice, empty clusters keep their center. Every assignment and
     * squared distance is integer arithmetic, so the oracle REPLAYS THE

@@ -475,16 +475,21 @@ object EventQueries {
          |  LEFT JOIN $prev q ON q.state = s.state)""".stripMargin
     }
     val rounds = (1 to iters).map(round).mkString(",\n")
-    val itersRunExpr =
-      if (iters == 1) "1"
-      else s"$iters" + (2 to iters).map(i => s" - (SELECT cv FROM d$i)").mkString
     s"""$head,
        |$rounds
        |SELECT state, CAST(pi AS BIGINT) AS pi_units,
        |  round(CAST(pi AS DOUBLE) / 1000000000000.0, 6) AS pi,
-       |  CAST($itersRunExpr AS BIGINT) AS iters_run
+       |  CAST(${sweepsRunSql(iters)} AS BIGINT) AS iters_run
        |FROM p$iters ORDER BY state""".stripMargin
   }
+
+  /** The sweeps the unrolled π chain paid: `iters` less each round `i`
+    * whose `d_i` CTE found the chain already converged (and so carried
+    * the previous π forward).
+    */
+  private def sweepsRunSql(iters: Int): String =
+    if (iters == 1) "1"
+    else s"$iters" + (2 to iters).map(i => s" - (SELECT cv FROM d$i)").mkString
 
   /** q_entropy_rate oracle: the SAME unrolled π chain as
     * [[stationaryOracleSql]] (kept literally in sync — both build from
@@ -497,9 +502,6 @@ object EventQueries {
     // strip the stationary final SELECT, keep the WITH chain
     val cut = base.lastIndexOf("SELECT state, CAST(pi AS BIGINT)")
     val ctes = base.substring(0, cut).trim.stripSuffix(",") + ","
-    val itersRunExpr =
-      if (iters == 1) "1"
-      else s"$iters" + (2 to iters).map(i => s" - (SELECT cv FROM d$i)").mkString
     s"""$ctes
        |rowh AS (
        |  SELECT from_type, SUM(n) AS ns,
@@ -515,7 +517,7 @@ object EventQueries {
        |hh AS (SELECT SUM(t) AS tsum FROM terms),
        |nst AS (SELECT COUNT(*) AS k FROM st)
        |SELECT CAST(nst.k AS BIGINT) AS n_states,
-       |  CASE WHEN nst.k > 0 THEN CAST($itersRunExpr AS BIGINT) END AS iters_run,
+       |  CASE WHEN nst.k > 0 THEN CAST(${sweepsRunSql(iters)} AS BIGINT) END AS iters_run,
        |  round(CAST(hh.tsum AS DOUBLE) / 1000000000.0, 6) AS entropy_rate,
        |  round(exp(CAST(hh.tsum AS DOUBLE) / 1000000000.0), 6) AS perplexity
        |FROM hh CROSS JOIN nst""".stripMargin
@@ -810,9 +812,10 @@ object EventQueries {
     * .removalEffects]]): q_shapley's set-based split ignores ORDER;
     * this one models the journey as a first-order chain and prices
     * each channel by how much the absorption probability into
-    * `conversion` drops when the channel is knocked out. 16 exact
-    * big-integer value-iteration sweeps per scenario, all replayed
-    * CTE-for-CTE.
+    * `conversion` drops when the channel is knocked out. Up to 16 exact
+    * big-integer value-iteration sweeps per scenario, stopping at the
+    * exact fixed point, and the oracle's 16 unrolled CTEs give the same
+    * answer.
     */
   private def qRemoval(s: SparkSession, dir: String): DataFrame =
     graft.ops.Funnel.removalEffects(
@@ -1268,8 +1271,9 @@ object EventQueries {
     * time-to-first-purchase per user (censored at the stream's end for
     * never-buyers) regressed on ln(1+view count) — does browsing volume
     * RAISE the purchase hazard, as a ratio, with censoring handled
-    * exactly? Four Newton steps on the Breslow partial likelihood, the
-    * final score emitted as convergence evidence; every risk-set sum is
+    * exactly? Up to four Newton steps on the Breslow partial likelihood,
+    * stopping at the exact fixed point, the final score emitted as
+    * convergence evidence; every risk-set sum is
     * a cumulative window over the ≤31-row distinct-duration table.
     */
   private def qCox(s: SparkSession, dir: String): DataFrame = {

@@ -650,10 +650,11 @@ object StatsQueries {
 
   /** Huber M-location ([[graft.ops.Stats.huberLocation]]): each event
     * type's robust center with c = 25 (full weight within 25 value
-    * units of the center, 1/distance beyond) — 4 IRLS sweeps from the
-    * exact mean, emitted beside it so the outlier pull is visible.
-    * Integer-micro distances make every weight branch an integer
-    * comparison; the oracle replays all sweeps CTE-for-CTE.
+    * units of the center, 1/distance beyond) — up to 4 IRLS sweeps from
+    * the exact mean, stopping at the exact fixed point, emitted beside it
+    * so the outlier pull is visible. Integer-micro distances make every
+    * weight branch an integer comparison; the oracle replays all 4 sweeps
+    * CTE-for-CTE (a sweep past the fixed point repeats it).
     */
   private def qHuber(s: SparkSession, dir: String): DataFrame =
     graft.ops.Stats.huberLocation(t(s, dir, "events"),
@@ -1146,9 +1147,10 @@ object StatsQueries {
       .orderBy(col("l_returnflag"))
 
   /** In-engine logistic regression ([[graft.ops.Regression
-    * .logisticNewton]]): train P(purchase | ln(1+value)) with 4
-    * Newton-Raphson steps — each step one map-combined five-sum
-    * aggregation, coefficients carried as nano integers, the 2×2 solve
+    * .logisticNewton]]): train P(purchase | ln(1+value)) with up to 4
+    * Newton-Raphson steps, stopping at the exact fixed point — each step
+    * one map-combined five-sum aggregation, coefficients carried as nano
+    * integers, the 2×2 solve
     * replayed CTE-for-CTE by the oracle (the kmeansInt iterative
     * contract). The round-trip proof that classifier TRAINING, not just
     * q_classify's inference, runs in the engine.

@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.ops.Observe
 
 /** Distributed BPE merge-rule training — the tokenizer-construction step
   * of an LLM data pipeline (reference scope: the corpus side; this
@@ -67,31 +68,32 @@ object Bpe {
 
   /** Train `rounds` merge rules. Returns (round, left, right, n) — fewer
     * rows if the vocabulary runs out of adjacent pairs first (fully
-    * merged words stop contributing; never an error).
+    * merged words stop contributing; never an error). Each round's
+    * vocabulary checkpoint is released once the next one is
+    * materialized, and the last one before returning.
     */
   def trainMerges(df: DataFrame, textCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val spark = df.sparkSession
-    var vocab = wordVocab(df, textCol).localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var r = 1
-    var dry = false
-    while (r <= rounds && !dry) {
+    // (vocabulary checkpoint, merges so far): a round that finds no
+    // adjacent pair leaves both unchanged, and training is dry
+    val ((vocab, merges), _) = Observe.iterate("trainMerges",
+        (wordVocab(df, textCol).localCheckpoint(true), Vector.empty[(Int, String, String, Long)]),
+        rounds) { case state @ (vocab, merges) =>
       val top = pairCounts(vocab)
         .orderBy(col("n").desc, col("left"), col("right"))
         .limit(1).collect()
-      if (top.isEmpty) dry = true
-      else {
-        val w = top.head
+      top.headOption.fold(state) { w =>
         val (l, ri, n) = (w.getString(0), w.getString(1), w.getLong(2))
-        merges += ((r, l, ri, n))
-        vocab = vocab.select(foldMerge(col("syms"), l, ri).as("syms"), col("cnt"))
+        val next = vocab.select(foldMerge(col("syms"), l, ri).as("syms"), col("cnt"))
           .localCheckpoint(true)
-        r += 1
+        Observe.release(vocab)
+        (next, merges :+ ((merges.size + 1, l, ri, n)))
       }
-    }
+    }(_ eq _)
+    Observe.release(vocab)
     import spark.implicits._
-    merges.toSeq.toDF("round", "left", "right", "n")
+    merges.toDF("round", "left", "right", "n")
   }
 
   /** ENCODE: apply an ordered merge-rule list and report per-document

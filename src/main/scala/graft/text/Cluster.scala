@@ -26,8 +26,9 @@ import graft.ops.{Guards, Observe}
   * comparisons per row). A round is ONE exchange: a posexplode +
   * (dim, cluster) sum and count with map-side partials, whose k·d rows
   * are collected; the driver floors each mean and assembles the centers
-  * by position. `iters` driver round-trips of k·d integers each: the
-  * same bounded-driver contract as BPE training (one winner row per
+  * by position. At most `iters` driver round-trips of k·d integers
+  * each, stopping at the first round that moves no center: the same
+  * bounded-driver contract as BPE training (one winner row per
   * round, text/Bpe.scala) and the IVF cells of
   * [[graft.text.Similarity.ivfIndexFor]] (k centers). The trainer runs `m`
   * contiguous subspaces in that same pass, so [[Pq]] codebooks cost no
@@ -35,8 +36,9 @@ import graft.ops.{Guards, Observe}
   */
 object Cluster {
 
-  /** Run `iters` Lloyd rounds with k centers over `vecCol`
-    * (`array` of integral type, all rows same length) and return
+  /** Run at most `iters` Lloyd rounds with k centers over `vecCol`
+    * (`array` of integral type, all rows same length), stopping at the
+    * exact fixed point (a round that moves no center), and return
     * `(idCol, cluster int, dist long)` — the final assignment and its
     * squared distance to the assigned center.
     *
@@ -92,8 +94,11 @@ object Cluster {
       val init = base.orderBy(col("__km_id")).limit(k).collect().map(_.getSeq[Long](1))
       require(init.length == k, s"kmeansInt needs at least k=$k non-null vectors, got ${init.length}")
       val sub = init.head.length / m
-      var centers = (0 until m).map(s => init.map(_.slice(s * sub, (s + 1) * sub)).toIndexedSeq)
-      for (_ <- 1 to iters) {
+      // a round reads nothing but the centers, so one that leaves them
+      // unchanged is the fixed point: every later round repeats it
+      val (centers, _) = Observe.iterate("lloyd",
+          (0 until m).map(s => init.map(_.slice(s * sub, (s + 1) * sub)).toIndexedSeq),
+          iters) { centers =>
         val means = base
           .withColumn("__km_a", assign(col("__km_v"), centers))
           .select(col("__km_a"), posexplode(col("__km_v")).as(Seq("__km_p", "__km_x")))
@@ -102,12 +107,12 @@ object Cluster {
           .collect()
           .map(r => (r.getInt(0), r.getInt(1)) -> Math.floorDiv(r.getLong(2), r.getLong(3)))
           .toMap
-        centers = centers.zipWithIndex.map { case (cs, s) =>
+        centers.zipWithIndex.map { case (cs, s) =>
           cs.zipWithIndex.map { case (c, i) =>
             if (means.contains((s * sub, i))) (0 until sub).map(j => means((s * sub + j, i))) else c
           }
         }
-      }
+      }(_ == _)
       kept = keepBase
       (base, centers)
     } finally if (!kept) Observe.release(base)

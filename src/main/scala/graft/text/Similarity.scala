@@ -71,13 +71,14 @@ object Similarity {
   }
 
   /** Exact top-k neighbors for each query vector. `queries` should be
-    * small (it is broadcast to every executor); `corpus` streams.
+    * small (it is broadcast to every executor); `corpus` streams, and a
+    * corpus row without a vector is never a neighbor (as in the IVF).
     * Deterministic: ties broken by neighbor id.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = normalized(queries, idCol, vecCol, "query_id", "qv")
-    val c = normalized(corpus, idCol, vecCol, "neighbor_id", "cv")
+    val c = normalized(corpus.filter(col(vecCol).isNotNull), idCol, vecCol, "neighbor_id", "cv")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), dot(col("qv"), col("cv")).as("cos"))

@@ -1,11 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.testing.{SparkActions, TestSpark}
 import graft.testing.DfAssert.createDf
-import graft.text.Dedup
+import graft.text.{Cluster, Dedup}
 
 /** Spark jobs per call of the iterative graph and dedup operators, pinned
   * on fixed tiny graphs: building the result plus one `collect()`. Every
@@ -53,7 +54,7 @@ class IterationJobsSpec extends AnyFunSuite {
     }),
     ("dedupByPairs", 9, () => Dedup.dedupByPairs(docs, "doc_id", pairs).collect()),
     ("dedupByPairsKeepBest", 9, () =>
-      Dedup.dedupByPairsKeepBest(docs, "doc_id", pairs, org.apache.spark.sql.functions.col("q"))
+      Dedup.dedupByPairsKeepBest(docs, "doc_id", pairs, col("q"))
         .collect()))
 
   calls.foreach { case (name, expected, call) =>
@@ -67,7 +68,7 @@ class IterationJobsSpec extends AnyFunSuite {
       Seq(("a", 1.0), ("a", 2.0), ("a", 40.0), ("b", -3.0), ("b", 5.0))
         .map { case (g, v) => Seq[Any](g, v) })
     def jobs(sweeps: Int): Int = SparkActions.jobs {
-      Stats.huberLocation(d, Seq("g"), org.apache.spark.sql.functions.col("v"), c = 1.0,
+      Stats.huberLocation(d, Seq("g"), col("v"), c = 1.0,
         sweeps = sweeps)
       ()
     }
@@ -82,7 +83,7 @@ class IterationJobsSpec extends AnyFunSuite {
 
   test("a gearyKhamis sweep runs two Spark jobs: exchange, collect") {
     def jobs(iters: Int): Int = SparkActions.jobs {
-      PriceIndex.gearyKhamis(panel, "item", org.apache.spark.sql.functions.col("pd"),
+      PriceIndex.gearyKhamis(panel, "item", col("pd"),
         "exp", "qty", iters = iters, tol = 0.0)
       ()
     }
@@ -91,10 +92,77 @@ class IterationJobsSpec extends AnyFunSuite {
 
   test("a timeProductDummy sweep runs two Spark jobs: exchange, collect") {
     def jobs(iters: Int): Int = SparkActions.jobs {
-      PriceIndex.timeProductDummy(panel, "item", org.apache.spark.sql.functions.col("pd"),
+      PriceIndex.timeProductDummy(panel, "item", col("pd"),
         "exp", "qty", iters = iters, tolNanos = 0L)
       ()
     }
     assert(jobs(3) - jobs(2) == 2)
+  }
+
+  test("gearyKhamis runs 4 Spark actions per call at 3 sweeps: counts, one per sweep") {
+    assert(SparkActions.count {
+      PriceIndex.gearyKhamis(panel, "item", col("pd"), "exp", "qty", iters = 3, tol = 0.0)
+        .collect(); ()
+    } == 4)
+  }
+
+  test("timeProductDummy runs 4 Spark actions per call at 3 sweeps: totals, one per sweep") {
+    assert(SparkActions.count {
+      PriceIndex.timeProductDummy(panel, "item", col("pd"), "exp", "qty", iters = 3, tolNanos = 0L)
+        .collect(); ()
+    } == 4)
+  }
+
+  /** A call with a round count well past its fixed point stops at the round
+    * it records; a call capped at that round gives the same rows in the
+    * same number of Spark actions.
+    */
+  private def stopsAtFixedPoint(loop: String, big: Int)(call: Int => DataFrame): Unit = {
+    def run(n: Int): (Seq[String], Int) = {
+      var rows = Seq.empty[String]
+      val actions = SparkActions.count { rows = call(n).collect().map(_.toString).toSeq.sorted }
+      (rows, actions)
+    }
+    val wide = run(big)
+    val stop = Observe.rounds(loop)
+    assert(stop > 1 && stop < big, s"$loop ran $stop of $big rounds")
+    assert(run(stop) == wide && Observe.rounds(loop) == stop, s"$loop capped at $stop rounds")
+  }
+
+  // Newton on nano-quantized sums need not reach a fixed point: on a few
+  // rows the last nano can cycle, so these fixtures are large enough to settle
+  test("logisticNewton stops at its exact fixed point") {
+    val d = createDf(spark, "x double, y boolean",
+      (0 until 200).map(i => Seq[Any](i * 4.0 / 200, (i * 37 % 11) < (i * 11 / 200))))
+    stopsAtFixedPoint("logisticNewton", 16)(n =>
+      Regression.logisticNewton(d, col("y"), col("x"), iterations = n))
+  }
+
+  test("poissonNewton stops at its exact fixed point") {
+    val d = createDf(spark, "x double, y bigint",
+      (0 until 20).map(i => Seq[Any](i * 2.0 / 20, (i * 37 % 7).toLong)))
+    stopsAtFixedPoint("poissonNewton", 16)(n =>
+      Regression.poissonNewton(d, col("y"), col("x"), iterations = n))
+  }
+
+  test("coxNewton stops at its exact fixed point") {
+    val d = createDf(spark, "t bigint, e bigint, x double", (0 until 60).map(i =>
+      Seq[Any]((i * 13 % 29).toLong + 1, if (i % 5 == 0) 0L else 1L, (i % 3).toDouble)))
+    stopsAtFixedPoint("coxNewton", 16)(n =>
+      Survival.coxNewton(d, col("t"), col("e"), col("x"), iterations = n))
+  }
+
+  test("huberLocation stops at its exact fixed point") {
+    val d = createDf(spark, "g string, v double",
+      Seq(("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 9.0), ("b", -3.0), ("b", 5.0))
+        .map { case (g, v) => Seq[Any](g, v) })
+    stopsAtFixedPoint("huberLocation", 16)(n =>
+      Stats.huberLocation(d, Seq("g"), col("v"), c = 1.5, sweeps = n))
+  }
+
+  test("kmeansInt stops at its exact fixed point") {
+    val d = createDf(spark, "id bigint, v array<bigint>",
+      (0L until 40L).map(i => Seq[Any](i, Seq(i * 7 % 23, i * 13 % 31, i * 3 % 11))))
+    stopsAtFixedPoint("lloyd", 20)(n => Cluster.kmeansInt(d, "id", "v", k = 3, iters = n))
   }
 }

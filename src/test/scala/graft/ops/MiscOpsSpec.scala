@@ -280,6 +280,21 @@ class ObserveSpec extends AnyFunSuite {
     assert(e.getMessage.contains("halving did not converge within 3 rounds"))
   }
 
+  test("iterate: stops after the first round where done holds and records its rounds") {
+    var steps = 0
+    val (last, n) = Observe.iterate("halve", 40L, maxRounds = 10) { x => steps += 1; x / 2 }(_ == _)
+    // 40 -> 20 -> 10 -> 5 -> 2 -> 1 -> 0 -> 0: the unchanged round is the seventh
+    assert((last, n, steps) == ((0L, 7, 7)))
+    assert(Observe.rounds("halve") == 7)
+  }
+
+  test("iterate: stops at maxRounds when done never holds; zero rounds return init") {
+    val (last, n) = Observe.iterate("count", 0, maxRounds = 5)(_ + 1)((_, _) => false)
+    assert((last, n) == ((5, 5)) && Observe.rounds("count") == 5)
+    val (same, none) = Observe.iterate("count", 3, maxRounds = 0)(_ => fail("no round runs"))(_ == _)
+    assert((same, none) == ((3, 0)) && Observe.rounds("count") == 0)
+  }
+
   test("release drops a local checkpoint's blocks; releasing frees on a throw") {
     val cp = spark.range(10).toDF("x").localCheckpoint(true)
     val id = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id

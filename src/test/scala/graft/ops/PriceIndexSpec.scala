@@ -302,6 +302,20 @@ class PriceIndexSpec extends AnyFunSuite {
     assert(gk(Seq(Seq[Any](1, null, 500.0, 1.0))) == gk(Nil))
   }
 
+  test("timeProductDummy: a row without a period takes no part; an all-null panel is refused") {
+    val schema = "item int, pd string, exp double, qty double"
+    val rows = Seq(
+      Seq[Any](1, "p0", 20.0, 2.0), Seq[Any](2, "p0", 30.0, 3.0),
+      Seq[Any](1, "p1", 60.0, 3.0), Seq[Any](2, "p1", 33.0, 3.0))
+    def tpd(rs: Seq[Seq[Any]]) = PriceIndex.timeProductDummy(createDf(spark, schema, rs),
+        "item", col("pd"), "exp", "qty", iters = 4, tolNanos = 0L)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    assert(tpd(rows :+ Seq[Any](1, null, 500.0, 1.0)) == tpd(rows))
+    val allNull = Seq(Seq[Any](1, null, 20.0, 2.0), Seq[Any](2, null, 30.0, 3.0))
+    val e = intercept[IllegalArgumentException](tpd(allNull))
+    assert(e.getMessage.contains("tpdIndex: the price panel is empty"))
+  }
+
   test("timeProductDummy: single-item panel publishes the price relative") {
     // one item: s=1, round 1 gives δ_t = ln p_t and the alternation is
     // stationary from there — TPD = p_t/p_0 exactly

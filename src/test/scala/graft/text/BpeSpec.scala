@@ -2,7 +2,7 @@ package graft.text
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testing.TestSpark
+import graft.testing.{SparkActions, TestSpark}
 import graft.testing.DfAssert.createDf
 
 class BpeSpec extends AnyFunSuite {
@@ -38,6 +38,11 @@ class BpeSpec extends AnyFunSuite {
     val out = Bpe.trainMerges(corpus("a b a"), "text", rounds = 5)
     assert(out.columns.toSeq == Seq("round", "left", "right", "n"))
     assert(out.count() == 0)
+  }
+
+  test("training releases every vocabulary checkpoint, dried out or not") {
+    assert(SparkActions.leftPersisted(merges(3, "aaab aaab abab")).isEmpty)
+    assert(SparkActions.leftPersisted(merges(5, "a b a")).isEmpty)
   }
 
   test("word counts weight pair counts (frequency, not document presence)") {

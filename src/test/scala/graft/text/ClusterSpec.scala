@@ -83,9 +83,13 @@ class ClusterSpec extends AnyFunSuite {
       Cluster.centroidSilhouette(df(grid), "id", "v", k = 3, iters = 2).collect()).isEmpty)
   }
 
+  // Lloyd stops at its fixed point: `grid` is fixed from round 2 on, this
+  // one only from round 6, so its first rounds each pay their job
+  private val slow = (0L until 40L).map(i => i -> Seq(i * 7 % 23, i * 13 % 31, i * 3 % 11))
+
   test("building kmeansInt runs iters + 2 Spark actions: checkpoint, init, one per round") {
     for (iters <- Seq(0, 1, 3))
-      assert(SparkActions.count { Cluster.kmeansInt(df(grid), "id", "v", k = 3, iters = iters); () }
+      assert(SparkActions.count { Cluster.kmeansInt(df(slow), "id", "v", k = 3, iters = iters); () }
         == iters + 2, s"iters=$iters")
   }
 
