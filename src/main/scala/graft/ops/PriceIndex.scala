@@ -331,8 +331,8 @@ object PriceIndex {
 
   /** Quantized bilateral Törnqvist log-indexes for every ordered period
     * pair at most `maxLag` apart — the pairwise layer under
-    * [[geksIndex]]. Returns `(m_a, m_b, pd_a, pd_b, lnt_nano)` where
-    * `m_*` is the dense rank of the period in the observed period
+    * [[geksIndex]]. Returns `(m_a, m_b, lnt_nano)` where `m_*` is the
+    * dense rank (from 0) of the period in the sorted observed period
     * sequence and `lnt_nano = Σ_i round(s̄ᵢ·ln(pᵢ(b)/pᵢ(a))·1e9)` over
     * the matched sample, s̄ the mean of the two periods' expenditure
     * shares within that sample (ratios of micro-quantized sums, exactly
@@ -341,9 +341,10 @@ object PriceIndex {
     * Scale shape: the self-join fans each item-period row out to at most
     * `maxLag` partners — LINEAR in items, never quadratic; one shuffle
     * keyed on item for the join, one keyed (m_a, m_b) for the share
-    * windows + final reduction. The output is period²-bounded (time-,
-    * not data-bounded), so downstream GEKS math is driver-cheap at any
-    * data volume.
+    * windows + final reduction, which a pair row crosses as five numbers:
+    * `m_a`, `m_b`, both micro-quantized expenditures and the log price
+    * ratio ([[geksIndex]] labels `m_*` from its own period list). The output is period²-bounded (time-, not data-bounded), so
+    * downstream GEKS math is driver-cheap at any data volume.
     */
   def tornqvistLnPairs(df: DataFrame, itemCol: String, periodCol: Column,
                        expCol: String, qtyCol: String,
@@ -365,24 +366,22 @@ object PriceIndex {
     // unit-value panel once instead of once per side
     val uvm = uv.join(broadcast(months), Seq("__pd"))
       .repartition(col("__it"))
-    val a = uvm.select(col("__it"), col("__m").as("m_a"), col("__pd").as("pd_a"),
+    val a = uvm.select(col("__it"), col("__m").as("m_a"),
       col("__e").as("__ea"), col("__p").as("__pa"))
-    val b = uvm.select(col("__it"), col("__m").as("m_b"), col("__pd").as("pd_b"),
+    val b = uvm.select(col("__it"), col("__m").as("m_b"),
       col("__e").as("__eb"), col("__p").as("__pb"))
-    val pairs = a.join(b, Seq("__it"))
-      .filter(col("m_b") > col("m_a") && col("m_b") <= col("m_a") + maxLag)
     def micro(x: Column): Column = round(x * lit(1e6), 0).cast("long")
     def nano(x: Column): Column = round(x * lit(1e9), 0).cast("long")
+    val pairs = a.join(b, Seq("__it"))
+      .filter(col("m_b") > col("m_a") && col("m_b") <= col("m_a") + maxLag)
+      .select(col("m_a"), col("m_b"), micro(col("__ea")).as("__eam"),
+        micro(col("__eb")).as("__ebm"), log(col("__pb") / col("__pa")).as("__lr"))
     val Wp = W.partitionBy(col("m_a"), col("m_b"))
-    val eam = micro(col("__ea"))
-    val ebm = micro(col("__eb"))
-    val sa = eam.cast("double") / sum(eam).over(Wp).cast("double")
-    val sb = ebm.cast("double") / sum(ebm).over(Wp).cast("double")
-    val sBar = (sa + sb) / lit(2.0)
+    def share(em: Column): Column = em.cast("double") / sum(em).over(Wp).cast("double")
+    val sBar = (share(col("__eam")) + share(col("__ebm"))) / lit(2.0)
     pairs
-      .select(col("m_a"), col("m_b"), col("pd_a"), col("pd_b"),
-        nano(sBar * log(col("__pb") / col("__pa"))).as("__tn"))
-      .groupBy(col("m_a"), col("m_b"), col("pd_a"), col("pd_b"))
+      .select(col("m_a"), col("m_b"), nano(sBar * col("__lr")).as("__tn"))
+      .groupBy(col("m_a"), col("m_b"))
       .agg(sum(col("__tn")).as("lnt_nano"))
   }
 
@@ -535,8 +534,7 @@ object PriceIndex {
                                expCol: String, qtyCol: String,
                                maxLag: Int): GeksPairs = {
     val projected = tornqvistLnPairs(df, itemCol, periodCol, expCol, qtyCol, maxLag)
-      .select(col("m_a").cast("int"), col("m_b").cast("int"),
-        col("pd_a").cast("string"), col("pd_b").cast("string"), col("lnt_nano"))
+      .select(col("m_a").cast("int"), col("m_b").cast("int"), col("lnt_nano"))
     // The key is the canonicalized plan OBJECT (full structural equality
     // on lookup — `sameResult` semantics), not an Int semanticHash: a
     // 32-bit hash alone can collide across distinct plans and silently
@@ -570,7 +568,7 @@ object PriceIndex {
     // (an index with nothing to compare IS its base).
     if (n == 0) return Seq.empty[(String, Double)].toDF("period", "geks")
     if (n == 1) return Seq((periods(0), 1.0)).toDF("period", "geks")
-    val lntMap = gp.pairs.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(4)).toMap
+    val lntMap = gp.pairs.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     // An in-window period pair with an EMPTY matched sample has no
     // defined bilateral index — substituting ratio 1.0 would silently
     // bias the GEKS mean (and diverge from the oracle's inner-join

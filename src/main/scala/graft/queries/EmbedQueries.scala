@@ -286,7 +286,8 @@ object EmbedQueries {
     val w = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))
     val b5 = brute.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("__in"))
-    pq5.join(b5, Seq("query_id", "neighbor_id"), "left")
+    // b5 is at most 5 rows per query: broadcast, so no AQE stage race picks a sort-merge join
+    pq5.join(broadcast(b5), Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
       .agg(sum(coalesce(col("__in"), lit(0))).cast("long").as("n_overlap"))
       .orderBy(col("query_id"))

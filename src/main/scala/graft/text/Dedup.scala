@@ -359,8 +359,10 @@ object Dedup {
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val sym = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
+    // both directions of an edge from one read of `edges`: a union of two
+    // projections would run the edge plan, and read its exchanges, twice
+    val sym = edges.select(inline(array(struct(col(aCol).as("src"), col(bCol).as("dst")),
+        struct(col(bCol).as("src"), col(aCol).as("dst")))))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     Observe.releasing(sym) {

@@ -29,11 +29,13 @@ import org.apache.spark.sql.functions._
   * per-(dim, code) sums are collected (the [[Cluster]] contract:
   * `iters + 2` actions whatever m is); encoding is ONE narrow codegen'd
   * projection (codebooks are literals — no join);
-  * the ADC scan is a hint-free equi-join of exploded codes against the
-  * queries×m×k LUT (AQE broadcasts the bounded LUT side), one
-  * map-combined (query, neighbor) aggregation, and a per-query
-  * WindowGroupLimit top-k. At IVF-style corpus sizes, restrict the scan
-  * with [[Similarity]] cells first — PQ composes as the residual scorer.
+  * the ADC scan scores each corpus row in place: its `m` codes stay one
+  * array, crossed with the broadcast per-query m×k LUTs (the
+  * [[Similarity.bruteForceTopK]] posture: queries small, corpus
+  * streaming), so a score is `m` array lookups and the only exchange is
+  * the per-query WindowGroupLimit top-k. At IVF-style corpus sizes,
+  * restrict the scan with [[Similarity]] cells first — PQ composes as
+  * the residual scorer.
   */
 object Pq {
 
@@ -57,26 +59,26 @@ object Pq {
   def encodeCodes(vec: Column, codebooks: IndexedSeq[IndexedSeq[Seq[Long]]]): Column =
     Cluster.assign(vec.cast("array<long>"), codebooks)
 
-  /** ADC top-k: for every query row, the `topK` corpus ids with the
+  /** ADC top-k: for every query row, the `topK` corpus rows with the
     * smallest summed code-to-query subspace distances (ties to the
     * smaller neighbor id). `(query_id, neighbor_id, approx_d2, rank)`.
+    * `queries` should be small (their lookup tables are broadcast to
+    * every executor); `corpus` streams, each row is scored on its own
+    * (two rows that share an id are two neighbors), and a corpus row
+    * without a vector is never a neighbor.
     */
   def adcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, codebooks: IndexedSeq[IndexedSeq[Seq[Long]]],
               topK: Int): DataFrame = {
-    val codes = corpus.select(col(idCol).as("neighbor_id"),
-      posexplode(encodeCodes(col(vecCol), codebooks)).as(Seq("__s", "__code")))
-    // LUT: queries × m × k exact subspace distances — bounded by
-    // construction, so AQE broadcasts it under the hint-free doctrine
-    val lut = queries
-      .select(col(idCol).as("query_id"),
-        posexplode(Cluster.bySubspace(col(vecCol).cast("array<long>"), codebooks)((sv, cs) =>
-          array(Cluster.distances(sv, cs).map(_.getField("d")): _*))).as(Seq("__s", "__d2s")))
-      .select(col("query_id"), col("__s"),
-        posexplode(col("__d2s")).as(Seq("__code", "__d2")))
-    val scored = codes.join(lut, Seq("__s", "__code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("__d2")).as("approx_d2"))
+    val codes = corpus.filter(col(vecCol).isNotNull)
+      .select(col(idCol).as("neighbor_id"), encodeCodes(col(vecCol), codebooks).as("__codes"))
+    // LUT: per query, the exact distance of each subvector to each code
+    val lut = queries.select(col(idCol).as("query_id"),
+      Cluster.bySubspace(col(vecCol).cast("array<long>"), codebooks)((sv, cs) =>
+        array(Cluster.distances(sv, cs).map(_.getField("d")): _*)).as("__lut"))
+    val scored = codes.crossJoin(broadcast(lut))
+      .select(col("query_id"), col("neighbor_id"), codebooks.indices
+        .map(s => col("__lut")(s)(col("__codes")(s))).reduce(_ + _).as("approx_d2"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_d2"), col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)

@@ -53,6 +53,9 @@ class ExchangeBudgetSpec extends AnyFunSuite {
     "q_tpd_index" -> ((1, 0)),
     "q_semdedup" -> ((3, 0)),
     "q_pagerank" -> ((1, 0)),
+    // the ADC scan: one broadcast of the query LUTs, the per-query top-k
+    // window exchange and the output sort's range exchange
+    "q_pq" -> ((2, 1)),
     "q_gk_index" -> ((1, 0)),
     // round-9 second wave: the classifier-chain consumers are the only
     // newcomers above 2s in the bench — pin their scoring-pass plans

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec,
+  HashJoin, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,9 +90,18 @@ class PlanSpec extends AnyFunSuite {
         .filter(year(col("l_shipdate")) === 1995),
       "l_partkey", date_format(col("l_shipdate"), "yyyy-MM"),
       "l_extendedprice", "l_quantity", maxLag = 12)
-    val p = pairs.queryExecution.executedPlan.toString
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      s"Törnqvist pair layer must self-join on item, not all-pairs:\n${p.take(2000)}")
+    val p = pairs.queryExecution.executedPlan
+    val h = new AdaptiveSparkPlanHelper {}
+    val nested = h.collectFirst(p) {
+      case j: BroadcastNestedLoopJoinExec => j
+      case j: CartesianProductExec => j
+    }
+    assert(nested.isEmpty, s"Törnqvist pair layer must self-join on item, not all-pairs:\n$p")
+    val equi = h.collectFirst(p) {
+      case j: SortMergeJoinExec => j.leftKeys
+      case j: HashJoin => j.leftKeys
+    }
+    assert(equi.exists(_.nonEmpty), s"the pair self-join must be an equi-join:\n$p")
   }
 
   test("q_dedup_minhash computes the signature once per join side (no pushdown duplication)") {
@@ -334,12 +346,25 @@ class PlanSpec extends AnyFunSuite {
       s"selection must be top-k (TakeOrdered), not a global sort:\n${p.take(1500)}")
   }
 
-  test("q_pq: ADC scan is an equi-join against the broadcast LUT with a windowed top-k") {
-    val p = plan("q_pq")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"ADC must equi-join codes to the LUT:\n${p.take(1500)}")
-    assert(p.contains("WindowGroupLimit"),
-      s"per-query top-k must bound window state to k rows per partition:\n${p.take(1500)}")
+  test("q_pq: ADC scans corpus rows against the broadcast query LUTs; windowed top-k") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+    val p = SparkEntry.queries("q_pq")(spark, dir).queryExecution.executedPlan
+    val h = new AdaptiveSparkPlanHelper {}
+    val scan = h.collect(p) { case j: BroadcastNestedLoopJoinExec => j }
+    assert(scan.length == 1 && scan.head.buildSide == BuildRight &&
+      h.collectFirst(scan.head.right) { case b: BroadcastExchangeExec => b }.isDefined,
+      s"ADC must cross the streamed codes with the broadcast LUTs:\n$p")
+    assert(h.collectFirst(p) { case c: CartesianProductExec => c }.isEmpty &&
+      h.collectFirst(p) { case a: BaseAggregateExec => a }.isEmpty,
+      s"no cartesian and no (query, neighbor) aggregation:\n$p")
+    // the per-query top-k window and the output sort: no exchange scores pairs
+    assert(h.collect(p) { case e: ShuffleExchangeExec => e }.length == 2,
+      s"exchanges beyond the top-k window and the output sort:\n$p")
+    assert(h.collectFirst(p) { case w: WindowGroupLimitExec => w }.isDefined,
+      s"per-query top-k must bound window state to k rows per partition:\n$p")
   }
 
   test("q_span_mask: frequency and survivor joins run on hashes; no cartesian") {

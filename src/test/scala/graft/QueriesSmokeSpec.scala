@@ -48,6 +48,8 @@ class QueriesSmokeSpec extends AnyFunSuite {
       "base-basket × distinct-period spine: the broadcast side is the distinct PERIOD list (time-bounded, ~tens of rows), crossed to build the imputation spine",
     "q_topk_similar" ->
       "the brute-force top-k BASELINE: its broadcast side is the query set bounded by a literal predicate (vec_id < 10); the scale path is q_ann_lsh/q_ivf_topk",
+    "q_pq" ->
+      "the PQ ADC scan crosses the corpus codes with the broadcast query LUTs (the q_topk_similar posture): its broadcast side is the query set bounded by a literal predicate (vec_id < 10), times m·k LUT entries per query",
     "q_embed_pairs" ->
       "the EXACT all-pairs near-dup operator's own surface (threshold self-join is inherently non-equi); its 100 TB path is q_embed_pairs_lsh's banded pair source",
     "q_gamma" ->

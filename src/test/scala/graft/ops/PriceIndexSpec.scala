@@ -467,6 +467,60 @@ class PriceIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("p0") && e.getMessage.contains("p2"), e.getMessage)
   }
 
+  // four periods with gaps: item 1 skips p1, item 2 skips p2, item 3
+  // trades p0 only, item 4 trades twice in p1 (one unit value from sums)
+  private def gapped = createDf(spark, "item int, pd string, exp double, qty double", Seq(
+    Seq[Any](1, "p0", 10.0, 2.0), Seq[Any](1, "p2", 13.5, 2.0), Seq[Any](1, "p3", 9.25, 1.0),
+    Seq[Any](2, "p0", 30.0, 3.0), Seq[Any](2, "p1", 31.2, 3.0), Seq[Any](2, "p3", 40.0, 3.5),
+    Seq[Any](3, "p0", 7.0, 1.0),
+    Seq[Any](4, "p1", 5.5, 1.0), Seq[Any](4, "p1", 6.25, 1.5), Seq[Any](4, "p2", 11.0, 2.0),
+    Seq[Any](4, "p3", 14.75, 3.0)))
+
+  test("tornqvistLnPairs on a panel with gaps equals a driver-side recompute") {
+    def halfUp(x: Double): Long = BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    val rows = gapped.collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2), r.getDouble(3)))
+    // unit value and expenditure per (item, period), from decimal sums as the operator does
+    val uv = rows.groupBy(r => (r._1, r._2)).map { case (k, rs) =>
+      val (e, q) = (rs.map(r => BigDecimal(r._3)).sum, rs.map(r => BigDecimal(r._4)).sum)
+      k -> (e.toDouble, e.toDouble / q.toDouble)
+    }
+    val months = rows.map(_._2).distinct.sorted
+    val want = (for {
+      a <- months.indices; b <- a + 1 to math.min(a + 2, months.length - 1)
+      items = uv.keys.toSeq.collect { case (i, pd) if pd == months(a) && uv.contains((i, months(b))) => i }
+      if items.nonEmpty
+    } yield {
+      val (ua, ub) = (items.map(i => uv((i, months(a)))), items.map(i => uv((i, months(b)))))
+      val (ea, eb) = (ua.map(u => halfUp(u._1 * 1e6)), ub.map(u => halfUp(u._1 * 1e6)))
+      val tn = items.indices.map { j =>
+        val sBar = (ea(j).toDouble / ea.sum.toDouble + eb(j).toDouble / eb.sum.toDouble) / 2.0
+        halfUp(sBar * StrictMath.log(ub(j)._2 / ua(j)._2) * 1e9)
+      }.sum
+      (a.toLong, b.toLong) -> tn
+    }).toMap
+    val got = PriceIndex.tornqvistLnPairs(gapped, "item", col("pd"), "exp", "qty", maxLag = 2)
+    assert(got.columns.toSeq == Seq("m_a", "m_b", "lnt_nano"))
+    assert(got.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap == want)
+    assert(want.size == 5, "every pair at most two periods apart has a matched item")
+  }
+
+  test("tornqvistLnPairs: the share-window exchange carries five numeric columns") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.types.StringType
+    val h = new AdaptiveSparkPlanHelper {}
+    val plan = PriceIndex.tornqvistLnPairs(gapped, "item", col("pd"), "exp", "qty", maxLag = 2)
+      .queryExecution.executedPlan
+    val share = h.collectFirst(plan) { case w: WindowExec if w.partitionSpec.nonEmpty => w }
+    assert(share.isDefined, s"no (m_a, m_b) share window:\n$plan")
+    val exchange = h.collectFirst(share.get) { case e: ShuffleExchangeExec => e }
+    assert(exchange.isDefined, s"no exchange under the share window:\n$plan")
+    val out = exchange.get.output
+    assert(!out.exists(_.dataType == StringType) && out.length <= 5,
+      s"share-window exchange carries ${out.map(a => s"${a.name}: ${a.dataType.simpleString}").mkString(", ")}")
+  }
+
   // three periods: p0 (price ref), pb (weight ref), p1 (current)
   private def tx3 = createDf(spark, "item int, pd string, exp double, qty double", Seq(
     Seq[Any](1, "p0", 10.0, 10.0), // p=1

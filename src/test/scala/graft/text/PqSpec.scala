@@ -76,19 +76,36 @@ class PqSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3)))
       .sortBy(t => (t._1, t._4))
 
-    val codes = vecs.map { case (i, v) => i -> jvmEncode(v, cb) }.toMap
-    val want = Seq(1, 2).flatMap { q =>
+    assert(got.toSeq == jvmAdcTopK(vecs, Seq(1, 2), cb, 3))
+  }
+
+  /** The ADC top-k on the JVM, every corpus row scored on its own. */
+  private def jvmAdcTopK(corpus: Seq[(Int, Seq[Long])], queries: Seq[Int],
+                         cb: IndexedSeq[IndexedSeq[Seq[Long]]], k: Int): Seq[(Int, Int, Long, Int)] =
+    queries.flatMap { q =>
       val qv = vecs.toMap.apply(q)
-      val scored = vecs.map { case (n, _) =>
-        val d = codes(n).zipWithIndex.map { case (code, s) =>
+      val scored = corpus.map { case (n, v) =>
+        val d = jvmEncode(v, cb).zipWithIndex.map { case (code, s) =>
           val sub = cb(s).head.length
           jvmD2(qv.slice(s * sub, (s + 1) * sub), cb(s)(code))
         }.sum
         (n, d)
-      }.sortBy { case (n, d) => (d, n) }.take(3)
+      }.sortBy { case (n, d) => (d, n) }.take(k)
       scored.zipWithIndex.map { case ((n, d), r) => (q, n, d, r + 1) }
     }
-    assert(got.toSeq == want)
+
+  test("adcTopK scores each corpus row on its own: a shared id is two neighbors, a null vector none") {
+    val cb = Pq.train(df, "id", "v", d = 4, m = 2, k = 2, iters = 2)
+    // id 1 again, with id 7's vector: two rows, two scores, never their sum
+    val corpus = vecs :+ (1 -> vecs.toMap.apply(7))
+    val withNull = createDf(spark, "id int, v array<bigint>",
+      corpus.map { case (i, v) => Seq[Any](i, v) } :+ Seq[Any](9, null))
+    val got = Pq.adcTopK(withNull, df.filter(col("id") <= 2), "id", "v", cb, topK = 20)
+      .select(col("query_id"), col("neighbor_id"), col("approx_d2"), col("rank"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3)))
+      .sortBy(t => (t._1, t._4))
+    assert(got.toSeq == jvmAdcTopK(corpus, Seq(1, 2), cb, 20))
+    assert(got.count(_._2 == 1) == 4 && !got.exists(_._2 == 9))
   }
 
   // subspace 0: ids 1 and 2 share their subvector, so in round 1 every

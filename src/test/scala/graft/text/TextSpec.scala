@@ -180,6 +180,36 @@ class DedupSpec extends AnyFunSuite {
     assert(got.forall(_._2 == 0L), "every chain vertex must label to 0")
   }
 
+  test("connectedComponents reads its edge input once: no Union above it") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { plans.add(qe.executedPlan); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val edges = createDf(spark, "id_a bigint, id_b bigint",
+      Seq(Seq[Any](1L, 2L), Seq[Any](2L, 3L), Seq[Any](5L, 6L)))
+    spark.listenerManager.register(listener)
+    try graft.ops.Observe.release(Dedup.connectedComponents(edges, "id_a", "id_b"))
+    finally {
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    // every node the actions ran, the plans of the cached frames they read included
+    val h = new AdaptiveSparkPlanHelper {}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = h.collect(p) { case n => n }.flatMap {
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case n => Seq(n)
+    }
+    val ran = plans.asScala.toSeq.flatMap(nodes)
+    assert(ran.exists(_.isInstanceOf[InMemoryTableScanExec]), "the symmetric edge set is read from its cache")
+    assert(!ran.exists(_.isInstanceOf[UnionExec]),
+      s"the edge plan must run once, not once per direction:\n${plans.asScala.mkString("\n")}")
+  }
+
   test("dedupByPairs keeps min-id per cluster plus unpaired rows") {
     val docs = createDf(spark, "doc_id bigint, text string",
       (1L to 6L).map(i => Seq[Any](i, s"doc $i")))

@@ -10,7 +10,9 @@ Spark job (`kind: job`, its parent being the phase that submitted it, with
 the bytes its stages wrote to and read from the shuffle).
 
 Given one trace, prints a table of the jobs each call ran in each phase and
-the bytes it shuffled (written plus read, all phases), with a total row.
+the bytes it shuffled in all phases: written, read, and their sum (the
+benchmark's `shuffle_bytes`), with a total row. An exchange written once and
+read by N consumers shows as read = N x written.
 Given two (a before and an after), prints both figures and their difference
 per call and phase, so a change that moves jobs or bytes between layers or
 calls shows where. Calls are matched by name in pass order; a warm re-issue
@@ -21,12 +23,13 @@ import json
 import sys
 
 PHASES = ("construct", "plan", "execute")
-COLUMNS = PHASES + ("all", "shuffle")
+BYTES = ("written", "read", "shuffle")
+COLUMNS = PHASES + ("all",) + BYTES
 
 
 def load(path):
     """Ordered {call label: {column: count}} of one trace: jobs per phase,
-    all jobs, and shuffle bytes written plus read."""
+    all jobs, and shuffle bytes written, read and both."""
     calls, order, counts = {}, [], {}
     with open(path) as f:
         for line in f:
@@ -46,7 +49,9 @@ def load(path):
                 c = counts[calls[call]]
                 c[phase] += 1
                 c["all"] += 1
-                c["shuffle"] += r.get("shuffle_write_bytes", 0) + r.get("shuffle_read_bytes", 0)
+                c["written"] += r.get("shuffle_write_bytes", 0)
+                c["read"] += r.get("shuffle_read_bytes", 0)
+                c["shuffle"] = c["written"] + c["read"]
     return [(label, counts[label]) for label in order]
 
 
@@ -57,10 +62,10 @@ def total(rows):
 def show_one(rows):
     width = max([len(label) for label, _ in rows] + [5])
     print(f"{'call':<{width}} " + " ".join(f"{p:>9}" for p in PHASES)
-          + f" {'all':>5} {'shuffle':>11}")
+          + f" {'all':>5} " + " ".join(f"{b:>11}" for b in BYTES))
     for label, j in rows + [("total", total(rows))]:
         print(f"{label:<{width}} " + " ".join(f"{j[p]:>9}" for p in PHASES)
-              + f" {j['all']:>5} {j['shuffle']:>11}")
+              + f" {j['all']:>5} " + " ".join(f"{j[b]:>11}" for b in BYTES))
 
 
 def show_delta(before, after):
@@ -70,8 +75,7 @@ def show_delta(before, after):
     rows = [(label, a.get(label, empty), b.get(label, empty)) for label in labels]
     rows.append(("total", total(before), total(after)))
     width = max([len(label) for label in labels] + [5])
-    cell = {c: 15 for c in COLUMNS}
-    cell["shuffle"] = 31
+    cell = {c: 31 if c in BYTES else 15 for c in COLUMNS}
     print(f"{'call':<{width}} " + " ".join(f"{c:>{cell[c]}}" for c in COLUMNS))
     for label, x, y in rows:
         print(f"{label:<{width}} " + " ".join(
